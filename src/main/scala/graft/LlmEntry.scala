@@ -89,32 +89,20 @@ object LlmEntry {
             col("payload"))))
   }
 
-  /** Build the shared per-(session, sf dir) ANN probe index iff absent
-    * OR INCOMPLETE. A complete build is exactly version 1 (write
-    * commits v0, update commits v1), so the gate is `contains(1)`, not
-    * `isEmpty`: a crash between write() and update() leaves a
-    * version-VISIBLE index missing the 10..110 batch, which an
-    * existence gate would silently reuse forever — this gate detects
-    * the torn state and rebuilds. */
+  /** Build the shared per-(session, sf dir) ANN probe index unless
+    * complete (the store's ensure gate). A complete build is exactly
+    * version 1 (write commits v0, update commits v1): a crash between
+    * write() and update() leaves a version-VISIBLE index missing the
+    * 10..110 batch, which the gate detects and rebuilds. `metaCols`
+    * adds the metadata member behind e11c's filtered probe; the update
+    * keeps it current, so that probe sees the full 10.. corpus with
+    * labels. */
   private def ensureAnnProbeIndex(s: SparkSession, emb: DataFrame,
-                                  name: String): Unit =
-    if (!AnnIndex.currentVersion(s, name).contains(1)) {
-      AnnIndex.drop(s, name) // clear partial/orphaned state
-      AnnIndex.write(emb.filter(col("vec_id") >= 110), name, buckets = 8)
-      AnnIndex.update(emb.filter(col("vec_id") >= 10 && col("vec_id") < 110),
-        name, buckets = 8)
-    }
-
-  /** [[ensureAnnProbeIndex]] with the metadata member (metaCols) — the
-    * shared index behind e11c's probe-only leg. Same complete-is-v1
-    * gate; the update keeps meta current, so the filtered probe sees
-    * the full 10.. corpus with labels. */
-  private def ensureFilteredProbeIndex(s: SparkSession, emb: DataFrame,
-                                       name: String): Unit =
-    if (!AnnIndex.currentVersion(s, name).contains(1)) {
-      AnnIndex.drop(s, name)
+                                  name: String,
+                                  metaCols: Seq[String] = Nil): Unit =
+    AnnIndex.Store.ensure(s, name, complete = 1) {
       AnnIndex.write(emb.filter(col("vec_id") >= 110), name, buckets = 8,
-        metaCols = Seq("label"))
+        metaCols = metaCols)
       AnnIndex.update(emb.filter(col("vec_id") >= 10 && col("vec_id") < 110),
         name, buckets = 8)
     }
@@ -122,8 +110,7 @@ object LlmEntry {
   /** BM25 twin of [[ensureAnnProbeIndex]] — same complete-is-v1 gate. */
   private def ensureBm25ProbeIndex(s: SparkSession, docs: DataFrame,
                                    name: String): Unit =
-    if (!Search.indexVersion(s, name).contains(1)) {
-      Search.dropIndex(s, name) // clear partial/orphaned state
+    Search.IndexStore.ensure(s, name, complete = 1) {
       Search.writeIndex(docs.filter(col("doc_id") >= 110), col("doc_id"),
         col("text"), name, buckets = 8)
       Search.updateIndex(docs.filter(col("doc_id") >= 10 && col("doc_id") < 110),
@@ -137,19 +124,27 @@ object LlmEntry {
     * the model tables and pay the serving stages, never the train.
     * Disk-backed like the ANN/BM25 indexes (a persisted frame would
     * not survive a cache flush, and a served model is a stored
-    * artifact in production anyway). Same complete-is-v0 gate as
-    * [[ensureAnnProbeIndex]]: one atomic commit is version 0; a crash
+    * artifact in production anyway). The store's ensure gate with the
+    * complete version 0: one atomic commit is version 0; a crash
     * mid-train leaves no ptr and rebuilds. */
   private final case class SelArtifacts(nbModel: DataFrame,
                                         nbPriors: DataFrame,
                                         dsirModel: DataFrame)
-  private val SelArtifactMembers = Seq("nbmodel", "nbpriors", "dsirmodel")
+  /** The selection artifacts' store layout — all three are
+    * fixed-size broadcast-side frames, so plain members. */
+  private val SelectionArtifactStore = graft.sources.BucketedStore.Layout(
+    "selection-artifact", Seq("nbmodel", "nbpriors", "dsirmodel")
+      .map(graft.sources.BucketedStore.Member(_)))
+  private def selectionArtifactName(dir: String): String =
+    s"c6bart_${dir.hashCode.toHexString}"
+  /** Drop `dir`'s selection artifacts, so the next c6b/c7b call
+    * retrains them. */
+  private[graft] def dropSelectionArtifacts(s: SparkSession, dir: String): Unit =
+    SelectionArtifactStore.drop(s, selectionArtifactName(dir))
   private def ensureSelectionArtifacts(s: SparkSession,
                                        dir: String): SelArtifacts = {
-    import graft.sources.BucketedStore
-    val name = s"c6bart_${dir.hashCode.toHexString}"
-    if (!BucketedStore.currentVersion(s, name).contains(0)) {
-      BucketedStore.drop(s, name, SelArtifactMembers) // clear partial state
+    val name = selectionArtifactName(dir)
+    val p = SelectionArtifactStore.ensure(s, name, complete = 0) {
       val docs = t(s, dir, "documents")
       val (m, pri, dsir) = LlmCuration.selectionArtifacts(docs,
         docs.filter(Sampling.hashBucket(col("doc_id"), 5) =!= 0),
@@ -157,15 +152,11 @@ object LlmEntry {
         col("doc_id"), col("text"), col("lang"),
         keepLabel = "en", minMargin = 1.0,
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
-      // all three are fixed-size broadcast-side frames — plain members
-      BucketedStore.commit(s, name, Seq(
-        BucketedStore.Member("nbmodel", m),
-        BucketedStore.Member("nbpriors", pri),
-        BucketedStore.Member("dsirmodel", dsir)), buckets = 1): Unit
+      SelectionArtifactStore.commit(s, name, Map(
+        "nbmodel" -> m, "nbpriors" -> pri, "dsirmodel" -> dsir),
+        buckets = 1)
     }
-    SelArtifacts(BucketedStore.table(s, name, "nbmodel", 0),
-      BucketedStore.table(s, name, "nbpriors", 0),
-      BucketedStore.table(s, name, "dsirmodel", 0))
+    SelArtifacts(p.table("nbmodel"), p.table("nbpriors"), p.table("dsirmodel"))
   }
 
   /** e16c/e16d's duplicate-heavy corpus: the full embedding set plus
@@ -1441,7 +1432,7 @@ object LlmEntry {
       // update), so both share one oracle.
       val v = t(s, dir, "embeddings")
       val name = s"e11probe_${dir.hashCode.toHexString}"
-      ensureFilteredProbeIndex(s, v, name)
+      ensureAnnProbeIndex(s, v, name, metaCols = Seq("label"))
       AnnIndex.topKFiltered(s, name, v.filter(col("vec_id") < 10),
         Seq("label"), k = 5)
         .withColumnRenamed("rank", "rnk")

@@ -14,7 +14,7 @@ import graft.functions.Vectors
   *
   * Atomicity: the ONE `<name>_ptr` view (a literal `SELECT v`) is the
   * only pointer; [[topK]] and [[update]] resolve it once and then read
-  * the five `_<t>_v$v` tables of that pinned version directly, so a
+  * the member tables of that pinned version directly, so a
   * reader planned mid-commit sees a complete version — never a new
   * codebook with old codes. (Per-table `<name>_<t>` views also exist
   * as a convenience for ad-hoc SQL, but they are repointed
@@ -54,20 +54,24 @@ import graft.functions.Vectors
   */
 object AnnIndex {
 
-  import graft.sources.BucketedStore
+  import graft.sources.BucketedStore.{Layout, Member}
 
-  private val IndexTables =
-    Seq("cents", "codebook", "assign", "codes", "vectors", "meta")
-
-  /** The committed current version (see [[BucketedStore.currentVersion]]). */
-  def currentVersion(spark: SparkSession, name: String): Option[Int] =
-    BucketedStore.currentVersion(spark, name)
+  /** The index's store layout: cents/codebook are tiny broadcast-side
+    * tables; assign buckets on the candidate join's key, codes and
+    * vectors on the ADC/re-rank join's key, so a probe plans no
+    * exchange on any corpus-sized input; meta (written only with
+    * [[write]]'s `metaCols`) on the admission join's key. */
+  val Store: Layout = Layout("ANN", Seq(
+    Member("cents"), Member("codebook"),
+    Member("assign", Seq("cent_id")),
+    Member("codes", Seq("neighbor_id")),
+    Member("vectors", Seq("neighbor_id")),
+    Member("meta", Seq("neighbor_id"), optional = true)))
 
   /** Drop every catalog object and on-disk remnant of index `name`
-    * (see [[BucketedStore.drop]]). Shared by the shipped e6 entries
-    * and the specs so the cleanup path can't drift. */
-  def drop(spark: SparkSession, name: String): Unit =
-    BucketedStore.drop(spark, name, IndexTables)
+    * (see [[graft.sources.BucketedStore.Layout.drop]]). Shared by the
+    * shipped e6 entries and the specs so the cleanup path can't drift. */
+  def drop(spark: SparkSession, name: String): Unit = Store.drop(spark, name)
 
   private def centSim(e: Column, n: Column): Column =
     Vectors.qcos(e, col("cent"), n * col("centn"))
@@ -95,41 +99,6 @@ object AnnIndex {
           - lit(2) * Vectors.dot(col("xs"), col("cw")) + col("cc"), 6))
       .groupBy("neighbor_id", "j")
       .agg(min_by(col("code_id"), struct(col("d2"), col("code_id"))).as("code"))
-
-  /** Commit one index version through the shared store protocol:
-    * cents/codebook are tiny broadcast-side tables; assign buckets on
-    * the candidate join's key, codes and vectors on the ADC/re-rank
-    * join's key, so a probe plans no exchange on any corpus-sized
-    * input. The store's single ptr view makes the five-table commit
-    * atomic for readers. */
-  /** `carry` names members whose content is UNCHANGED from that
-    * version ([[graft.sources.BucketedStore.Carry]]): they publish as
-    * version-pinned views instead of being rewritten, and any
-    * DataFrame passed for them here is ignored — the maintenance legs
-    * (update/delete: cents+codebook frozen; retrain: vectors
-    * untouched) only pay for the members they actually change. */
-  private def commit(spark: SparkSession, name: String,
-                     cents: DataFrame, cb: DataFrame, asg: DataFrame,
-                     codes: DataFrame, vectors: DataFrame, buckets: Int,
-                     meta: Option[DataFrame] = None,
-                     carry: Seq[BucketedStore.Carry] = Nil): Int = {
-    val carried = carry.map(_.suffix).toSet
-    BucketedStore.commit(spark, name,
-      (Seq(
-        BucketedStore.Member("cents", cents),
-        BucketedStore.Member("codebook", cb),
-        BucketedStore.Member("assign", asg, Seq("cent_id")),
-        BucketedStore.Member("codes", codes, Seq("neighbor_id")),
-        BucketedStore.Member("vectors", vectors, Seq("neighbor_id"))) ++
-        meta.map(m => BucketedStore.Member("meta", m, Seq("neighbor_id"))))
-        .filterNot(m => carried(m.suffix)),
-      buckets, carry)
-  }
-
-  /** Whether version `v` of index `name` carries the optional metadata
-    * member (written by [[write]]'s `metaCols`). */
-  private def hasMeta(spark: SparkSession, name: String, v: Int): Boolean =
-    spark.catalog.tableExists(s"${name}_meta_v$v")
 
   private def metaOf(df: DataFrame, metaCols: Seq[String]): DataFrame =
     df.select((col("vec_id").as("neighbor_id") +: metaCols.map(col)): _*)
@@ -172,11 +141,13 @@ object AnnIndex {
           col("cn").as("centn"))
     }
     val cb = sampleCodebook(c, nCodes, m, sub)
-    val bCents = broadcast(cents)
-    val bCb = broadcast(cb)
-    commit(spark, name, cents, cb,
-      assign(c, bCents), encode(c, bCb), storedVectors(corpus), buckets,
-      if (metaCols.isEmpty) None else Some(metaOf(corpus, metaCols)))
+    Store.commit(spark, name, Map(
+      "cents" -> cents, "codebook" -> cb,
+      "assign" -> assign(c, broadcast(cents)),
+      "codes" -> encode(c, broadcast(cb)),
+      "vectors" -> storedVectors(corpus)) ++
+      Option.when(metaCols.nonEmpty)("meta" -> metaOf(corpus, metaCols)),
+      buckets)
   }
 
   /** The float-typed persisted form of the re-rank table: source
@@ -191,34 +162,29 @@ object AnnIndex {
     * pass. Returns the new version. */
   def update(incoming: DataFrame, name: String, buckets: Int = 32): Int = {
     val spark = incoming.sparkSession
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
-    val cents = broadcast(spark.table(s"${name}_cents_v$v"))
-    val cb = broadcast(spark.table(s"${name}_codebook_v$v"))
+    val p = Store.pin(spark, name)
+    val cents = broadcast(p.table("cents"))
+    val cb = broadcast(p.table("codebook"))
     val inc = Pq.prep(incoming)
     import graft.operators.Merge
     // an index written with metaCols keeps its metadata current: the
     // incoming batch must carry the same columns (fail-fast select)
-    val meta =
-      if (!hasMeta(spark, name, v)) None
-      else {
-        val stored = spark.table(s"${name}_meta_v$v")
-        Some(Merge.upsert(stored,
-          metaOf(incoming, stored.columns.filter(_ != "neighbor_id").toIndexedSeq),
-          Seq("neighbor_id")))
-      }
-    commit(spark, name,
-      spark.table(s"${name}_cents_v$v"), spark.table(s"${name}_codebook_v$v"),
-      Merge.upsert(spark.table(s"${name}_assign_v$v"), assign(inc, cents),
+    val meta = Option.when(p.has("meta")) {
+      val stored = p.table("meta")
+      "meta" -> Merge.upsert(stored,
+        metaOf(incoming, stored.columns.filter(_ != "neighbor_id").toIndexedSeq),
+        Seq("neighbor_id"))
+    }
+    Store.commit(spark, name, Map(
+      "assign" -> Merge.upsert(p.table("assign"), assign(inc, cents),
         Seq("neighbor_id")),
-      Merge.upsert(spark.table(s"${name}_codes_v$v"), encode(inc, cb),
+      "codes" -> Merge.upsert(p.table("codes"), encode(inc, cb),
         Seq("neighbor_id", "j")),
-      Merge.upsert(spark.table(s"${name}_vectors_v$v"), storedVectors(incoming),
-        Seq("neighbor_id")),
-      buckets, meta,
+      "vectors" -> Merge.upsert(p.table("vectors"), storedVectors(incoming),
+        Seq("neighbor_id"))) ++ meta,
+      buckets,
       // frozen-quantizer contract: cents/codebook are untouched — carry
-      carry = Seq(BucketedStore.Carry("cents", v),
-        BucketedStore.Carry("codebook", v)))
+      carry = p.carry("cents", "codebook"))
   }
 
   /** Remove a vector id set from index `name` — the takedown /
@@ -232,19 +198,16 @@ object AnnIndex {
     * takedown-request-sized — broadcast. Returns the new version. */
   def delete(ids: DataFrame, name: String, buckets: Int = 32): Int = {
     val spark = ids.sparkSession
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
+    val p = Store.pin(spark, name)
     val del = broadcast(
       ids.select(col(ids.columns.head).as("neighbor_id")).distinct())
-    def anti(t: String) = spark.table(s"${name}_${t}_v$v")
-      .join(del, Seq("neighbor_id"), "left_anti")
-    commit(spark, name,
-      spark.table(s"${name}_cents_v$v"), spark.table(s"${name}_codebook_v$v"),
-      anti("assign"), anti("codes"), anti("vectors"), buckets,
-      if (hasMeta(spark, name, v)) Some(anti("meta")) else None,
+    Store.commit(spark, name,
+      Seq("assign", "codes", "vectors", "meta").filter(p.has).map { t =>
+        t -> p.table(t).join(del, Seq("neighbor_id"), "left_anti")
+      }.toMap,
+      buckets,
       // frozen-quantizer contract: cents/codebook are untouched — carry
-      carry = Seq(BucketedStore.Carry("cents", v),
-        BucketedStore.Carry("codebook", v)))
+      carry = p.carry("cents", "codebook"))
   }
 
   /** Retrain the index's quantizers IN PLACE — the operator that ACTS
@@ -275,13 +238,11 @@ object AnnIndex {
     * new version. */
   def retrain(spark: SparkSession, name: String, k: Int = 16,
               iters: Int = 2, buckets: Int = 32): Int = {
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
-    val stored = spark.table(s"${name}_vectors_v$v")
-    val corpus = stored.select(col("neighbor_id").as("vec_id"),
+    val p = Store.pin(spark, name)
+    val corpus = p.table("vectors").select(col("neighbor_id").as("vec_id"),
       col("embedding"))
     // geometry from the stored codebook: m×nCodes rows — control-plane
-    val geo = spark.table(s"${name}_codebook_v$v")
+    val geo = p.table("codebook")
       .agg(countDistinct(col("code_id")).as("nCodes"),
         (max(col("j")) + 1).as("m"), max(size(col("cw"))).as("sub")).head()
     val (nCodes, m, sub) =
@@ -289,17 +250,15 @@ object AnnIndex {
     val cents = Knn.assembleCentroids(KMeans.lloyd(corpus, k, iters))
     val c = Pq.prep(corpus)
     val cb = sampleCodebook(c, nCodes, m, sub)
-    commit(spark, name, cents, cb,
-      assign(c, broadcast(cents)), encode(c, broadcast(cb)),
-      stored, buckets,
-      if (hasMeta(spark, name, v)) Some(spark.table(s"${name}_meta_v$v"))
-      else None,
+    Store.commit(spark, name, Map(
+      "cents" -> cents, "codebook" -> cb,
+      "assign" -> assign(c, broadcast(cents)),
+      "codes" -> encode(c, broadcast(cb))),
+      buckets,
       // a retrain re-fits quantizers and re-encodes, but the stored
       // vectors (and metadata) pass through UNTOUCHED — carry them so
       // the rewrite never pays a corpus-sized vector copy
-      carry = BucketedStore.Carry("vectors", v) +:
-        (if (hasMeta(spark, name, v)) Seq(BucketedStore.Carry("meta", v))
-        else Nil))
+      carry = p.carry("vectors", "meta"))
   }
 
   /** Maintenance thresholds for [[maintain]]: retrain fires when any
@@ -332,8 +291,7 @@ object AnnIndex {
                policy: MaintainPolicy = MaintainPolicy()): DataFrame = {
     import spark.implicits._
     import graft.sources.SnapshotStore
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
+    val v = Store.pin(spark, name).version
     val prior = SnapshotStore.read(spark, ledgerDir).map(
       _.filter(col("index") === name && col("version") === v))
     prior.filter(_.limit(1).count() > 0) match {
@@ -420,13 +378,12 @@ object AnnIndex {
     * join + a broadcast cents attach + a partial-aggregating per-cell
     * rollup — a maintenance-time scan, never on the probe path. */
   def fit(spark: SparkSession, name: String): DataFrame = {
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
-    val cents = broadcast(spark.table(s"${name}_cents_v$v"))
-    val vecs = spark.table(s"${name}_vectors_v$v")
+    val p = Store.pin(spark, name)
+    val cents = broadcast(p.table("cents"))
+    val vecs = p.table("vectors")
       .select(col("neighbor_id"),
         Vectors.asDouble(col("embedding")).as("ce"), col("cn"))
-    spark.table(s"${name}_assign_v$v")
+    p.table("assign")
       .join(vecs, "neighbor_id")
       .join(cents, "cent_id")
       .withColumn("csim", centSim(col("ce"), col("cn")))
@@ -451,12 +408,11 @@ object AnnIndex {
     * corpus-sized data), output nCentroids-sized; the share is a
     * single IEEE division of exact longs, rounded 6 dp. */
   def stats(spark: SparkSession, name: String): DataFrame = {
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
-    val occ = spark.table(s"${name}_assign_v$v")
+    val p = Store.pin(spark, name)
+    val occ = p.table("assign")
       .groupBy("cent_id").agg(count(lit(1)).as("n_vectors"))
     val tot = occ.agg(sum(col("n_vectors")).as("__tot"))
-    spark.table(s"${name}_cents_v$v").select("cent_id")
+    p.table("cents").select("cent_id")
       .join(occ, Seq("cent_id"), "left")
       .na.fill(0L, Seq("n_vectors"))
       .crossJoin(broadcast(tot))
@@ -490,13 +446,12 @@ object AnnIndex {
                     filterKeys: Seq[String]): DataFrame = {
     // pin ONE version up front and read every table at it — the probe
     // can never resolve a torn snapshot from a concurrent commit
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no ANN index named $name"))
+    val p = Store.pin(spark, name)
     if (filterKeys.nonEmpty)
-      require(hasMeta(spark, name, v),
+      require(p.has("meta"),
         s"index $name has no metadata member; write it with metaCols")
-    val cents = broadcast(spark.table(s"${name}_cents_v$v"))
-    val cb = broadcast(spark.table(s"${name}_codebook_v$v"))
+    val cents = broadcast(p.table("cents"))
+    val cb = broadcast(p.table("codebook"))
     val q = queries.select((col("vec_id").as("query_id") +:
         filterKeys.map(fk => col(fk).as(s"__q_$fk"))) :+
         Vectors.asDouble(col("embedding")).as("qe"): _*)
@@ -512,7 +467,7 @@ object AnnIndex {
           slice(col("qe"), col("j") * size(col("cw")) + 1, size(col("cw"))),
           col("cw")), 6).as("qdot")))
     val rawCand = probes
-      .join(spark.table(s"${name}_assign_v$v"), "cent_id")
+      .join(p.table("assign"), "cent_id")
       .select("query_id", "neighbor_id")
     // metadata filter BEFORE ADC: join the bucketed meta member on the
     // candidate sliver, then keep rows matching the query's own values
@@ -522,13 +477,13 @@ object AnnIndex {
       if (filterKeys.isEmpty) rawCand
       else filterKeys.foldLeft(
         rawCand
-          .join(spark.table(s"${name}_meta_v$v"), "neighbor_id")
+          .join(p.table("meta"), "neighbor_id")
           .join(broadcast(q.select(col("query_id") +:
             filterKeys.map(fk => col(s"__q_$fk")): _*)), "query_id")) {
         (df, fk) => df.filter(col(fk) === col(s"__q_$fk"))
       }.select("query_id", "neighbor_id")
     val adc = cand
-      .join(spark.table(s"${name}_codes_v$v"), "neighbor_id")
+      .join(p.table("codes"), "neighbor_id")
       .join(qtab, Seq("query_id", "j", "code"))
       .groupBy("query_id", "neighbor_id")
       .agg(round(sum(col("qdot").cast("decimal(28,12)")), 6).cast("double")
@@ -538,7 +493,7 @@ object AnnIndex {
       .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
     val scored = short
       .join(q.select("query_id", "qe", "qn"), "query_id")
-      .join(spark.table(s"${name}_vectors_v$v")
+      .join(p.table("vectors")
         .select(col("neighbor_id"),
           Vectors.asDouble(col("embedding")).as("ce"), col("cn")),
         "neighbor_id")

@@ -558,8 +558,13 @@ object TextDedup {
   // like every log-less table format.
 
   import graft.sources.BucketedStore
+  import graft.sources.BucketedStore.{Carry, Layout, Member, Pinned}
 
-  private val DedupIndexTables = Seq("bands", "docs", "plan")
+  /** The bucketed index's store layout: the one-row `plan`, `bands`
+    * bucketed on the candidate join's key, `docs` on verification's. */
+  val IndexStore: Layout = Layout("bucketed dedup", Seq(
+    Member("plan"), Member("bands", Seq("band", "bsig")),
+    Member("docs", Seq("doc_id"))))
 
   /** The committed current index version (see
     * [[BucketedStore.currentVersion]]). */
@@ -568,10 +573,10 @@ object TextDedup {
     BucketedStore.currentVersion(spark, name)
 
   /** Drop every catalog object and on-disk remnant of bucketed index
-    * `name` (see [[BucketedStore.drop]]). Also forgets the session's
-    * memoized plans for `name`: a rebuilt index restarts at version 0,
-    * so a retained (name, 0) memo entry could answer with the dropped
-    * index's plan. */
+    * `name` (see [[BucketedStore.Layout.drop]]). Also forgets the
+    * session's memoized plans for `name`: a rebuilt index restarts at
+    * version 0, so a retained (name, 0) memo entry could answer with
+    * the dropped index's plan. */
   def dropDedupIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                              name: String): Unit = {
     planMemo.synchronized {
@@ -579,7 +584,7 @@ object TextDedup {
         case ((n, _), _) => n != name
       }): Unit
     }
-    BucketedStore.drop(spark, name, DedupIndexTables)
+    IndexStore.drop(spark, name)
   }
 
   /** Session-scoped memo of committed plans: a version's one-row
@@ -621,25 +626,19 @@ object TextDedup {
     // same for bands when a donor version provably holds
     // content-identical bands (same plan, same docs backing — the
     // caller's check, see rebandDedupIndexBucketed).
-    BucketedStore.commit(spark, name,
-      Seq(
-        BucketedStore.Member("plan",
-          Seq((bands, rowsPerBand)).toDF("bands", "rows_per_band"))) ++
-        (if (carryBandsFrom.isEmpty)
-          Seq(BucketedStore.Member("bands", banded(index, bands, rowsPerBand),
-            Seq("band", "bsig")))
-        else Nil) ++
-        (if (carryDocsFrom.isEmpty)
-          Seq(BucketedStore.Member("docs", index, Seq("doc_id")))
-        else Nil),
+    IndexStore.commit(spark, name,
+      Map("plan" -> Seq((bands, rowsPerBand)).toDF("bands", "rows_per_band")) ++
+        Option.when(carryBandsFrom.isEmpty)(
+          "bands" -> banded(index, bands, rowsPerBand)) ++
+        Option.when(carryDocsFrom.isEmpty)("docs" -> index),
       buckets,
-      carryDocsFrom.map(BucketedStore.Carry("docs", _)).toSeq ++
-        carryBandsFrom.map(BucketedStore.Carry("bands", _)).toSeq)
+      carryDocsFrom.map(Carry("docs", _)).toSeq ++
+        carryBandsFrom.map(Carry("bands", _)).toSeq)
   }
 
   /** The committed banding plan of version `v` — the one-row `plan`
-    * member (control-plane read); indexes committed before the plan
-    * member existed read as the default (4, 4). */
+    * member (control-plane read). Every commit writes it, so a version
+    * without one is a corrupt store. */
   def committedPlan(spark: org.apache.spark.sql.SparkSession,
                     name: String, v: Int): (Int, Int) = {
     val perSession = planMemo.synchronized {
@@ -650,11 +649,13 @@ object TextDedup {
       }
       m
     }
-    perSession.getOrElseUpdate((name, v),
-      if (spark.catalog.tableExists(s"${name}_plan_v$v")) {
-        val r = BucketedStore.table(spark, name, "plan", v).head()
-        (r.getInt(0), r.getInt(1))
-      } else (Bands, RowsPerBand))
+    perSession.getOrElseUpdate((name, v), {
+      val p = IndexStore.at(spark, name, v)
+      if (!p.has("plan")) throw new IllegalStateException(
+        s"bucketed dedup index $name has no plan member at v$v — store is corrupt")
+      val r = p.table("plan").head()
+      (r.getInt(0), r.getInt(1))
+    })
   }
 
   /** Build and commit the full BUCKETED dedup index for `docs` as
@@ -675,12 +676,10 @@ object TextDedup {
   def updateDedupIndexBucketed(incoming: DataFrame, id: Column, text: Column,
                                name: String, buckets: Int = 32): Int = {
     val spark = incoming.sparkSession
-    val v = currentBucketedVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no bucketed dedup index named $name"))
-    val merged = graft.operators.Merge.upsert(
-      BucketedStore.table(spark, name, "docs", v),
+    val p = IndexStore.pin(spark, name)
+    val merged = graft.operators.Merge.upsert(p.table("docs"),
       sigged(incoming, id, text, StorageLevel.NONE), Seq("doc_id"))
-    val (pb, pr) = committedPlan(spark, name, v)
+    val (pb, pr) = committedPlan(spark, name, p.version)
     commitBucketed(merged, name, buckets, pb, pr)
   }
 
@@ -695,14 +694,11 @@ object TextDedup {
   def deleteFromDedupIndexBucketed(ids: DataFrame, name: String,
                                    buckets: Int = 32): Int = {
     val spark = ids.sparkSession
-    val v = currentBucketedVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no bucketed dedup index named $name"))
+    val p = IndexStore.pin(spark, name)
     val del = broadcast(
       ids.select(col(ids.columns.head).as("doc_id")).distinct())
-    val (pb, pr) = committedPlan(spark, name, v)
-    commitBucketed(
-      BucketedStore.table(spark, name, "docs", v)
-        .join(del, Seq("doc_id"), "left_anti"),
+    val (pb, pr) = committedPlan(spark, name, p.version)
+    commitBucketed(p.table("docs").join(del, Seq("doc_id"), "left_anti"),
       name, buckets, pb, pr)
   }
 
@@ -720,8 +716,7 @@ object TextDedup {
     // pin ONE version up front (atomic ptr) and read both member
     // tables at it — a probe planned mid-commit can't mix a new bands
     // table with old docs
-    val v = currentBucketedVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no bucketed dedup index named $name"))
+    val p = IndexStore.pin(spark, name)
     // the index is self-describing: band the incoming side at the
     // COMMITTED plan. The batch is SIGNED at the full pool length, not
     // at bands·rows: the pool-prefix contract makes banding's slices
@@ -732,14 +727,14 @@ object TextDedup {
     // of re-signing the batch per committed plan (the second pass was
     // a full batch text scan; the price is hashing the pool tail per
     // shingle on the first probe).
-    val (pb, pr) = committedPlan(spark, name, v)
+    val (pb, pr) = committedPlan(spark, name, p.version)
     val tb = sigged(incoming, id, text, storage, MinHashPoolA.size)
-    val cand = BucketedStore.table(spark, name, "bands", v).as("a")
+    val cand = p.table("bands").as("a")
       .join(banded(tb, pb, pr).as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    verified(cand, BucketedStore.table(spark, name, "docs", v), tb, minJaccard)
+    verified(cand, p.table("docs"), tb, minJaccard)
   }
 
   /** RE-BAND the bucketed index to a new (bands, rowsPerBand) plan —
@@ -755,14 +750,20 @@ object TextDedup {
   def rebandDedupIndexBucketed(spark: org.apache.spark.sql.SparkSession,
                                name: String, bands: Int, rowsPerBand: Int,
                                buckets: Int = 32): Int = {
-    val v = currentBucketedVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no bucketed dedup index named $name"))
-    // IDEMPOTENT: a reband to the already-committed plan would write a
-    // byte-identical version (bands is a pure function of the stored
-    // signatures and the plan) — return the current version instead of
-    // churning one. Retune flows reset the index to a known plan every
-    // run; in steady state that reset is this no-op.
-    if (committedPlan(spark, name, v) == ((bands, rowsPerBand))) return v
+    val cur = IndexStore.pin(spark, name)
+    val v = cur.version
+    // whether version p holds bands at the requested plan AND bucket
+    // count (bands = banded(docs, plan), deterministic)
+    def bandsAsRequested(p: Pinned): Boolean =
+      committedPlan(spark, name, p.version) == ((bands, rowsPerBand)) &&
+        p.has("bands") && p.numBuckets("bands").contains(buckets)
+    // IDEMPOTENT: a reband to the already-committed plan and bucket
+    // count would write a byte-identical version (bands is a pure
+    // function of the stored signatures and the plan) — return the
+    // current version instead of churning one. Retune flows reset the
+    // index to a known plan every run; in steady state that reset is
+    // this no-op.
+    if (bandsAsRequested(cur)) return v
     // docs CARRIES (content-identical across a reband): only bands —
     // map-only from the stored signatures — and the one-row plan are
     // written, which is what "no re-shingling, no corpus text scan,
@@ -775,19 +776,13 @@ object TextDedup {
     // oscillating between two known plans (reset → demote → reset…)
     // then commits only the one-row plan member: the 100 TB shape of
     // a reband between plans whose band tables both already exist.
-    val docsBacking = BucketedStore.backingVersion(spark, name, "docs", v)
+    val docsBacking = cur.backingVersion("docs")
     val donor = (math.max(0, v - 1) to v).findLast { w =>
-      committedPlan(spark, name, w) == ((bands, rowsPerBand)) &&
-        spark.catalog.tableExists(s"${name}_docs_v$w") &&
-        BucketedStore.backingVersion(spark, name, "docs", w) == docsBacking &&
-        spark.catalog.tableExists(s"${name}_bands_v$w") && {
-          val pb = BucketedStore.backingVersion(spark, name, "bands", w)
-          spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands_v$pb"))
-            .bucketSpec.exists(_.numBuckets == buckets)
-        }
+      val p = IndexStore.at(spark, name, w)
+      p.has("docs") && p.backingVersion("docs") == docsBacking &&
+        bandsAsRequested(p)
     }
-    commitBucketed(BucketedStore.table(spark, name, "docs", v),
+    commitBucketed(cur.table("docs"),
       name, buckets, bands, rowsPerBand, carryDocsFrom = Some(v),
       carryBandsFrom = donor)
   }
@@ -808,8 +803,7 @@ object TextDedup {
         s"config $n: bands*rowsPerBand must be in [1, ${Bands * RowsPerBand}]" +
           s" (the stored signature length)")
     }
-    val v = currentBucketedVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no bucketed dedup index named $name"))
+    val p = IndexStore.pin(spark, name)
     // address docs at its backing PHYSICAL table: a reband CARRIES
     // docs, so reading through the carried view would (a) key the
     // session caches below on a view name retention later drops —
@@ -817,7 +811,7 @@ object TextDedup {
     // versions' byte-identical reports plan-distinct. The physical
     // table is the carry's own content pin.
     val t = Caching.persisted(
-      BucketedStore.physicalTable(spark, name, "docs", v), storage)
+      p.physicalTable("docs"), storage)
     // persist the REPORT too (configs-sized — one row per config):
     // the report is a pure function of the stored docs member and the
     // config list, and retune flows price the SAME index repeatedly
@@ -854,7 +848,7 @@ object TextDedup {
     val report = lshOperatingReportFromIndex(spark, name, minJaccard,
       configs, storage)
     val outcome = Banding.chooseOperatingOutcome(report, maxCandidatesPerPair)
-    val v = currentBucketedVersion(spark, name).get
+    val v = IndexStore.pin(spark, name).version
     outcome match {
       case Banding.Chosen(op)
         if (op.bands, op.rowsPerBand) != committedPlan(spark, name, v) =>

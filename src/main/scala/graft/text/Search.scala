@@ -169,41 +169,25 @@ object Search {
   // --- persisted inverted index ---------------------------------------
 
   import org.apache.spark.sql.SparkSession
-  import graft.sources.BucketedStore
+  import graft.sources.BucketedStore.{Layout, Member}
 
-  private val IndexTables =
-    Seq("postings", "doclen", "termstats", "stats", "meta")
-
-  /** The committed current version of index `name`. */
-  def indexVersion(spark: SparkSession, name: String): Option[Int] =
-    BucketedStore.currentVersion(spark, name)
+  /** The persisted index's store layout (members described at
+    * [[writeIndex]]; `meta` is written only with its `metaCols`). */
+  val IndexStore: Layout = Layout("BM25", Seq(
+    Member("postings", Seq("doc_id")),
+    Member("doclen", Seq("doc_id")),
+    Member("termstats", Seq("token")),
+    Member("stats"),
+    Member("meta", Seq("doc_id"), optional = true)))
 
   /** Drop every catalog object and on-disk remnant of index `name`. */
   def dropIndex(spark: SparkSession, name: String): Unit =
-    BucketedStore.drop(spark, name, IndexTables)
-
-  private def commitIndex(spark: SparkSession, name: String,
-                          postings: DataFrame, dl: DataFrame,
-                          termstats: DataFrame, stats: DataFrame,
-                          buckets: Int,
-                          meta: Option[DataFrame] = None): Int =
-    BucketedStore.commit(spark, name, Seq(
-      BucketedStore.Member("postings", postings, Seq("doc_id")),
-      BucketedStore.Member("doclen", dl, Seq("doc_id")),
-      BucketedStore.Member("termstats", termstats, Seq("token")),
-      BucketedStore.Member("stats", stats)) ++
-      meta.map(m => BucketedStore.Member("meta", m, Seq("doc_id"))),
-      buckets)
-
-  /** Whether version `v` of index `name` carries the optional metadata
-    * member (written by [[writeIndex]]'s `metaCols`). */
-  private def hasMeta(spark: SparkSession, name: String, v: Int): Boolean =
-    spark.catalog.tableExists(s"${name}_meta_v$v")
+    IndexStore.drop(spark, name)
 
   /** Build and commit a persisted BM25 inverted index over `docs` —
     * the production search-service shape of [[bm25TopK]], on the same
-    * [[BucketedStore]] protocol as the ANN and dedup indexes (ONE
-    * atomic ptr view; probes pin a version first). Members:
+    * [[graft.sources.BucketedStore]] protocol as the ANN and dedup
+    * indexes (ONE atomic ptr view; probes pin a version first). Members:
     *
     *  - `postings` (doc_id, token, tf) and `doclen` (doc_id, dl),
     *    both bucketed by doc_id — [[probeIndex]]'s scoring join plans
@@ -222,12 +206,13 @@ object Search {
     val postings = graft.Caching.persisted(
       buildPostings(docs, id, text), storage)
     val dl = docLengths(postings)
-    commitIndex(spark, name, postings, dl,
-      postings.groupBy("token").agg(count(lit(1)).as("dfn")),
-      dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
-      buckets,
-      if (metaCols.isEmpty) None
-      else Some(docs.select((id.as("doc_id") +: metaCols.map(col)): _*)))
+    IndexStore.commit(spark, name, Map(
+      "postings" -> postings, "doclen" -> dl,
+      "termstats" -> postings.groupBy("token").agg(count(lit(1)).as("dfn")),
+      "stats" -> dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))) ++
+      Option.when(metaCols.nonEmpty)(
+        "meta" -> docs.select((id.as("doc_id") +: metaCols.map(col)): _*)),
+      buckets)
   }
 
   /** Upsert a document batch into index `name` with EXACT stats
@@ -242,9 +227,7 @@ object Search {
                   name: String, buckets: Int = 32,
                   storage: StorageLevel = graft.Caching.Default): Int = {
     val spark = incoming.sparkSession
-    val v = indexVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no BM25 index named $name"))
-    def tab(t: String) = BucketedStore.table(spark, name, t, v)
+    val ix = IndexStore.pin(spark, name)
     val pNew = graft.Caching.persisted(
       buildPostings(incoming, id, text), storage)
     val dlNew = docLengths(pNew)
@@ -255,11 +238,11 @@ object Search {
     // old contributions of the re-ingested ids (bucketed scans; the
     // id set is a probe batch — broadcast-joinable)
     val pOld = graft.Caching.persisted(
-      tab("postings").join(broadcast(ids), "doc_id"), storage)
-    val dlOld = tab("doclen").join(broadcast(ids), "doc_id")
-    val postings = tab("postings").join(broadcast(ids), Seq("doc_id"), "left_anti")
+      ix.table("postings").join(broadcast(ids), "doc_id"), storage)
+    val dlOld = ix.table("doclen").join(broadcast(ids), "doc_id")
+    val postings = ix.table("postings").join(broadcast(ids), Seq("doc_id"), "left_anti")
       .unionAll(pNew)
-    val dl = tab("doclen").join(broadcast(ids), Seq("doc_id"), "left_anti")
+    val dl = ix.table("doclen").join(broadcast(ids), Seq("doc_id"), "left_anti")
       .unionAll(dlNew)
     // old and new contributions aggregate in ONE pass each (a signed
     // union replaces the former per-side agg + full_outer-join chain:
@@ -268,7 +251,7 @@ object Search {
     val dfDelta = pOld.select(col("token"), lit(-1L).as("d"))
       .unionAll(pNew.select(col("token"), lit(1L).as("d")))
       .groupBy("token").agg(sum(col("d")).as("d"))
-    val termstats = tab("termstats")
+    val termstats = ix.table("termstats")
       .join(dfDelta, Seq("token"), "full_outer")
       .select(col("token"),
         (coalesce(col("dfn"), lit(0L)) + coalesce(col("d"), lit(0L))).as("dfn"))
@@ -278,22 +261,21 @@ object Search {
     val deltas = dlOld.select(lit(-1L).as("sgn"), col("dl"))
       .unionAll(dlNew.select(lit(1L).as("sgn"), col("dl")))
       .agg(sum(col("sgn")).as("d_n"), sum(col("sgn") * col("dl")).as("d_s"))
-    val stats = tab("stats").crossJoin(broadcast(deltas))
+    val stats = ix.table("stats").crossJoin(broadcast(deltas))
       .select(
         (col("n_docs") + coalesce(col("d_n"), lit(0L))).as("n_docs"),
         (col("sum_dl") + coalesce(col("d_s"), lit(0L))).as("sum_dl"))
     // an index written with metaCols keeps its metadata current: the
     // incoming batch must carry the same columns (fail-fast select)
-    val meta =
-      if (!hasMeta(spark, name, v)) None
-      else {
-        val stored = tab("meta")
-        Some(graft.operators.Merge.upsert(stored,
-          incoming.select((id.as("doc_id") +:
-            stored.columns.filter(_ != "doc_id").toIndexedSeq.map(col)): _*),
-          Seq("doc_id")))
-      }
-    commitIndex(spark, name, postings, dl, termstats, stats, buckets, meta)
+    val meta = Option.when(ix.has("meta")) {
+      val stored = ix.table("meta")
+      "meta" -> graft.operators.Merge.upsert(stored,
+        incoming.select((id.as("doc_id") +:
+          stored.columns.filter(_ != "doc_id").toIndexedSeq.map(col)): _*),
+        Seq("doc_id"))
+    }
+    IndexStore.commit(spark, name, Map("postings" -> postings, "doclen" -> dl,
+      "termstats" -> termstats, "stats" -> stats) ++ meta, buckets)
   }
 
   /** Remove a document id set from index `name` — the lifecycle leg a
@@ -312,14 +294,12 @@ object Search {
   def deleteFromIndex(ids: DataFrame, name: String, buckets: Int = 32,
                       storage: StorageLevel = graft.Caching.Default): Int = {
     val spark = ids.sparkSession
-    val v = indexVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no BM25 index named $name"))
-    def tab(t: String) = BucketedStore.table(spark, name, t, v)
+    val ix = IndexStore.pin(spark, name)
     val del = ids.select(col(ids.columns.head).as("doc_id")).distinct()
     val pOld = graft.Caching.persisted(
-      tab("postings").join(broadcast(del), "doc_id"), storage)
-    val dlOld = tab("doclen").join(broadcast(del), "doc_id")
-    val termstats = tab("termstats")
+      ix.table("postings").join(broadcast(del), "doc_id"), storage)
+    val dlOld = ix.table("doclen").join(broadcast(del), "doc_id")
+    val termstats = ix.table("termstats")
       .join(pOld.groupBy("token").agg(count(lit(1)).as("d_old")),
         Seq("token"), "left_outer")
       .select(col("token"),
@@ -330,7 +310,7 @@ object Search {
     // committed as a literal row — the former shape ran the guard
     // action over the full delta chain and then RE-RAN that chain as
     // the stats member's write job
-    val statsRow = tab("stats").crossJoin(broadcast(deltas))
+    val statsRow = ix.table("stats").crossJoin(broadcast(deltas))
       .select((col("n_docs") - col("o_n")).as("n_docs"),
         (col("sum_dl") - coalesce(col("o_s"), lit(0L))).as("sum_dl"))
       .head()
@@ -345,13 +325,13 @@ object Search {
     import spark.implicits._
     val stats = Seq((statsRow.getLong(0), statsRow.getLong(1)))
       .toDF("n_docs", "sum_dl")
-    commitIndex(spark, name,
-      tab("postings").join(broadcast(del), Seq("doc_id"), "left_anti"),
-      tab("doclen").join(broadcast(del), Seq("doc_id"), "left_anti"),
-      termstats, stats, buckets,
-      if (hasMeta(spark, name, v))
-        Some(tab("meta").join(broadcast(del), Seq("doc_id"), "left_anti"))
-      else None)
+    def survivors(t: String) =
+      ix.table(t).join(broadcast(del), Seq("doc_id"), "left_anti")
+    IndexStore.commit(spark, name, Map(
+      "postings" -> survivors("postings"), "doclen" -> survivors("doclen"),
+      "termstats" -> termstats, "stats" -> stats) ++
+      Option.when(ix.has("meta"))("meta" -> survivors("meta")),
+      buckets)
   }
 
   /** Keyword top-k against the current committed index version — same
@@ -376,16 +356,14 @@ object Search {
   def probeIndexTerms(spark: SparkSession, name: String, qterms: DataFrame,
                       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // pin ONE version up front — never a torn snapshot mid-commit
-    val v = indexVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no BM25 index named $name"))
-    def tab(t: String) = BucketedStore.table(spark, name, t, v)
+    val ix = IndexStore.pin(spark, name)
     val qtok = broadcast(qterms.select("token").distinct())
     // the doc-length attach is the bucketed-bucketed doc_id join —
     // exchange-free on both corpus-sized sides (spec-asserted)
     scoreAndRank(
-      tab("postings").join(qtok, "token").join(tab("doclen"), "doc_id"),
-      tab("termstats").join(qtok, "token"),
-      tab("stats"), qterms, k, k1, b)
+      ix.table("postings").join(qtok, "token").join(ix.table("doclen"), "doc_id"),
+      ix.table("termstats").join(qtok, "token"),
+      ix.table("stats"), qterms, k, k1, b)
   }
 
   /** [[probeIndex]] restricted per query to documents sharing the
@@ -407,11 +385,9 @@ object Search {
                          queries: DataFrame, filterKeys: Seq[String], k: Int,
                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(filterKeys.nonEmpty, "probeIndexFiltered needs a filter key")
-    val v = indexVersion(spark, name).getOrElse(
-      throw new IllegalStateException(s"no BM25 index named $name"))
-    require(hasMeta(spark, name, v),
+    val ix = IndexStore.pin(spark, name)
+    require(ix.has("meta"),
       s"BM25 index $name has no metadata member; write it with metaCols")
-    def tab(t: String) = BucketedStore.table(spark, name, t, v)
     val qterms = queries.select(col("query_id"),
       explode(array_distinct(col("terms"))).as("token"))
     val qtok = broadcast(qterms.select("token").distinct())
@@ -424,14 +400,14 @@ object Search {
     // through scoring: re-joining by token alone would re-admit rows
     // another query filtered out.
     val withQ = filterKeys.foldLeft(
-      tab("postings").join(qtok, "token").join(tab("doclen"), "doc_id")
-        .join(tab("meta"), "doc_id")
+      ix.table("postings").join(qtok, "token").join(ix.table("doclen"), "doc_id")
+        .join(ix.table("meta"), "doc_id")
         .join(broadcast(qterms), "token")
         .join(qfilter, "query_id")) {
       (df, fk) => df.filter(col(fk) === col(s"__q_$fk"))
     }.select("query_id", "doc_id", "dl", "token", "tf")
-    rankScored(withQ, tab("termstats").join(qtok, "token"),
-      tab("stats"), k, k1, b)
+    rankScored(withQ, ix.table("termstats").join(qtok, "token"),
+      ix.table("stats"), k, k1, b)
   }
 
   /** Search-results diversification by group collapsing — the SERP

@@ -329,9 +329,7 @@ object ScaleBench {
       // c6's shape minus the per-pass train, i.e. the gap between the
       // two curves IS the train cost amortized away at scale
       if (Seq("c6b_lifecycle", "c6b_serving").exists(want)) {
-        graft.sources.BucketedStore.drop(spark,
-          s"c6bart_${dir.hashCode.toHexString}",
-          Seq("nbmodel", "nbpriors", "dsirmodel"))
+        graft.LlmEntry.dropSelectionArtifacts(spark, dir)
         // cold-start the lifecycle number: the c6 bench above leaves
         // its persisted frames cached, which otherwise makes the
         // train+serve first call read FASTER than steady-state serving

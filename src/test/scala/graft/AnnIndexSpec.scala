@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.ann.{AnnIndex, Pq}
+import graft.sources.BucketedStore
 
 class AnnIndexSpec extends SparkSpec {
 
@@ -34,13 +35,13 @@ class AnnIndexSpec extends SparkSpec {
       val r1 = AnnIndex.maintain(spark, "amnt", dir, open).collect()(0)
       assert(r1.getAs[String]("action") == "healthy" &&
         r1.getAs[Int]("new_version") == 0)
-      assert(AnnIndex.currentVersion(spark, "amnt").contains(0))
+      assert(BucketedStore.currentVersion(spark, "amnt").contains(0))
       // replay: the same version is already decided — no second row,
       // no retrain, the recorded row comes back
       val r2 = AnnIndex.maintain(spark, "amnt", dir, open).collect()(0)
       assert(r2.getAs[String]("action") == "healthy")
       assert(SnapshotStore.read(spark, dir).get.count() == 1)
-      assert(AnnIndex.currentVersion(spark, "amnt").contains(0))
+      assert(BucketedStore.currentVersion(spark, "amnt").contains(0))
 
       // a +2.0-drifted batch MERGEd under the frozen quantizers (the
       // e19b decay story) — a fit band it can't meet fires the retrain
@@ -53,7 +54,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(r3.getAs[String]("action") == "retrained" &&
         r3.getAs[Int]("version") == 1 && r3.getAs[Int]("new_version") == 2)
       assert(r3.getAs[String]("reasons").contains("mean_fit"))
-      assert(AnnIndex.currentVersion(spark, "amnt").contains(2))
+      assert(BucketedStore.currentVersion(spark, "amnt").contains(2))
 
       // the fresh version is its own occurrence: next tick records a
       // new (healthy) decision, and the re-centered quantizer's fit
@@ -86,7 +87,7 @@ class AnnIndexSpec extends SparkSpec {
         AnnIndex.maintain(spark, "amcl", dir, strict)
       }
       assert(e.getMessage.contains(token))
-      assert(AnnIndex.currentVersion(spark, "amcl").contains(0),
+      assert(BucketedStore.currentVersion(spark, "amcl").contains(0),
         "the losing occurrence must not have retrained")
       assert(SnapshotStore.read(spark, dir).isEmpty, "and wrote no row")
     } finally dropIndex("amcl")
@@ -294,7 +295,7 @@ class AnnIndexSpec extends SparkSpec {
         "retrain must probe like a fresh trained build")
       // version bump behind the atomic ptr: v0 retained for in-flight
       // readers, the probe pins every table at v1
-      assert(AnnIndex.currentVersion(spark, "art").contains(1))
+      assert(BucketedStore.currentVersion(spark, "art").contains(1))
       assert(spark.catalog.tableExists("art_assign_v0"),
         "prior version dropped — in-flight readers would be torn")
       val plan = AnnIndex.topK(spark, "art", queries, k = 5)
@@ -366,7 +367,7 @@ class AnnIndexSpec extends SparkSpec {
     // the single atomic pointer resolves the committed version, and
     // the probe reads every table AT that pinned version (no mixed
     // resolution through per-table views)
-    assert(AnnIndex.currentVersion(spark, "aup").contains(1))
+    assert(BucketedStore.currentVersion(spark, "aup").contains(1))
     val probePlan = AnnIndex.topK(spark, "aup", probeVec, k = 1)
       .queryExecution.analyzed.toString
     Seq("assign", "codes", "vectors").foreach { t =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
+import graft.sources.BucketedStore
 import graft.text.Search
 
 /** Persisted BM25 inverted index ([[Search.writeIndex]]/
@@ -119,7 +120,7 @@ class SearchIndexSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         Search.deleteFromIndex(Seq(1L, 2L).toDF("doc_id"), "bempty", buckets = 2)
       }
-      assert(Search.indexVersion(spark, "bempty").contains(0),
+      assert(BucketedStore.currentVersion(spark, "bempty").contains(0),
         "a refused delete must not commit a version")
       // ...and a partial delete on the same index still works
       assert(Search.deleteFromIndex(Seq(1L).toDF("doc_id"), "bempty",
@@ -144,7 +145,7 @@ class SearchIndexSpec extends SparkSpec {
     assert(probe.sameElements(direct),
       "persistence must change where stages run, not what they compute")
     // the probe reads every member at the pinned committed version
-    assert(Search.indexVersion(spark, "bix").contains(1))
+    assert(BucketedStore.currentVersion(spark, "bix").contains(1))
     val plan = Search.probeIndex(spark, "bix", Q, k = 5)
       .queryExecution.analyzed.toString
     Seq("postings", "doclen", "termstats", "stats").foreach { t =>

@@ -9,7 +9,7 @@ object SparkSpec {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
-    // the mains (Verify/Bench/Profile) build their sessions with the
+    // the mains (Verify/Bench) build their sessions with the
     // same extensions; specs must see the same plans the driver does
     .withExtensions(new GraftExtensions())
     .config("spark.sql.shuffle.partitions", "4")

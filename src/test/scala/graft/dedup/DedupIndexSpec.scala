@@ -279,6 +279,68 @@ class DedupIndexSpec extends SparkSpec {
     } finally TextDedup.dropDedupIndexBucketed(spark, "dnp")
   }
 
+  test("reband to the committed plan at a new bucket count rewrites bands") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val corpus = table("documents")
+    TextDedup.dropDedupIndexBucketed(spark, "dbk")
+    try {
+      val v0 = TextDedup.writeDedupIndexBucketed(corpus, col("doc_id"),
+        col("text"), "dbk", buckets = 4)
+      val v1 = TextDedup.rebandDedupIndexBucketed(spark, "dbk",
+        TextDedup.Bands, TextDedup.RowsPerBand, buckets = 8)
+      assert(v1 == v0 + 1, "a bucket-count change must commit a version")
+      assert(spark.sessionState.catalog.getTableMetadata(
+        TableIdentifier(s"dbk_bands_v$v1")).bucketSpec.map(_.numBuckets)
+        .contains(8))
+      // now plan AND bucket count match: the reband is the no-op
+      assert(TextDedup.rebandDedupIndexBucketed(spark, "dbk",
+        TextDedup.Bands, TextDedup.RowsPerBand, buckets = 8) == v1)
+    } finally TextDedup.dropDedupIndexBucketed(spark, "dbk")
+  }
+
+  test("A-B-A reband carries A's bands as a view that outlives retention") {
+    import spark.implicits._
+    val corpus = table("documents")
+    val copied = corpus.filter(col("doc_id") === 7L)
+      .select("text").collect()(0).getString(0)
+    val batch = Seq((9001L, copied),
+      (9002L, "zq wv xk pj qn bd gm lt rs fh cy dw en ok up"))
+      .toDF("doc_id", "text")
+    def probe(name: String) = TextDedup.minHashLshPairsAgainstBucketedIndex(
+        spark, name, batch, col("doc_id"), col("text"), 0.1)
+      .collect().map(_.toString).sorted.toSeq
+    TextDedup.dropDedupIndexBucketed(spark, "daba")
+    TextDedup.dropDedupIndexBucketed(spark, "dabf")
+    try {
+      // A = the default plan, B = a different one over the same docs
+      TextDedup.writeDedupIndexBucketed(corpus, col("doc_id"), col("text"),
+        "daba", buckets = 4)
+      assert(TextDedup.rebandDedupIndexBucketed(spark, "daba", 8, 2,
+        buckets = 4) == 1)
+      assert(TextDedup.rebandDedupIndexBucketed(spark, "daba",
+        TextDedup.Bands, TextDedup.RowsPerBand, buckets = 4) == 2)
+      assert(spark.catalog.getTable("daba_bands_v2").tableType == "VIEW",
+        "back at A, bands must carry from v0 instead of being rewritten")
+      TextDedup.writeDedupIndexBucketed(corpus, col("doc_id"), col("text"),
+        "dabf", buckets = 4)
+      val fresh = probe("dabf")
+      assert(fresh.nonEmpty)
+      assert(probe("daba") == fresh, "probe at the carried A must equal a fresh A")
+      // the next commit (to a third plan, so nothing carries from v1)
+      // retires v1's physical bands; v2's view and the v0 physical
+      // table it resolves to stay
+      assert(TextDedup.rebandDedupIndexBucketed(spark, "daba", 16, 1,
+        buckets = 4) == 3)
+      assert(!spark.catalog.tableExists("daba_bands_v1"))
+      assert(spark.catalog.getTable("daba_bands_v2").tableType == "VIEW")
+      assert(spark.table("daba_bands_v2").count() ==
+        spark.table("dabf_bands_v0").count())
+    } finally {
+      TextDedup.dropDedupIndexBucketed(spark, "daba")
+      TextDedup.dropDedupIndexBucketed(spark, "dabf")
+    }
+  }
+
   test("readBandIndex feeds the streaming probe shape") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-band-index").toString

@@ -387,30 +387,36 @@ class TablesSpec extends SparkSpec {
 
 class BucketedStoreCarrySpec extends SparkSpec {
   import graft.sources.BucketedStore
-  import graft.sources.BucketedStore.{Carry, Member}
+  import graft.sources.BucketedStore.{Carry, Layout, Member}
+
+  private val Store = Layout("test", Seq(Member("data", Seq("k")), Member("plan")))
+
+  private def data = {
+    import spark.implicits._
+    (0 until 64).map(i => (i.toLong, s"p$i")).toDF("k", "pay")
+  }
+  private def planDf(n: Int) = {
+    import spark.implicits._
+    Seq(n).toDF("n")
+  }
 
   test("carried members: views, stable content, retention keeps the backing table") {
-    import spark.implicits._
     val name = "bscarry"
-    BucketedStore.drop(spark, name, Seq("data", "plan"))
+    Store.drop(spark, name)
     try {
-      val data = (0 until 64).map(i => (i.toLong, s"p$i")).toDF("k", "pay")
-      def planDf(n: Int) = Seq(n).toDF("n")
-      val v0 = BucketedStore.commit(spark, name,
-        Seq(Member("data", data, Seq("k")), Member("plan", planDf(0))),
-        buckets = 4)
+      val v0 = Store.commit(spark, name,
+        Map("data" -> data, "plan" -> planDf(0)), buckets = 4)
       assert(v0 == 0)
       // three consecutive carried commits: v1..v3 rewrite only plan;
       // the chain must resolve to v0's physical table, never stack views
       (1 to 3).foreach { i =>
-        val v = BucketedStore.commit(spark, name,
-          Seq(Member("plan", planDf(i))),
+        val v = Store.commit(spark, name, Map("plan" -> planDf(i)),
           buckets = 4, carry = Seq(Carry("data", i - 1)))
         assert(v == i)
       }
       // carried member is a view; content identical to the original
       assert(spark.catalog.getTable(s"${name}_data_v3").tableType == "VIEW")
-      assert(BucketedStore.table(spark, name, "data", 3).orderBy("k")
+      assert(Store.at(spark, name, 3).table("data").orderBy("k")
         .collect().toSeq == data.orderBy("k").collect().toSeq)
       // retention: v0's PHYSICAL data table must survive (the retained
       // versions' views resolve to it) even though version 0 is behind
@@ -424,7 +430,7 @@ class BucketedStoreCarrySpec extends SparkSpec {
       val oldAqe = conf.get("spark.sql.adaptive.enabled")
       try {
         conf.set("spark.sql.adaptive.enabled", "false")
-        val agg = BucketedStore.table(spark, name, "data", 3)
+        val agg = Store.at(spark, name, 3).table("data")
           .groupBy("k").count()
         val plan = agg.queryExecution.executedPlan.toString
         assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
@@ -432,15 +438,108 @@ class BucketedStoreCarrySpec extends SparkSpec {
       } finally conf.set("spark.sql.adaptive.enabled", oldAqe)
       // fresh WRITES of data at v4/v5: the old physical finally drops
       // once no retained version references it
-      BucketedStore.commit(spark, name,
-        Seq(Member("data", data, Seq("k")), Member("plan", planDf(4))),
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(4)),
         buckets = 4)
-      BucketedStore.commit(spark, name,
-        Seq(Member("data", data, Seq("k")), Member("plan", planDf(5))),
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(5)),
         buckets = 4)
       assert(!spark.catalog.tableExists(s"${name}_data_v0"))
       assert(!spark.catalog.tableExists(s"${name}_data_v3"))
-      assert(BucketedStore.table(spark, name, "data", 5).count() == 64)
-    } finally BucketedStore.drop(spark, name, Seq("data", "plan"))
+      assert(Store.pin(spark, name).table("data").count() == 64)
+    } finally Store.drop(spark, name)
+  }
+
+  test("layout commit refuses a member that is neither written nor carried") {
+    val name = "bsmissing"
+    Store.drop(spark, name)
+    try {
+      val e = intercept[IllegalArgumentException](
+        Store.commit(spark, name, Map("plan" -> planDf(0)), buckets = 4))
+      assert(e.getMessage.contains("'data' is neither written nor carried"))
+      assert(BucketedStore.currentVersion(spark, name).isEmpty)
+      val e2 = intercept[IllegalStateException](Store.pin(spark, name))
+      assert(e2.getMessage == s"no test index named $name")
+    } finally Store.drop(spark, name)
+  }
+
+  test("a carried view whose body names no older member table is corrupt") {
+    val name = "bsforeign"
+    Store.drop(spark, name)
+    try {
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      Store.commit(spark, name, Map("plan" -> planDf(1)), buckets = 4,
+        carry = Seq(Carry("data", 0)))
+      assert(Store.pin(spark, name).backingVersion("data") == 0)
+      // hand-replace the carried view with a foreign body: stepping
+      // down to v0's physical table would serve different content
+      spark.sql(s"DROP VIEW ${name}_data_v1")
+      spark.sql(s"CREATE VIEW ${name}_data_v1 AS " +
+        "SELECT CAST(1 AS BIGINT) AS k, 'x' AS pay")
+      val e = intercept[IllegalStateException](
+        Store.pin(spark, name).physicalTable("data"))
+      assert(e.getMessage.contains("store is corrupt"), e.getMessage)
+    } finally Store.drop(spark, name)
+  }
+
+  test("a session temp view named like a convenience view survives a commit") {
+    val name = "bstemp"
+    Store.drop(spark, name)
+    spark.range(3).createOrReplaceTempView(s"${name}_data")
+    try {
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      Store.commit(spark, name, Map("plan" -> planDf(1)), buckets = 4,
+        carry = Seq(Carry("data", 0)))
+      // the temp view is untouched; the store's convenience view sits
+      // beside it in the current database
+      assert(spark.table(s"${name}_data").columns.toSeq == Seq("id"))
+      assert(spark.table(s"${name}_data").count() == 3)
+      val db = spark.catalog.currentDatabase
+      assert(spark.table(s"$db.${name}_data").count() == 64)
+      Store.drop(spark, name)
+      assert(spark.table(s"${name}_data").count() == 3)
+      assert(!spark.catalog.tableExists(db, s"${name}_data"))
+    } finally {
+      spark.catalog.dropTempView(s"${name}_data")
+      Store.drop(spark, name)
+    }
+  }
+
+  test("a hand-made pointer resolves through the executing fallback") {
+    val name = "bshandptr"
+    Store.drop(spark, name)
+    try {
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(1)),
+        buckets = 4)
+      spark.sql(s"CREATE OR REPLACE VIEW ${name}_ptr AS SELECT 1 + 0 AS version")
+      assert(BucketedStore.currentVersion(spark, name).contains(1))
+      assert(Store.pin(spark, name).table("plan").head().getInt(0) == 1)
+      assert(Store.commit(spark, name, Map("plan" -> planDf(2)), buckets = 4,
+        carry = Seq(Carry("data", 1))) == 2)
+    } finally Store.drop(spark, name)
+  }
+
+  test("a failed member write publishes nothing; the next commit succeeds") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val name = "bsfail"
+    Store.drop(spark, name)
+    try {
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      val bad = data.select(col("k"),
+        when(col("k") === 5, raise_error(lit("boom"))).otherwise(col("pay"))
+          .as("pay"))
+      intercept[Exception](Store.commit(spark, name,
+        Map("data" -> bad, "plan" -> planDf(1)), buckets = 4))
+      assert(BucketedStore.currentVersion(spark, name).contains(0))
+      assert(Store.pin(spark, name).table("plan").head().getInt(0) == 0)
+      assert(Store.commit(spark, name,
+        Map("data" -> data, "plan" -> planDf(1)), buckets = 4) == 1)
+      val p = Store.pin(spark, name)
+      assert(p.table("data").count() == 64)
+      assert(p.table("plan").head().getInt(0) == 1)
+    } finally Store.drop(spark, name)
   }
 }
