@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions.{col, max, md5}
   * for all 5 passes. The canary's one tiny early-compiled plan
   * doesn't see it, which is exactly the observed signature (queries
   * drift together; canary doesn't; drift grows with query count:
-  * 118 -> 130 queries between r5 and r6). Fix: raise the cache so a
-  * pass's classes are compiled once and reused by every later pass.
+  * 118 -> 130 queries between r5 and r6). Fix: [[GraftSession]] raises
+  * the cache so a pass's classes are compiled once and reused by
+  * every later pass.
   *
   * Per-query MEDIANS of the timed passes are recorded alongside mins
   * in the durable BENCH_FULL.json (medians are robust to the one-off
@@ -57,29 +58,8 @@ import org.apache.spark.sql.functions.{col, max, md5}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same session shape as Verify: graft extensions registered once
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // hold every pass's generated classes (default 100 is far below
-      // one pass's distinct codegen sources — see scaladoc)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // let AQE size CACHED plans' partitioning by bytes instead of
-      // freezing the static shuffle.partitions count into every
-      // persisted intermediate: the operators persist control-plane
-      // and sliver-sized frames (postings batches, probe slivers,
-      // stage boundaries), and with this off every consumer job of a
-      // cached frame pays one task per frozen partition regardless of
-      // size. Scale-adaptive by construction (AQE's advisory target),
-      // not a local[32] constant. Measured (JobProfile, sf0.1):
-      // e8b 865→369 tasks / 114.6→46.4 task-s, e8d 1120→612 / 159→72,
-      // c6 1046→271 / 105→54, e20 745→559 / 71→43.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val onlyQ: Option[Set[String]] = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -89,7 +69,7 @@ object Bench {
     }
     def canary(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000L, 1L, cpus)
         .select(md5(col("id").cast("string")).as("h"))
         .agg(max("h")).collect()
       (System.nanoTime() - t0) / 1e9
@@ -194,7 +174,7 @@ object Bench {
     def absorber(): Unit = {
       try spark.read.parquet(s"$sfDir/region.parquet").count(): Unit
       catch { case _: Throwable => () }
-      spark.range(0L, 1000000L, 1L, cpus.toInt)
+      spark.range(0L, 1000000L, 1L, cpus)
         .select(md5(col("id").cast("string")).as("h"))
         .agg(max("h")).collect(): Unit
     }

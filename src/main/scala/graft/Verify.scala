@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,25 +7,7 @@ object Verify {
     // optional trailing args select a query subset (local iteration);
     // the driver always calls with exactly (sfDir, outDir) = full run
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // graft's SQL kernels + the WindowTopOneRewrite optimizer rule,
-      // registered once at session build (the b2b/g7b naive-window
-      // queries prove the rule through the driver gate)
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hold the full suite's generated classes (default 100 entries
-      // forces Janino recompiles across the run — see Bench scaladoc)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // AQE-sized cached-plan partitioning — same setting as Bench
-      // (see the rationale there); Verify must execute the plans the
-      // bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

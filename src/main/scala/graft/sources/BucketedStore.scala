@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.functions.col
 
 /** Versioned bucketed metastore tables behind ONE atomic view pointer
@@ -126,7 +127,7 @@ object BucketedStore {
                 .bucketBy(buckets, cols.head, cols.tail: _*)
                 .sortBy(cols.head, cols.tail: _*)
           }
-          w.saveAsTable(memberTable(name, m.suffix, v))
+          w.saveAsTable(qualified(spark, memberTable(name, m.suffix, v)))
         }
       if (writes.size <= 1) writes.foreach(_())
       else {
@@ -153,15 +154,17 @@ object BucketedStore {
         val t = memberTable(name, c.suffix, v)
         // a crashed prior commit (data down, ptr never swapped) can
         // leave a stray object at this name — clear it by its own type
-        if (spark.catalog.tableExists(t)) {
-          if (tableType(spark, t) == "VIEW") spark.sql(s"DROP VIEW $t")
-          else spark.sql(s"DROP TABLE $t")
+        if (exists(spark, t)) {
+          if (isView(spark, t)) spark.sql(s"DROP VIEW ${qualified(spark, t)}")
+          else spark.sql(s"DROP TABLE ${qualified(spark, t)}")
         }
-        spark.sql(s"CREATE VIEW $t AS SELECT * FROM ${memberTable(name, c.suffix, p)}")
+        spark.sql(s"CREATE VIEW ${qualified(spark, t)} AS " +
+          s"SELECT * FROM ${qualified(spark, memberTable(name, c.suffix, p))}")
       }
       // the ptr stays CREATE OR REPLACE — ITS swap is the protocol's
       // atomicity, and its literal body sameResults nothing cacheable
-      spark.sql(s"CREATE OR REPLACE VIEW ${name}_ptr AS SELECT $v AS version")
+      spark.sql(s"CREATE OR REPLACE VIEW ${qualified(spark, s"${name}_ptr")} AS " +
+        s"SELECT $v AS version")
       // convenience views repoint WITHOUT the replace-command's cache
       // cascade (see dropViewNoUncache — replacing `SELECT * FROM
       // <old member>` would uncache valid caches over the old member
@@ -170,8 +173,8 @@ object BucketedStore {
       // ptr and address pinned versions, never these.
       suffixes.filter(s => frames.contains(s) || carried(s)).foreach { sfx =>
         dropViewNoUncache(spark, s"${name}_$sfx")
-        spark.sql(s"CREATE VIEW ${ident(spark, s"${name}_$sfx").quotedString} AS " +
-          s"SELECT * FROM ${memberTable(name, sfx, v)}")
+        spark.sql(s"CREATE VIEW ${qualified(spark, s"${name}_$sfx")} AS " +
+          s"SELECT * FROM ${qualified(spark, memberTable(name, sfx, v))}")
       }
       // retain exactly one prior version for in-flight readers — PLUS
       // any older physical table a retained version's carried view still
@@ -179,7 +182,7 @@ object BucketedStore {
       val keepPhysical: Set[(String, Int)] = (math.max(0, v - 1) to v)
         .flatMap { rv =>
           suffixes.flatMap { sfx =>
-            if (spark.catalog.tableExists(memberTable(name, sfx, rv)))
+            if (exists(spark, memberTable(name, sfx, rv)))
               Some(sfx -> physicalVersion(spark, name, sfx, rv))
             else None
           }
@@ -187,15 +190,15 @@ object BucketedStore {
       (0 to v - 2).foreach { old =>
         suffixes.foreach { sfx =>
           val t = memberTable(name, sfx, old)
-          if (spark.catalog.tableExists(t)) {
+          if (exists(spark, t)) {
             // version-pinned views drop WITHOUT the cache cascade (they
             // alias a retained physical table whose caches stay valid);
             // physical tables keep the full DROP TABLE semantics — their
             // files are deleted, so dependent caches MUST invalidate
-            if (tableType(spark, t) == "VIEW")
+            if (isView(spark, t))
               dropViewNoUncache(spark, t)
             else if (!keepPhysical.contains(sfx -> old))
-              spark.sql(s"DROP TABLE IF EXISTS $t")
+              spark.sql(s"DROP TABLE IF EXISTS ${qualified(spark, t)}")
           }
         }
       }
@@ -210,18 +213,19 @@ object BucketedStore {
       * fails with LOCATION_ALREADY_EXISTS). */
     def drop(spark: SparkSession, name: String): Unit = {
       (s"${name}_ptr" +: suffixes.map(t => s"${name}_$t"))
-        .foreach(v => spark.sql(s"DROP VIEW IF EXISTS ${ident(spark, v).quotedString}"))
+        .foreach(v => spark.sql(s"DROP VIEW IF EXISTS ${qualified(spark, v)}"))
       val pat = (java.util.regex.Pattern.quote(name) +
         "_(?:" + suffixes.mkString("|") + ")_v\\d+").r
       // versioned members may be physical tables OR carried views —
       // DROP TABLE on a view throws, so route by catalog type. Views
-      // drop first (a view may reference a physical sibling).
+      // drop first (a view may reference a physical sibling). Session
+      // temp views are listed too; they are never the store's.
       val versioned = spark.catalog.listTables().collect()
-        .filter(t => pat.matches(t.name))
+        .filter(t => !t.isTemporary && pat.matches(t.name))
       versioned.filter(_.tableType == "VIEW")
-        .foreach(t => spark.sql(s"DROP VIEW IF EXISTS ${t.name}"))
+        .foreach(t => spark.sql(s"DROP VIEW IF EXISTS ${qualified(spark, t.name)}"))
       versioned.filter(_.tableType != "VIEW")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${qualified(spark, t.name)}"))
       localWarehouseDir(spark).foreach { wh =>
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
@@ -259,12 +263,12 @@ object BucketedStore {
 
     /** Member `sfx` at this version. */
     def table(sfx: String): DataFrame =
-      spark.table(memberTable(name, known(sfx), version))
+      spark.table(qualified(spark, memberTable(name, known(sfx), version)))
 
     /** Whether this version holds member `sfx` (optional members may
       * be absent). */
     def has(sfx: String): Boolean =
-      spark.catalog.tableExists(memberTable(name, known(sfx), version))
+      exists(spark, memberTable(name, known(sfx), version))
 
     /** The version whose PHYSICAL table backs member `sfx` here.
       * Carried members alias the same physical: equal backing version
@@ -281,7 +285,7 @@ object BucketedStore {
       * canonically EQUAL plans here, so their session caches are
       * shared — the content is byte-identical by construction. */
     def physicalTable(sfx: String): DataFrame =
-      spark.table(memberTable(name, sfx, backingVersion(sfx)))
+      spark.table(qualified(spark, memberTable(name, sfx, backingVersion(sfx))))
 
     /** The bucket count of member `sfx`'s backing physical table. */
     def numBuckets(sfx: String): Option[Int] =
@@ -302,8 +306,15 @@ object BucketedStore {
   private def ident(spark: SparkSession, table: String): TableIdentifier =
     TableIdentifier(table, Some(spark.sessionState.catalog.getCurrentDatabase))
 
-  private def tableType(spark: SparkSession, table: String): String =
-    spark.catalog.getTable(table).tableType
+  private def qualified(spark: SparkSession, table: String): String =
+    ident(spark, table).quotedString
+
+  private def exists(spark: SparkSession, table: String): Boolean =
+    spark.sessionState.catalog.tableExists(ident(spark, table))
+
+  private def isView(spark: SparkSession, table: String): Boolean =
+    spark.sessionState.catalog.getTableMetadata(ident(spark, table))
+      .tableType == CatalogTableType.VIEW
 
   private def viewText(spark: SparkSession, table: String): Option[String] =
     try spark.sessionState.catalog.getTableMetadata(ident(spark, table)).viewText
@@ -347,8 +358,8 @@ object BucketedStore {
     def resolve(p: Int): Int =
       if (p < 0) throw new IllegalStateException(s"no physical table backs " +
         s"member '$suffix' of '$name' at or below v$version — store is corrupt")
-      else if (!spark.catalog.tableExists(tbl(p))) resolve(p - 1)
-      else if (tableType(spark, tbl(p)) != "VIEW") p
+      else if (!exists(spark, tbl(p))) resolve(p - 1)
+      else if (!isView(spark, tbl(p))) p
       else viewText(spark, tbl(p))
         .flatMap(t => targetRx.findFirstMatchIn(t).map(_.group(1).toInt))
         .filter(_ < p) match {
@@ -376,10 +387,10 @@ object BucketedStore {
     * written shape falls back to executing the view, so a hand-made
     * pointer still resolves. */
   def currentVersion(spark: SparkSession, name: String): Option[Int] =
-    if (spark.catalog.tableExists(s"${name}_ptr"))
+    if (exists(spark, s"${name}_ptr"))
       Some(viewText(spark, s"${name}_ptr") match {
         case Some(PtrViewText(v)) => v.toInt
-        case _ => spark.table(s"${name}_ptr").head().getInt(0)
+        case _ => spark.table(qualified(spark, s"${name}_ptr")).head().getInt(0)
       })
     else None
 

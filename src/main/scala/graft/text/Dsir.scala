@@ -22,13 +22,13 @@ import graft.functions.Hashing
   *
   * Scale shape: one pass over each corpus to bucket counts, densified
   * against the constant `range(buckets)` grid (every possible bucket
-  * present, so scoring never misses and side totals are exact window
-  * sums over the bucket-sized frame — no one-row attach, no corpus
-  * re-execution). Scoring is map-only against the BROADCAST model
-  * plus one doc-keyed aggregation. The resample's global top-k is the
-  * naive rn<=k window that [[graft.plans.WindowTopOneRewrite]] ships
-  * as bounded-heap partial aggregation — no corpus sort, no single
-  * partition.
+  * present, so scoring never misses); each side's total is a one-row
+  * scalar subquery over its bucket counts, not a window funnelling
+  * every bucket through one reducer. Scoring is map-only against the
+  * BROADCAST model plus one doc-keyed aggregation. The resample's
+  * global top-k is the naive rn<=k window that
+  * [[graft.plans.WindowTopOneRewrite]] ships as bounded-heap partial
+  * aggregation — no corpus sort, no single partition.
   *
   * Determinism: log-probs round to 9 dp at the model (absorbing libm
   * ulp differences), per-doc sums ride DECIMAL(28,12), doubles are
@@ -62,9 +62,8 @@ object Dsir {
 
   /** Dense per-bucket counts for one corpus: (bucket, c, n) with every
     * bucket in [0, buckets) present (c = 0 where unobserved) and `n`
-    * the corpus' total token mass as a window sum over the
-    * bucket-sized frame. One corpus pass; output is exactly `buckets`
-    * rows. */
+    * the corpus' total token mass, a one-row scalar subquery over the
+    * counts. One corpus pass; output is exactly `buckets` rows. */
   private def denseCounts(docs: DataFrame, text: Column,
                           buckets: Int, ngrams: Int): DataFrame = {
     val counts = docs
@@ -74,7 +73,7 @@ object Dsir {
     docs.sparkSession.range(buckets).select(col("id").as("bucket"))
       .join(counts, Seq("bucket"), "left")
       .na.fill(0L, Seq("c"))
-      .withColumn("n", sum("c").over(Window.partitionBy()))
+      .withColumn("n", counts.agg(coalesce(sum("c"), lit(0L))).scalar())
   }
 
   /** Add-one log-prob of one dense side: round(ln((c+1)/(n+B)), 9). */
@@ -201,8 +200,8 @@ object Dsir {
     *
     * Scale shape: [[resample]]'s bounded-heap draw, the k-row
     * selection broadcast back onto the (doc, source) projection, one
-    * sources-sized rollup; the pool total attaches as an
-    * unpartitioned window sum over the sources frame. Share and
+    * sources-sized rollup; the pool total is a one-row scalar
+    * subquery over the sources frame. Share and
     * weight arithmetic is exact-integer products with ONE IEEE
     * division each (plus a 6-dp round), so engines agree exactly;
     * the mean selected weight sums the 6-dp weights in DECIMAL(18,6)
@@ -224,7 +223,7 @@ object Dsir {
       .groupBy("source")
       .agg(count(lit(1)).as("n_selected"),
         sum(col("weight").cast("decimal(18,6)")).as("__wsum"))
-    val nTotal = sum(col("n_pool")).over(Window.partitionBy())
+    val nTotal = perSrc.agg(sum(col("n_pool"))).scalar()
     perSrc.join(selSrc, Seq("source"), "left")
       .na.fill(0L, Seq("n_selected"))
       .withColumn("__n_total", nTotal)

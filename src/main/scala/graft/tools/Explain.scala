@@ -1,29 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan auditor (not part of the driver contract): prints the
   * formatted physical plan of each SparkEntry query for shuffle /
   * pushdown / broadcast review.
   * Usage: runMain graft.tools.Explain <sfDir> [queryKey...]
+  * on `local[SPARK_GRAFT_CPUS]` (default 32), the session Bench builds.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val keys = if (args.length > 1) args.toSeq.tail
                else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .appName("graft-explain").master("local[4]")
-      // same extensions as Verify/Bench — without them the audited
-      // plans are NOT the shipped plans (the window rewrites vanish)
-      .withExtensions(new graft.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false)
-      // match Bench/Verify: AQE-sized cached-plan partitioning, so the
-      // audited plans are the shipped plans
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     for (k <- keys) {
       println(s"\n================ $k ================")

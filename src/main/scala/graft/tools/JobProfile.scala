@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-query JOB-LEVEL profiler (not part of the driver
   * contract): how many Spark jobs / stages / tasks does one invocation
@@ -19,6 +18,7 @@ import org.apache.spark.sql.SparkSession
   * expressions.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> [queryKey...]
+  * on `local[SPARK_GRAFT_CPUS]` (default 32), the session Bench builds.
   * Each key runs twice (warmup + measured; caches cleared before each
   * run like the bench) and prints:
   *   key  wall_s  jobs  stages  tasks  task_time_s
@@ -28,23 +28,7 @@ object JobProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val keys = if (args.length > 1) args.toSeq.tail
                else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .appName("graft-jobprofile").master("local[32]")
-      .withExtensions(new graft.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // SPARK_GRAFT_PFIRST=false|true experiments with AQE's
-      // parallelism-first coalescing (Spark docs recommend false:
-      // respect advisoryPartitionSizeInBytes)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "true"))
-      // SPARK_GRAFT_CACHEAQE=false re-freezes cached-plan partitioning
-      // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning);
-      // default matches Bench/Verify, which now ship true
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHEAQE", "true"))
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskNanos = new AtomicLong

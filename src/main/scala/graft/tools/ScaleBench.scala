@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 import graft.operators.Skew
 import graft.sources.Tables
 
@@ -99,7 +99,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_scale")
     val mults = if (args.length > 1) args.tail.map(_.toInt).toSeq else Seq(1, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     val passes = sys.env.getOrElse("SCALE_PASSES", "3").toInt
     // SCALE_ONLY=d19,d7 runs just the named experiment groups (prefix
     // match on the op keys) — re-measuring one new curve must not cost
@@ -110,13 +110,7 @@ object ScaleBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def want(key: String): Boolean =
       onlyExp.forall(_.exists(p => key.startsWith(p)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def timeOf(fn: () => Long): (Double, Long) = {

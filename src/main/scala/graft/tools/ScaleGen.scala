@@ -159,12 +159,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_scale")
     val mults = if (args.length > 1) args.tail.map(_.toInt).toSeq else Seq(1, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
     mults.foreach { m =>
       writeAll(spark, root, m)

@@ -2,12 +2,12 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.SQLContext
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-import graft.GraftExtensions
+import graft.GraftSession
 import graft.streaming.{CurationStream, Events, FunnelStream, RollupStream}
 
 /** Streaming throughput micro-benchmark (SCALING.md's STREAMING
@@ -47,20 +47,14 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
     else Seq(20000, 100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     val chunk = sys.env.getOrElse("STREAM_CHUNK", "5000").toInt
     // STREAM_ONLY=classify,rollup runs just the named streams — a
     // chunk-size sweep of one stream must not re-run the other four
     val onlyS: Option[Set[String]] = sys.env.get("STREAM_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wantS(key: String): Boolean = onlyS.forall(_.contains(key))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     implicit val sqlCtx: SQLContext = spark.sqlContext
     import spark.implicits._

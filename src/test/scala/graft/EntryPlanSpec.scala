@@ -186,6 +186,21 @@ class EntryPlanSpec extends SparkSpec {
     }
   }
 
+  test("the DSIR keys plan no Window, subqueries included") {
+    // the side and pool totals are one-row scalar subqueries and the
+    // Gumbel draw is WindowTopOneRewrite's bounded heap: no frame of
+    // these plans funnels through one unpartitioned window
+    for (name <- Seq("x15_dsir_weights", "x15b_dsir_resample", "x18_dsir_mixture")) {
+      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+      val windows = qe.optimizedPlan.collectWithSubqueries {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }
+      assert(windows.isEmpty, s"$name plans a Window:\n${qe.optimizedPlan}")
+      assert(!qe.executedPlan.toString.contains("Window"),
+        s"$name plans a Window:\n${qe.executedPlan}")
+    }
+  }
+
   test("map-only entries plan ZERO keyed shuffles (the stage-0 gate posture)") {
     // d20 (inline blocklist path), m10 (byte-surgery scrub), m11
     // (metadata audit): a crawl's first gates must run at scan speed —

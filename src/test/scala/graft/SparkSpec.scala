@@ -6,20 +6,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all suites (one JVM, forked by sbt). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // the mains (Verify/Bench) build their sessions with the
-    // same extensions; specs must see the same plans the driver does
-    .withExtensions(new GraftExtensions())
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // AQE-sized cached-plan partitioning, as in Bench/Verify — specs
-    // must exercise the same physical behavior the driver runs
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      "true")
-    .getOrCreate()
+  // the session the mains ship: specs see the plans the mains run
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val SfDir = "/root/testdata/sf0.001"
 }

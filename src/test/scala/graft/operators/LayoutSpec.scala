@@ -97,7 +97,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("graft_bit_spread registers and matches the expression") {
-    graft.GraftFunctions.register(spark)
     val got = spark.sql("SELECT graft_bit_spread(CAST(5 AS BIGINT), 2, 4) AS z")
       .as[Long].head()
     assert(got == 0x11L) // 0b101 -> 0b10001

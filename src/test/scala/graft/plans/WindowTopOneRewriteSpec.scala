@@ -272,32 +272,4 @@ class WindowTopOneRewriteSpec extends SparkSpec {
     assert(out.collect { case w: LWindow => w }.isEmpty,
       "window itself should still rewrite (input unchanged either way)")
   }
-
-  test("extensions-injected session applies the rule end to end") {
-    import org.apache.spark.sql.SparkSession
-    // a sibling session over the SAME SparkContext, built with the
-    // extensions; never stopped (that would kill the shared context)
-    val old = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // withExtensions rather than the spark.sql.extensions conf: the
-      // conf is static and is not re-read when the builder reuses an
-      // already-running SparkContext (as it does under this test JVM)
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      assert(s2 ne old, "needs its own session to carry the extensions")
-      val df = naiveLatest(s2.read.parquet(s"$sfDir/lineitem.parquet"))
-      assert(df.queryExecution.optimizedPlan
-        .collect { case a: Aggregate => a }.nonEmpty,
-        df.queryExecution.optimizedPlan.toString)
-      assert(df.count() > 0)
-    } finally {
-      SparkSession.setDefaultSession(old)
-      SparkSession.setActiveSession(old)
-    }
-  }
 }

@@ -505,6 +505,40 @@ class BucketedStoreCarrySpec extends SparkSpec {
     }
   }
 
+  test("a temp view named like the pointer is not a store") {
+    val name = "bstempptr"
+    Store.drop(spark, name)
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW ${name}_ptr AS SELECT 7 AS version")
+    try assert(BucketedStore.currentVersion(spark, name).isEmpty)
+    finally spark.catalog.dropTempView(s"${name}_ptr")
+  }
+
+  test("a temp view named like a member is neither read nor dropped") {
+    val name = "bstempmember"
+    val WithExtra = Layout("test", Store.members :+ Member("extra", optional = true))
+    WithExtra.drop(spark, name)
+    try {
+      WithExtra.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      Seq("data", "extra").foreach(sfx =>
+        spark.range(3).createOrReplaceTempView(s"${name}_${sfx}_v0"))
+      val p = WithExtra.pin(spark, name)
+      assert(p.table("data").columns.toSeq == Seq("k", "pay"))
+      assert(p.table("data").count() == 64)
+      assert(p.has("data") && !p.has("extra"))
+      WithExtra.commit(spark, name, Map("plan" -> planDf(1)), buckets = 4,
+        carry = p.carry("data", "extra"))
+      assert(WithExtra.pin(spark, name).table("data").count() == 64)
+      WithExtra.drop(spark, name)
+      assert(spark.table(s"${name}_data_v0").count() == 3)
+      assert(spark.table(s"${name}_extra_v0").count() == 3)
+    } finally {
+      Seq("data", "extra").foreach(sfx =>
+        spark.catalog.dropTempView(s"${name}_${sfx}_v0"))
+      WithExtra.drop(spark, name)
+    }
+  }
+
   test("a hand-made pointer resolves through the executing fallback") {
     val name = "bshandptr"
     Store.drop(spark, name)
