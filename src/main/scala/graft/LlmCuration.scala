@@ -25,8 +25,146 @@ import graft.text.{Dsir, NaiveBayes, TextAnalysis}
   *
   * Stage order matters at scale: the map-only gates run first so every
   * shuffle-bearing stage sees the smallest possible corpus.
+  *
+  * Every entry point is a list of named [[Stage]]s run by one of two
+  * runners: [[chain]] (the pipelines) or [[report]] (the attrition
+  * reports). A report and its pipeline, and a lifecycle form and its
+  * serving form, build their lists from the same stage definitions.
+  * Staging rule: a stage output is [[Caching.staged]] when it is read
+  * twice — in a pipeline every output but the first (the gate's, read
+  * once by exact dedup) and the last (read once by the caller), in a
+  * report every output but the last (read by its count and by the next
+  * stage).
   */
 object LlmCuration {
+
+  /** A named curation stage; the name is its attrition-report row. */
+  private final case class Stage(name: String, run: DataFrame => DataFrame)
+
+  /** Run `stages` over `in`; returns the last stage's lazy output.
+    * Lifecycle: the staged boundaries cannot be unpersisted here — the
+    * CALLER owns them (the [[graft.Caching]] contract): pass
+    * `StorageLevel.NONE` to opt out in a long-lived session, or
+    * unpersist after the terminal action ([[report]] does exactly
+    * that). */
+  private def chain(in: DataFrame, stages: Seq[Stage],
+                    storage: StorageLevel): DataFrame =
+    stages.zipWithIndex.foldLeft(in) { case (df, (st, i)) =>
+      val out = st.run(df)
+      // the gate's output feeds one aggregate, the last only the caller
+      if (i == 0 || i == stages.size - 1) out else Caching.staged(out, storage)
+    }
+
+  /** Per-stage attrition rows (stage_no, stage, n_in, n_out, drop_frac)
+    * of `stages` over `in` — the ops log every curation run emits (HOW
+    * MUCH did each stage drop; a gate suddenly eating 40% instead of
+    * 4% is a feed regression, a near-dup stage dropping ~0% says the
+    * corpus was already deduped upstream). The counts are control-plane
+    * one-row aggregates (the [[Medallion.run]] metrics pattern); the
+    * staged boundaries are unpersisted once every count is in.
+    * drop_frac is one IEEE division of exact longs, rounded 6 dp, and
+    * null, not 0/0, once an upstream stage emptied the corpus. */
+  private def report(in: DataFrame, stages: Seq[Stage],
+                     storage: StorageLevel): DataFrame = {
+    val spark = in.sparkSession
+    import spark.implicits._
+    val last = stages.size - 1
+    // (frame, row count) after each step, the input first
+    val steps = stages.zipWithIndex.scanLeft((in, in.count())) {
+      case ((df, _), (st, i)) =>
+        // all but the last feed both their count and the next stage
+        val out =
+          if (i < last) Caching.staged(st.run(df), storage) else st.run(df)
+        (out, out.count())
+    }
+    steps.slice(1, last + 1).foreach(_._1.unpersist())
+    stages.indices
+      .map(i => (i + 1, stages(i).name, steps(i)._2, steps(i + 1)._2))
+      .toDF("stage_no", "stage", "n_in", "n_out")
+      // §6 quantizer (Quantize scaladoc): engine-identical at the
+      // half boundary, unlike round(double, n)
+      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
+        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
+          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
+  }
+
+  /** The map-only quality + language gate over a frame holding `text`,
+    * keeping that frame's columns — the batch chains' `gate` stage and
+    * the curation streams' first stage. */
+  private[graft] def qualityGate(df: DataFrame, minQuality: Double,
+                                 lang: Option[String]): DataFrame = {
+    val scored = TextAnalysis.qualityFeatures(df, col("text"))
+      .withColumn("lang_pred", TextAnalysis.langId(col("text")))
+    lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
+      (d, l) => d.filter(col("lang_pred") === l)
+    }.select(df.columns.map(col).toIndexedSeq: _*)
+  }
+
+  /** Stages 1-3, the head every chain shares: gate → (doc_id, text),
+    * exact dedup (min-id keeper per content hash), near-dup apply
+    * (survivors of the greedy MinHash-LSH drop, keeping (doc_id,
+    * text)). */
+  private def curation(id: Column, text: Column, minQuality: Double,
+                       lang: Option[String], minJaccard: Double,
+                       storage: StorageLevel): Seq[Stage] = Seq(
+    Stage("gate", docs => qualityGate(
+      docs.select(id.as("doc_id"), text.as("text")), minQuality, lang)),
+    Stage("exact_dedup", kept =>
+      kept.groupBy(md5(col("text")).as("__h"))
+        .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
+        .select("doc_id", "text")),
+    Stage("near_dup", { uniq =>
+      val pairs = TextDedup.minHashLshPairs(uniq, col("doc_id"),
+        col("text"), minJaccard, storage)
+      uniq.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+    }))
+
+  /** The decontamination stage a training corpus runs LAST: survivors
+    * sharing any word `n`-gram with the eval corpus are dropped
+    * ([[graft.dedup.Decontaminate.applyFilter]] — broadcast eval
+    * shingle set, map-only probe). */
+  private def decontam(eval: DataFrame, n: Int): Stage =
+    Stage("decontam", surv => graft.dedup.Decontaminate.applyFilter(
+      surv, eval, "doc_id", col("text"), n))
+
+  /** The model gate: keep survivors the classifier (`nbModel`,
+    * `nbPriors`) routes to `keepLabel` with margin >= `minMargin` — the
+    * production refinement of the heuristic gate (Brown et al. 2020
+    * §A2's quality-classifier shape: rule-gate first, a learned gate
+    * confirms). Scoring the pool is map-only plus one (doc, label)-keyed
+    * in-batch aggregation against the broadcast model. Docs the model
+    * has NO evidence for (all tokens out-of-vocabulary → no score row,
+    * or a null margin) drop: a selection gate admits on evidence, it
+    * does not pass on silence. */
+  private def modelGate(nbModel: DataFrame, nbPriors: DataFrame,
+                        keepLabel: String, minMargin: Double): Stage =
+    Stage("model_gate", { pool =>
+      val admitted = NaiveBayes.score(pool, col("doc_id"), col("text"),
+          nbModel, nbPriors)
+        .filter(col("pred") === keepLabel &&
+          col("margin").isNotNull && col("margin") >= minMargin)
+        .select("doc_id")
+      pool.join(admitted, Seq("doc_id"))
+    })
+
+  /** The DSIR select: keep the `k` pool docs a without-replacement
+    * ∝exp(weight) draw selects under the importance model `dsir(pool)`
+    * ([[Dsir.resampleWith]] — Xie et al. 2023's select-then-train step,
+    * deterministic Gumbel top-k riding the bounded-heap rewrite). The
+    * k-row selection broadcasts back onto the pool. `dsir` either
+    * builds the model from the pool ([[dsirModel]], the lifecycle form
+    * — together exactly [[Dsir.resample]]) or returns a frozen one. */
+  private def dsirSelect(dsir: DataFrame => DataFrame, k: Int): Stage =
+    Stage("dsir_select", pool => pool.join(
+      broadcast(Dsir.resampleWith(dsir(pool), pool, col("doc_id"),
+        col("text"), k).select("doc_id")),
+      Seq("doc_id")))
+
+  /** The DSIR importance model toward `target`'s domain, built from
+    * the pool the draw will score. */
+  private def dsirModel(target: DataFrame, text: Column): DataFrame => DataFrame =
+    pool => Dsir.model(target.select(text.as("text")), pool, col("text"))
 
   /** Run the pipeline; returns the surviving doc ids.
     *
@@ -40,42 +178,9 @@ object LlmCuration {
   def run(docs: DataFrame, id: Column, text: Column,
           minQuality: Double = 0.5, lang: Option[String] = Some("en"),
           minJaccard: Double = 0.1,
-          storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    // cached: feeds both the near-dup pair generation and the final
-    // left_anti — without it the gates + hash-dedup shuffle run twice
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    nearDupStage(uniq, minJaccard, storage).select("doc_id")
-  }
-
-  /** Stage 1: the map-only quality + language gate → (doc_id, text).
-    * Factored out so [[run]] and [[attritionReport]] cannot drift. */
-  private def gateStage(docs: DataFrame, id: Column, text: Column,
-                        minQuality: Double,
-                        lang: Option[String]): DataFrame = {
-    val base = docs.select(id.as("doc_id"), text.as("text"))
-    val scored = TextAnalysis.qualityFeatures(base, col("text"))
-      .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-    lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
-      (df, l) => df.filter(col("lang_pred") === l)
-    }.select("doc_id", "text")
-  }
-
-  /** Stage 2: exact dedup, min-id keeper per content hash. */
-  private def exactDedupStage(kept: DataFrame): DataFrame =
-    kept.groupBy(md5(col("text")).as("__h"))
-      .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
-      .select("doc_id", "text")
-
-  /** Stage 3: near-dup apply — survivors of the greedy MinHash-LSH
-    * drop, keeping (doc_id, text). */
-  private def nearDupStage(uniq: DataFrame, minJaccard: Double,
-                           storage: StorageLevel): DataFrame = {
-    val pairs = TextDedup.minHashLshPairs(uniq, col("doc_id"), col("text"),
-      minJaccard, storage)
-    uniq.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-  }
+          storage: StorageLevel = Caching.Default): DataFrame =
+    chain(docs, curation(id, text, minQuality, lang, minJaccard, storage),
+      storage).select("doc_id")
 
   /** Corpus report card — the per-source summary a data team reads
     * BEFORE choosing mixture weights (the decision input upstream of
@@ -116,112 +221,47 @@ object LlmCuration {
           col("n_docs").cast(DoubleType), 6))
   }
 
-  /** [[run]] plus the decontamination stage a training corpus runs
-    * LAST (stage 5): survivors sharing any word `n`-gram with the eval
-    * corpus are dropped ([[graft.dedup.Decontaminate.applyFilter]] —
-    * broadcast eval shingle set, map-only probe). Last because the
-    * probe then sees the smallest surviving corpus, and because eval
-    * membership must win over every retention decision: if the eval
-    * docs themselves ride in `docs` (the usual setup), they self-hit
-    * and drop here regardless of how curation ranked them.
-    *
-    * Lifecycle: the returned frame is lazy, so the persisted stage
-    * boundaries (uniq/surv) cannot be unpersisted here — the CALLER
-    * owns their lifecycle (the [[graft.Caching]] contract): pass
-    * `StorageLevel.NONE` to opt out in a long-lived session, or
-    * unpersist after the terminal action (the [[attritionReport]]
-    * family, which owns its actions, does exactly that). */
+  /** [[run]] plus the decontamination stage (stage 5). Last because
+    * the probe then sees the smallest surviving corpus, and because
+    * eval membership must win over every retention decision: if the
+    * eval docs themselves ride in `docs` (the usual setup), they
+    * self-hit and drop here regardless of how curation ranked them.
+    * Staged boundaries are caller-owned ([[chain]]). */
   def runDecontaminated(docs: DataFrame, eval: DataFrame,
                         id: Column, text: Column,
                         minQuality: Double = 0.5,
                         lang: Option[String] = Some("en"),
                         minJaccard: Double = 0.1, n: Int = 5,
-                        storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    // survivors carry their own (doc_id, text) — no join-back to the
-    // raw corpus; persisted because the decontaminate anti-join reads
-    // the frame twice (probe side + keep side)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    graft.dedup.Decontaminate.applyFilter(surv, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                        storage: StorageLevel = Caching.Default): DataFrame =
+    chain(docs, curation(id, text, minQuality, lang, minJaccard, storage) :+
+      decontam(eval, n), storage).select("doc_id")
 
-  /** Stage 4 (model gate): keep survivors the TRAINED classifier
-    * routes to `keepLabel` with margin >= `minMargin` — the
-    * production refinement of stage 1's heuristic gate (Brown et al.
-    * 2020 §A2's quality-classifier shape: rule-gate first, a learned
-    * gate confirms). The model and priors are trained ONCE on
-    * `labeled` (vocabulary/label-sized frames, broadcast by
-    * [[NaiveBayes.score]]); scoring the pool is map-only plus one
-    * (doc, label)-keyed in-batch aggregation. Docs the model has NO
-    * evidence for (all tokens out-of-vocabulary → no score row, or a
-    * null margin) drop: a selection gate admits on evidence, it does
-    * not pass on silence. Factored so [[runSelected]] and
-    * [[attritionReportSelected]] cannot drift. */
-  private def modelGateStage(pool: DataFrame, labeled: DataFrame,
-                             labeledText: Column, label: Column,
-                             keepLabel: String, minMargin: Double,
-                             storage: StorageLevel): DataFrame = {
-    val m = NaiveBayes.model(labeled, labeledText, label, storage)
-    val pri = NaiveBayes.priors(labeled, label)
-    modelGateApply(pool, m, pri, keepLabel, minMargin)
-  }
-
-  /** Stage 4 in its SERVING form: the model gate applied with a
-    * PRE-TRAINED (frozen) model + priors — the scoring half
-    * [[modelGateStage]] executes after training. Factored so the
-    * lifecycle form and the steady-state form cannot drift. */
-  private def modelGateApply(pool: DataFrame, nbModel: DataFrame,
-                             nbPriors: DataFrame, keepLabel: String,
-                             minMargin: Double): DataFrame = {
-    val admitted = NaiveBayes.score(pool, col("doc_id"), col("text"),
-        nbModel, nbPriors)
-      .filter(col("pred") === keepLabel &&
-        col("margin").isNotNull && col("margin") >= minMargin)
-      .select("doc_id")
-    pool.join(admitted, Seq("doc_id"))
-  }
-
-  /** Stage 5 (DSIR select): keep the `k` pool docs a without-
-    * replacement ∝exp(weight) draw selects toward `target`'s domain
-    * ([[Dsir.resample]] — Xie et al. 2023's select-then-train step,
-    * deterministic Gumbel top-k riding the bounded-heap rewrite).
-    * The k-row selection broadcasts back onto the pool. */
-  private def dsirSelectStage(pool: DataFrame, target: DataFrame,
-                              targetText: Column, k: Int): DataFrame =
-    pool.join(
-      broadcast(Dsir.resample(target.select(targetText.as("text")), pool,
-        col("doc_id"), col("text"), k).select("doc_id")),
-      Seq("doc_id"))
-
-  /** Stage 5 in its SERVING form: the DSIR draw under a PRE-BUILT
-    * (frozen) importance model — [[Dsir.resampleWith]] instead of the
-    * train-and-draw [[dsirSelectStage]]. Identical selection when the
-    * model was built from the same (target, pool) inputs. */
-  private def dsirSelectApply(pool: DataFrame, dsirModel: DataFrame,
-                              k: Int): DataFrame =
-    pool.join(
-      broadcast(Dsir.resampleWith(dsirModel, pool, col("doc_id"),
-        col("text"), k).select("doc_id")),
-      Seq("doc_id"))
+  /** The selection chain: curation → model gate → DSIR select →
+    * decontaminate, under either trained or frozen models. */
+  private def selection(eval: DataFrame, nbModel: DataFrame,
+                        nbPriors: DataFrame, dsir: DataFrame => DataFrame,
+                        id: Column, text: Column, keepLabel: String,
+                        minMargin: Double, k: Int, minQuality: Double,
+                        lang: Option[String], minJaccard: Double, n: Int,
+                        storage: StorageLevel): Seq[Stage] =
+    curation(id, text, minQuality, lang, minJaccard, storage) ++ Seq(
+      modelGate(nbModel, nbPriors, keepLabel, minMargin),
+      dsirSelect(dsir, k), decontam(eval, n))
 
   /** [[runDecontaminated]] grown into the full SELECTION pipeline a
     * training-data team actually ships (the brief's production shape):
-    * rule gate → exact dedup → near-dup → TRAINED model gate
-    * ([[modelGateStage]]) → DSIR importance selection
-    * ([[dsirSelectStage]]) → decontaminate. Decontamination stays
-    * LAST for [[runDecontaminated]]'s reason — eval membership must
-    * win over every retention decision, including the model's and the
+    * rule gate → exact dedup → near-dup → TRAINED model gate (NB
+    * model + priors trained ONCE on `labeled`) → DSIR importance
+    * selection → decontaminate. Decontamination stays LAST for
+    * [[runDecontaminated]]'s reason — eval membership must win over
+    * every retention decision, including the model's and the
     * sampler's. Returns the selected, decontaminated doc ids.
     *
     * Scale shape: every stage sees the smallest surviving corpus; the
     * model/priors and the DSIR bucket model are fixed-size broadcast
-    * frames, the k-row selection broadcasts back, and each stage
-    * boundary persists under `storage` so no stage's subtree
-    * re-executes across the chain's branches (caller-owned lifecycle —
-    * [[runDecontaminated]]'s note).
+    * frames, the k-row selection broadcasts back, and the staged
+    * boundaries keep any stage's subtree from re-executing across the
+    * chain's branches (caller-owned lifecycle — [[chain]]).
     *
     * @param labeled   labeled training docs for the model gate
     * @param target    target-domain docs for the DSIR weights
@@ -234,29 +274,21 @@ object LlmCuration {
                   k: Int,
                   minQuality: Double = 0.5, lang: Option[String] = Some("en"),
                   minJaccard: Double = 0.1, n: Int = 5,
-                  storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = Caching.staged(
-      modelGateStage(surv, labeled, text, label, keepLabel, minMargin,
-        storage), storage)
-    val sel = Caching.staged(
-      dsirSelectStage(gated, target, text, k), storage)
-    graft.dedup.Decontaminate.applyFilter(sel, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                  storage: StorageLevel = Caching.Default): DataFrame =
+    chain(docs, selection(eval, NaiveBayes.model(labeled, text, label, storage),
+      NaiveBayes.priors(labeled, label), dsirModel(target, text), id, text,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
+      storage).select("doc_id")
 
   /** The frozen artifacts [[runSelectedServing]] consumes — train ONCE
     * what [[runSelected]] re-trains per invocation: the NB (model,
     * priors) from `labeled`, and the DSIR importance model from
     * (`target`, the model-gated pool) — the DSIR raw side is the pool
     * the draw will score, so building it requires one pipeline pass
-    * through stage 4 (the build cost the steady-state leg amortizes).
-    * Returns (nbModel, nbPriors, dsirModel); all three are fixed-size
-    * broadcastable frames — persist AND materialize them before
-    * serving (the [[graft.streaming.SelectionPipelineStream]]
+    * through the model gate (the build cost the steady-state leg
+    * amortizes). Returns (nbModel, nbPriors, dsirModel); all three are
+    * fixed-size broadcastable frames — persist AND materialize them
+    * before serving (the [[graft.streaming.SelectionPipelineStream]]
     * contract: re-training any artifact is a new artifact). */
   def selectionArtifacts(docs: DataFrame, labeled: DataFrame,
                          target: DataFrame, id: Column, text: Column,
@@ -269,19 +301,13 @@ object LlmCuration {
       : (DataFrame, DataFrame, DataFrame) = {
     val m = NaiveBayes.model(labeled, text, label, storage)
     val pri = NaiveBayes.priors(labeled, label)
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = modelGateApply(surv, m, pri, keepLabel, minMargin)
-    val dsir = Dsir.model(target.select(text.as("text")), gated,
-      col("text"))
-    (m, pri, dsir)
+    val gated = chain(docs, curation(id, text, minQuality, lang, minJaccard,
+      storage) :+ modelGate(m, pri, keepLabel, minMargin), storage)
+    (m, pri, dsirModel(target, text)(gated))
   }
 
   /** [[runSelected]]'s STEADY-STATE serving leg (the e6/e6b split for
-    * the selection pipeline): the same gate → exact dedup → near-dup →
-    * model gate → DSIR select → decontaminate chain, but the NB model/
+    * the selection pipeline): the same stage list, but the NB model/
     * priors and the DSIR importance model arrive PRE-TRAINED
     * ([[selectionArtifacts]]) instead of being rebuilt in-plan — the
     * invocation only pays the per-corpus serving stages, which is the
@@ -292,13 +318,11 @@ object LlmCuration {
     * Output is IDENTICAL to [[runSelected]] when the artifacts were
     * built by [[selectionArtifacts]] from the same inputs: the NB
     * model depends only on `labeled`, the DSIR model only on
-    * (`target`, the stage-4 pool), and both pipelines apply the same
-    * factored stage functions — so the Gumbel top-k draw replays
+    * (`target`, the model-gated pool), and both pipelines run the same
+    * stage definitions — so the Gumbel top-k draw replays
     * bit-identically (no threshold approximation; the streaming form's
     * documented Gumbel-vs-threshold deviation does not apply here).
-    *
-    * Lifecycle: persisted stage boundaries follow
-    * [[runDecontaminated]]'s caller-owns contract. */
+    * Staged boundaries are caller-owned ([[chain]]). */
   def runSelectedServing(docs: DataFrame, eval: DataFrame,
                          nbModel: DataFrame, nbPriors: DataFrame,
                          dsirModel: DataFrame,
@@ -307,19 +331,10 @@ object LlmCuration {
                          minQuality: Double = 0.5,
                          lang: Option[String] = Some("en"),
                          minJaccard: Double = 0.1, n: Int = 5,
-                         storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = Caching.staged(
-      modelGateApply(surv, nbModel, nbPriors, keepLabel, minMargin),
-      storage)
-    val sel = Caching.staged(
-      dsirSelectApply(gated, dsirModel, k), storage)
-    graft.dedup.Decontaminate.applyFilter(sel, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                         storage: StorageLevel = Caching.Default): DataFrame =
+    chain(docs, selection(eval, nbModel, nbPriors, _ => dsirModel, id, text,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
+      storage).select("doc_id")
 
   /** [[attritionReportSelected]]'s steady-state twin: the same
     * per-stage ops log over [[runSelectedServing]]'s chain (frozen
@@ -334,47 +349,17 @@ object LlmCuration {
                              minQuality: Double = 0.5,
                              lang: Option[String] = Some("en"),
                              minJaccard: Double = 0.1, n: Int = 5,
-                             storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val gated = Caching.staged(
-      modelGateApply(surv, nbModel, nbPriors, keepLabel, minMargin),
+                             storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, selection(eval, nbModel, nbPriors, _ => dsirModel, id, text,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
       storage)
-    val nGated = gated.count()
-    val sel = Caching.staged(
-      dsirSelectApply(gated, dsirModel, k), storage)
-    val nSel = sel.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      sel, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv, gated, sel).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "model_gate", nSurv, nGated),
-        (5, "dsir_select", nGated, nSel),
-        (6, "decontam", nSel, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
 
   /** Per-stage attrition rows over [[runSelected]]'s chain — c5's
     * ops-log discipline extended to the selection stages (a model
     * gate suddenly eating 60% is a drifted model or a drifted feed;
     * dsir_select's n_out is k by construction unless the pool fell
-    * below k — both worth alarming on). Same factored stage
-    * functions; report and pipeline cannot drift. */
+    * below k — both worth alarming on; a fully-draining model gate is
+    * a legal, alarm-worthy outcome). */
   def attritionReportSelected(docs: DataFrame, eval: DataFrame,
                               labeled: DataFrame, target: DataFrame,
                               id: Column, text: Column, label: Column,
@@ -382,42 +367,11 @@ object LlmCuration {
                               minQuality: Double = 0.5,
                               lang: Option[String] = Some("en"),
                               minJaccard: Double = 0.1, n: Int = 5,
-                              storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val gated = Caching.staged(
-      modelGateStage(surv, labeled, text, label, keepLabel, minMargin,
-        storage), storage)
-    val nGated = gated.count()
-    val sel = Caching.staged(
-      dsirSelectStage(gated, target, text, k), storage)
-    val nSel = sel.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      sel, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv, gated, sel).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "model_gate", nSurv, nGated),
-        (5, "dsir_select", nGated, nSel),
-        (6, "decontam", nSel, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      // null, not 0/0, when an upstream stage emptied the corpus (a
-      // fully-draining model gate is a legal, alarm-worthy outcome)
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
+                              storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, selection(eval, NaiveBayes.model(labeled, text, label, storage),
+      NaiveBayes.priors(labeled, label), dsirModel(target, text), id, text,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
+      storage)
 
   /** The crawl front door's ops log — c3's raw-markup chain with the
     * d20 URL/domain blocklist gate composed as STAGE 0 (the
@@ -426,11 +380,8 @@ object LlmCuration {
     * corpus): url_gate → extract (docs whose boilerplate-stripped
     * extraction is empty drop — a nav-and-footer-only page carries no
     * trainable text) → quality/language gate → exact dedup → near-dup.
-    * Same per-stage persisted-count discipline as [[attritionReport]];
-    * the stages are the library operators themselves
-    * ([[graft.text.Urls.blocklistGate]], [[graft.text.Html.extract]],
-    * [[gateStage]]/[[exactDedupStage]]/[[nearDupStage]]) so report and
-    * pipeline cannot drift. */
+    * The two crawl stages are the library operators themselves
+    * ([[graft.text.Urls.blocklistGate]], [[graft.text.Html.extract]]). */
   def attritionReportCrawl(pages: DataFrame, id: Column, url: Column,
                            html: Column,
                            blockedDomains: Seq[String],
@@ -438,86 +389,31 @@ object LlmCuration {
                            minQuality: Double = 0.5,
                            lang: Option[String] = Some("en"),
                            minJaccard: Double = 0.1,
-                           storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val base = pages.select(id.as("doc_id"), url.as("url"), html.as("html"))
-    val nAll = base.count()
-    val verdict = graft.text.Urls.blocklistGate(base, col("doc_id"),
-      col("url"), blockedDomains, patternRules)
-    val allowed = Caching.staged(
-      base.join(verdict.filter(col("allowed")).select("doc_id"),
-        Seq("doc_id")), storage)
-    val nAllowed = allowed.count()
-    val extracted = Caching.staged(
-      graft.text.Html.extract(allowed, col("doc_id"), col("html"))
-        .select(col("doc_id"), col("extracted").as("text"))
-        .filter(length(col("text")) > 0), storage)
-    val nExtracted = extracted.count()
-    val kept = Caching.staged(
-      gateStage(extracted, col("doc_id"), col("text"), minQuality, lang),
+                           storage: StorageLevel = Caching.Default): DataFrame =
+    report(pages.select(id.as("doc_id"), url.as("url"), html.as("html")),
+      Seq(
+        Stage("url_gate", base => base.join(
+          graft.text.Urls.blocklistGate(base, col("doc_id"), col("url"),
+            blockedDomains, patternRules).filter(col("allowed"))
+            .select("doc_id"),
+          Seq("doc_id"))),
+        Stage("extract", allowed =>
+          graft.text.Html.extract(allowed, col("doc_id"), col("html"))
+            .select(col("doc_id"), col("extracted").as("text"))
+            .filter(length(col("text")) > 0))) ++
+        curation(col("doc_id"), col("text"), minQuality, lang, minJaccard,
+          storage),
       storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    Seq(allowed, extracted, kept, uniq, surv).foreach(_.unpersist())
-    Seq((1, "url_gate", nAll, nAllowed),
-        (2, "extract", nAllowed, nExtracted),
-        (3, "gate", nExtracted, nKept),
-        (4, "exact_dedup", nKept, nUniq),
-        (5, "near_dup", nUniq, nSurv))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
 
-  /** Per-stage attrition report over [[runDecontaminated]]'s chain —
-    * the ops log every curation run emits (HOW MUCH did each stage
-    * drop; a gate suddenly eating 40% instead of 4% is a feed
-    * regression, a near-dup stage dropping ~0% says the corpus was
-    * already deduped upstream): one row per stage with rows in / rows
-    * out / drop fraction, stages the EXACT same factored functions
-    * [[run]] executes ([[gateStage]]/[[exactDedupStage]]/
-    * [[nearDupStage]] — report and pipeline cannot drift).
-    *
-    * The four counts are control-plane one-row aggregates (the
-    * [[Medallion.run]] metrics pattern); each intermediate is
-    * persisted so a stage's corpus is computed once and fed to both
-    * its count and the next stage. drop_frac is one IEEE division of
-    * exact longs, rounded 6 dp. */
+  /** Per-stage attrition report over [[runDecontaminated]]'s chain:
+    * one row per stage (gate, exact_dedup, near_dup, decontam) with
+    * rows in / rows out / drop fraction ([[report]]). */
   def attritionReport(docs: DataFrame, eval: DataFrame,
                       id: Column, text: Column,
                       minQuality: Double = 0.5,
                       lang: Option[String] = Some("en"),
                       minJaccard: Double = 0.1, n: Int = 5,
-                      storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      surv, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "decontam", nSurv, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      // §6 quantizer (Quantize scaladoc): engine-identical at the
-      // half boundary, unlike round(double, n)
-      .withColumn("drop_frac", graft.functions.Quantize.qdp(lit(1.0) -
-        col("n_out").cast("double") / col("n_in").cast("double"), 6))
-  }
+                      storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, curation(id, text, minQuality, lang, minJaccard, storage) :+
+      decontam(eval, n), storage)
 }

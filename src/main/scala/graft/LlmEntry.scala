@@ -117,6 +117,18 @@ object LlmEntry {
         col("doc_id"), col("text"), name, buckets = 8)
     }
 
+  /** The c-family's inputs over `documents`, each written once: the
+    * eval slice the decontaminating keys drop, the NB training split
+    * and the DSIR target domain. c6/c7 train on them in-plan and
+    * c6b/c7b's artifacts are trained on them once, so c6b is identical
+    * to c6 by construction; the oracle SQL states them independently. */
+  private def evalSlice(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 25 === 0)
+  private def labeledSplit(docs: DataFrame): DataFrame =
+    docs.filter(Sampling.hashBucket(col("doc_id"), 5) =!= 0)
+  private def dsirTarget(docs: DataFrame): DataFrame =
+    docs.filter(col("source").isin("src0", "src1"))
+
   /** c6b/c7b's frozen selection artifacts (NB model+priors, DSIR
     * importance model), trained ONCE per (warehouse, sf dir) with c6's
     * exact inputs and committed to the versioned store — the e6b move
@@ -147,8 +159,7 @@ object LlmEntry {
     val p = SelectionArtifactStore.ensure(s, name, complete = 0) {
       val docs = t(s, dir, "documents")
       val (m, pri, dsir) = LlmCuration.selectionArtifacts(docs,
-        docs.filter(Sampling.hashBucket(col("doc_id"), 5) =!= 0),
-        docs.filter(col("source").isin("src0", "src1")),
+        labeledSplit(docs), dsirTarget(docs),
         col("doc_id"), col("text"), col("lang"),
         keepLabel = "en", minMargin = 1.0,
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
@@ -352,8 +363,7 @@ object LlmEntry {
       // exact dedup -> near-dup apply -> decontaminate vs the %25 eval
       // slice (whose members ride in docs and must drop themselves)
       val docs = t(s, dir, "documents")
-      LlmCuration.runDecontaminated(docs,
-        docs.filter(col("doc_id") % 25 === 0),
+      LlmCuration.runDecontaminated(docs, evalSlice(docs),
         col("doc_id"), col("text"),
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
     }),
@@ -361,11 +371,10 @@ object LlmEntry {
     "c5_attrition_report" -> ((s, dir) => {
       // c2's chain as the per-stage ops log: rows in/out + drop
       // fraction per stage (gate, exact dedup, near-dup, decontam) —
-      // the stages are run()'s own factored functions, so report and
+      // the stages are run()'s own stage definitions, so report and
       // pipeline cannot drift
       val docs = t(s, dir, "documents")
-      LlmCuration.attritionReport(docs,
-        docs.filter(col("doc_id") % 25 === 0),
+      LlmCuration.attritionReport(docs, evalSlice(docs),
         col("doc_id"), col("text"),
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
     }),
@@ -378,10 +387,8 @@ object LlmEntry {
       // slice, still last — eval membership wins over every retention
       // decision including the model's and the sampler's
       val docs = t(s, dir, "documents")
-      LlmCuration.runSelected(docs,
-        docs.filter(col("doc_id") % 25 === 0),
-        docs.filter(Sampling.hashBucket(col("doc_id"), 5) =!= 0),
-        docs.filter(col("source").isin("src0", "src1")),
+      LlmCuration.runSelected(docs, evalSlice(docs),
+        labeledSplit(docs), dsirTarget(docs),
         col("doc_id"), col("text"), col("lang"),
         keepLabel = "en", minMargin = 1.0, k = 100,
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
@@ -393,10 +400,8 @@ object LlmEntry {
       // model or feed; dsir_select's n_out is k unless the pool fell
       // below it
       val docs = t(s, dir, "documents")
-      LlmCuration.attritionReportSelected(docs,
-        docs.filter(col("doc_id") % 25 === 0),
-        docs.filter(Sampling.hashBucket(col("doc_id"), 5) =!= 0),
-        docs.filter(col("source").isin("src0", "src1")),
+      LlmCuration.attritionReportSelected(docs, evalSlice(docs),
+        labeledSplit(docs), dsirTarget(docs),
         col("doc_id"), col("text"), col("lang"),
         keepLabel = "en", minMargin = 1.0, k = 100,
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
@@ -409,14 +414,14 @@ object LlmEntry {
       // every later invocation only runs the serving stages — gate ->
       // dedup -> near-dup flag -> frozen model route -> frozen-model
       // Gumbel draw -> decontam. Output is identical to c6 by
-      // construction (same factored stages, artifacts built from the
-      // same inputs — the draw replays bit-identically), so both share
-      // one oracle; the bench number is the quotable serving latency,
-      // c6 keeps timing the full train+select lifecycle.
+      // construction (same stage definitions, artifacts trained on the
+      // same c-family inputs — the draw replays bit-identically), so
+      // both share one oracle; the bench number is the quotable
+      // serving latency, c6 keeps timing the full train+select
+      // lifecycle.
       val docs = t(s, dir, "documents")
       val a = ensureSelectionArtifacts(s, dir)
-      LlmCuration.runSelectedServing(docs,
-        docs.filter(col("doc_id") % 25 === 0),
+      LlmCuration.runSelectedServing(docs, evalSlice(docs),
         a.nbModel, a.nbPriors, a.dsirModel,
         col("doc_id"), col("text"),
         keepLabel = "en", minMargin = 1.0, k = 100,
@@ -429,8 +434,7 @@ object LlmEntry {
       // construction (shared oracle), latency without the train
       val docs = t(s, dir, "documents")
       val a = ensureSelectionArtifacts(s, dir)
-      LlmCuration.attritionReportServing(docs,
-        docs.filter(col("doc_id") % 25 === 0),
+      LlmCuration.attritionReportServing(docs, evalSlice(docs),
         a.nbModel, a.nbPriors, a.dsirModel,
         col("doc_id"), col("text"),
         keepLabel = "en", minMargin = 1.0, k = 100,

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.dedup.TextDedup
 import graft.sources.SnapshotStore
-import graft.text.TextAnalysis
 
 /** Streaming curation: flag documents arriving on a stream that are
   * near-dup candidates of an EXISTING corpus — the streaming leg of
@@ -49,42 +48,50 @@ object CurationStream {
           corpusIndex: DataFrame, targetDir: String, checkpointDir: String,
           minQuality: Double = 0.5, lang: Option[String] = Some("en"),
           watermark: String = "1 hour", ts: Column = col("ts")): StreamingQuery = {
-    val base = stream.select(id.as("doc_id"), text.as("text"), ts.as("ts"))
-    val scored = TextAnalysis.qualityFeatures(base, col("text"))
-      .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-    val kept = lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
-      (df, l) => df.filter(col("lang_pred") === l)
-    }.select("doc_id", "text", "ts")
-    val deduped = kept
+    val kept = graft.LlmCuration.qualityGate(
+      stream.select(id.as("doc_id"), text.as("text"), ts.as("ts")),
+      minQuality, lang)
+    // the band-hit count is an aggregation, which would be a SECOND
+    // stateful op on the stream; inside foreachBatch the micro-batch
+    // is a plain frame, so the probe + count run stateless per batch
+    dedupAndMerge(kept, watermark, targetDir, checkpointDir) { b =>
+      b.join(nearDupFlagStream(b, col("doc_id"), col("text"), corpusIndex)
+          .groupBy("doc_id").agg(count(lit(1)).as("n_band_hits")),
+        Seq("doc_id"), "left")
+        .na.fill(0L, Seq("n_band_hits"))
+    }
+  }
+
+  /** The curation streams' shared tail: watermark-bounded exact content
+    * dedup of `kept` (doc_id, text, ts) — the one stateful op — then a
+    * foreachBatch sink that MERGEs `route(batch)` into the versioned
+    * [[SnapshotStore]] at `targetDir` keyed on doc_id. */
+  private[streaming] def dedupAndMerge(kept: DataFrame, watermark: String,
+                                       targetDir: String,
+                                       checkpointDir: String)
+                                      (route: DataFrame => DataFrame)
+      : StreamingQuery =
+    kept
       .withColumn("__h", md5(col("text")))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("__h")
       .drop("__h")
-    // the band-hit count is an aggregation, which would be a SECOND
-    // stateful op on the stream; inside foreachBatch the micro-batch
-    // is a plain frame, so the probe + count run stateless per batch.
-    // The batch MUST be persisted before the self-join: the foreachBatch
-    // frame wraps the micro-batch PLAN (including the stateful dedup),
-    // so referencing it from two join branches re-executes that
-    // stateful subtree twice per batch — double state-store work and
-    // two commits of the same state version (StreamBench measured the
-    // dedup operator's state metrics doubled before this persist).
-    deduped.writeStream
+      .writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        // The batch MUST be persisted before `route` reads it from
+        // several branches: the foreachBatch frame wraps the micro-batch
+        // PLAN (including the stateful dedup), so referencing it from two
+        // join branches re-executes that stateful subtree twice per
+        // batch — double state-store work and two commits of the same
+        // state version (StreamBench measured the dedup operator's state
+        // metrics doubled before this persist).
         val b = batch.persist()
-        try {
-          val flagged = b
-            .join(nearDupFlagStream(b, col("doc_id"), col("text"), corpusIndex)
-                .groupBy("doc_id").agg(count(lit(1)).as("n_band_hits")),
-              Seq("doc_id"), "left")
-            .na.fill(0L, Seq("n_band_hits"))
-          SnapshotStore.mergeInto(flagged, targetDir, Seq("doc_id")): Unit
-        } finally { b.unpersist(): Unit }
+        try SnapshotStore.mergeInto(route(b), targetDir, Seq("doc_id")): Unit
+        finally { b.unpersist(): Unit }
       }
       .start()
-  }
 
   /** Contamination hits of `stream` docs against a static eval corpus:
     * (doc_id, s) per shared word n-gram — the streaming leg of

@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.SnapshotStore
-import graft.text.{Dsir, NaiveBayes, TextAnalysis}
+import graft.text.{Dsir, NaiveBayes}
 
 /** The c6 selection pipeline served as ONE composed stream — the
   * production serving shape ([[CurationStream]], [[ClassifyStream]]
@@ -136,34 +135,15 @@ object SelectionPipelineStream {
     // stage 1: the map-only quality + language gate (CurationStream's
     // stream section — gates run first so the stateful dedup and every
     // scorer see the smallest surviving stream)
-    val base = stream.select(id.as("doc_id"), text.as("text"), ts.as("ts"))
-    val scored = TextAnalysis.qualityFeatures(base, col("text"))
-      .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-    val kept = lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
-      (df, l) => df.filter(col("lang_pred") === l)
-    }.select("doc_id", "text", "ts")
-    // stage 2: watermark-bounded exact content dedup (the one stateful op)
-    val deduped = kept
-      .withColumn("__h", md5(col("text")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("__h")
-      .drop("__h", "ts")
-    // stages 3-6 run stateless per micro-batch; the batch MUST persist
-    // before routeBatch's multi-branch reads — un-persisted, each join
-    // branch re-executes the stateful dedup subtree (the foreachBatch
-    // hazard, measured in StreamBench for CurationStream)
-    deduped.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try SnapshotStore.mergeInto(
-          routeBatch(b, corpusIndex, evalCorpus, evalText, nbModel,
-            nbPriors, dsirModel, keepLabel, minMargin, minWeight,
-            n, buckets, ngrams),
-          targetDir, Seq("doc_id")): Unit
-        finally { b.unpersist(): Unit }
-      }
-      .start()
+    val kept = graft.LlmCuration.qualityGate(
+      stream.select(id.as("doc_id"), text.as("text"), ts.as("ts")),
+      minQuality, lang)
+    // stage 2: watermark-bounded exact content dedup (the one stateful
+    // op); stages 3-6 run stateless per persisted micro-batch, and
+    // routeBatch's per-doc collapse leaves ts out of the routed rows
+    CurationStream.dedupAndMerge(kept, watermark, targetDir, checkpointDir) {
+      routeBatch(_, corpusIndex, evalCorpus, evalText, nbModel, nbPriors,
+        dsirModel, keepLabel, minMargin, minWeight, n, buckets, ngrams)
+    }
   }
 }

@@ -213,7 +213,7 @@ object Dsir {
     val pool = raw.select(id.as("doc_id"), text.as("text"),
       source.as("source"))
     // project target under the caller's text column too (the
-    // dsirSelectStage contract) — an unprojected pass-through would
+    // dsir_select stage contract) — an unprojected pass-through would
     // demand a literal 'text' column on target
     val sel = resample(target.select(text.as("text")), pool,
       col("doc_id"), col("text"), k, buckets, ngrams)

@@ -173,6 +173,57 @@ class CurationOpsSpec extends SparkSpec {
     } finally Seq(m, pri, dsir).foreach(_.unpersist(): Unit)
   }
 
+  test("attrition reports: a gate that drains the corpus yields null " +
+    "drop_frac rows, not a division by zero") {
+    val docs = table("documents")
+    val eval = docs.filter(col("doc_id") % 25 === 0)
+    val labeled = docs.filter(
+      graft.operators.Sampling.hashBucket(col("doc_id"), 5) =!= 0)
+    val target = docs.filter(col("source").isin("src0", "src1"))
+    val (m, pri, dsir) = graft.LlmCuration.selectionArtifacts(docs,
+      labeled, target, col("doc_id"), col("text"), col("lang"),
+      keepLabel = "en", minMargin = 1.0)
+    Seq(m, pri, dsir).foreach(_.persist().count())
+    // no document is identified as "xx": the gate drops everything
+    val drained = Some("xx")
+    try {
+      val reports = Seq(
+        "attritionReport" -> graft.LlmCuration.attritionReport(docs, eval,
+          col("doc_id"), col("text"), lang = drained),
+        "attritionReportSelected" -> graft.LlmCuration.attritionReportSelected(
+          docs, eval, labeled, target, col("doc_id"), col("text"),
+          col("lang"), keepLabel = "en", minMargin = 1.0, k = 20,
+          lang = drained),
+        "attritionReportServing" -> graft.LlmCuration.attritionReportServing(
+          docs, eval, m, pri, dsir, col("doc_id"), col("text"),
+          keepLabel = "en", minMargin = 1.0, k = 20, lang = drained),
+        "attritionReportCrawl" -> graft.LlmCuration.attritionReportCrawl(
+          docs.withColumn("url", concat(lit("https://site.example/d/"),
+              col("doc_id").cast("string")))
+            .withColumn("html", concat(lit("<p>"), col("text"), lit("</p>"))),
+          col("doc_id"), col("url"), col("html"),
+          blockedDomains = Seq("blocked.example"), patternRules = Nil,
+          lang = drained))
+      val stageCounts = Map("attritionReport" -> 4,
+        "attritionReportSelected" -> 6, "attritionReportServing" -> 6,
+        "attritionReportCrawl" -> 5)
+      reports.foreach { case (name, df) =>
+        val rows = df.orderBy("stage_no").collect()
+        assert(rows.length === stageCounts(name), s"$name lost rows")
+        val gate = rows.indexWhere(_.getString(1) == "gate")
+        assert(rows(gate).getLong(2) > 0 && rows(gate).getLong(3) === 0L,
+          s"$name: the gate must drain a non-empty corpus")
+        assert(rows(gate).getDouble(4) === 1.0, s"$name: gate drop_frac")
+        rows.drop(gate + 1).foreach { r =>
+          assert(r.getLong(2) === 0L && r.getLong(3) === 0L,
+            s"$name: ${r.getString(1)} saw rows after the drain")
+          assert(r.isNullAt(4),
+            s"$name: ${r.getString(1)} drop_frac must be null on no input")
+        }
+      }
+    } finally Seq(m, pri, dsir).foreach(_.unpersist(): Unit)
+  }
+
   test("runSelected plan: broadcast model scoring, bounded-heap selection") {
     val docs = table("documents")
     // storage = NONE opts out of the stage-boundary plan truncation
