@@ -1,31 +1,30 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** Cache policy knob for operators whose returned (lazy) frame reads
-  * an intermediate several times — pair generators, k-means corpora.
+/** The one cache policy for operators whose returned (lazy) frame
+  * reads an intermediate several times — pair generators, k-means
+  * corpora, curation stage boundaries.
   *
-  * Those operators cannot unpersist what they cache (the consumer
-  * hasn't run yet), so a long-lived multi-tenant session needs a way
-  * to opt out instead of churning the block manager: pass
-  * `StorageLevel.NONE` to skip caching entirely (plans recompute
-  * shared branches), or any explicit level (e.g. `DISK_ONLY`) to
-  * bound memory. The default matches `Dataset.cache()`. Streaming
-  * frames are never persisted (unsupported by Spark).
+  * The level is Spark's own session conf
+  * `spark.sql.defaultCacheStorageLevel` (`MEMORY_AND_DISK` unless the
+  * session sets another), read by the no-argument `Dataset.persist()`.
+  * Such operators cannot unpersist what they cache — the consumer
+  * hasn't run yet — so the lifetime of a lazy operator's caches
+  * belongs to the caller: `unpersist` the frames it holds, or
+  * `spark.catalog.clearCache()` after the terminal action (as Bench
+  * does between passes). Streaming frames are never persisted
+  * (unsupported by Spark).
   */
 object Caching {
-  /** Same level `Dataset.cache()` uses. */
-  val Default: StorageLevel = StorageLevel.MEMORY_AND_DISK
-
-  def persisted(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE || df.isStreaming) df else df.persist(level)
+  def persisted(df: DataFrame): DataFrame =
+    if (df.isStreaming) df else df.persist()
 
   /** Stage-boundary form of [[persisted]] for DEEP multi-stage
     * pipelines (the curation chains): persist the frame AND truncate
     * its logical plan (lazy `localCheckpoint` — computation still
-    * deferred to first use, blocks held at [[Default]] level). A
-    * plain persist leaves the full upstream tree in every downstream
+    * deferred to first use, blocks held at the session cache level).
+    * A plain persist leaves the full upstream tree in every downstream
     * plan, and a stage containing a self-join duplicates that entire
     * subtree PER REFERENCE — so an N-stage chain's final action hands
     * Catalyst an exponentially-unfolded tree (measured: the c6
@@ -47,13 +46,11 @@ object Caching {
     * checkpoint blocks) — bounded by the pipeline's working set, the
     * price of O(stages) planning instead of O(2^stages).
     *
-    * Same caller-owned lifecycle as [[persisted]]; `NONE` opts out of
-    * storage and truncation both (the plan-recompute semantics some
-    * long-lived sessions prefer). Unlike [[persisted]], a lost
-    * executor means recomputing the QUERY, not the block — acceptable
-    * for bounded pipeline runs, wrong for frames that must survive
-    * partial cluster loss (keep [[persisted]] there). */
-  def staged(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE || df.isStreaming) df
-    else persisted(df, level).localCheckpoint(eager = false)
+    * Same caller-owned lifecycle as [[persisted]]. Unlike
+    * [[persisted]], a lost executor means recomputing the QUERY, not
+    * the block — acceptable for bounded pipeline runs, wrong for
+    * frames that must survive partial cluster loss (keep
+    * [[persisted]] there). */
+  def staged(df: DataFrame): DataFrame =
+    if (df.isStreaming) df else persisted(df).localCheckpoint(eager = false)
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.dedup.TextDedup
 import graft.text.{Dsir, NaiveBayes, TextAnalysis}
@@ -39,20 +38,18 @@ import graft.text.{Dsir, NaiveBayes, TextAnalysis}
 object LlmCuration {
 
   /** A named curation stage; the name is its attrition-report row. */
-  private final case class Stage(name: String, run: DataFrame => DataFrame)
+  private[graft] final case class Stage(name: String, run: DataFrame => DataFrame)
 
   /** Run `stages` over `in`; returns the last stage's lazy output.
     * Lifecycle: the staged boundaries cannot be unpersisted here — the
-    * CALLER owns them (the [[graft.Caching]] contract): pass
-    * `StorageLevel.NONE` to opt out in a long-lived session, or
-    * unpersist after the terminal action ([[report]] does exactly
-    * that). */
-  private def chain(in: DataFrame, stages: Seq[Stage],
-                    storage: StorageLevel): DataFrame =
+    * CALLER owns them (the [[graft.Caching]] contract): unpersist them
+    * or `spark.catalog.clearCache()` after the terminal action
+    * ([[report]] unpersists its own). */
+  private def chain(in: DataFrame, stages: Seq[Stage]): DataFrame =
     stages.zipWithIndex.foldLeft(in) { case (df, (st, i)) =>
       val out = st.run(df)
       // the gate's output feeds one aggregate, the last only the caller
-      if (i == 0 || i == stages.size - 1) out else Caching.staged(out, storage)
+      if (i == 0 || i == stages.size - 1) out else Caching.staged(out)
     }
 
   /** Per-stage attrition rows (stage_no, stage, n_in, n_out, drop_frac)
@@ -64,8 +61,7 @@ object LlmCuration {
     * staged boundaries are unpersisted once every count is in.
     * drop_frac is one IEEE division of exact longs, rounded 6 dp, and
     * null, not 0/0, once an upstream stage emptied the corpus. */
-  private def report(in: DataFrame, stages: Seq[Stage],
-                     storage: StorageLevel): DataFrame = {
+  private def report(in: DataFrame, stages: Seq[Stage]): DataFrame = {
     val spark = in.sparkSession
     import spark.implicits._
     val last = stages.size - 1
@@ -74,7 +70,7 @@ object LlmCuration {
       case ((df, _), (st, i)) =>
         // all but the last feed both their count and the next stage
         val out =
-          if (i < last) Caching.staged(st.run(df), storage) else st.run(df)
+          if (i < last) Caching.staged(st.run(df)) else st.run(df)
         (out, out.count())
     }
     steps.slice(1, last + 1).foreach(_._1.unpersist())
@@ -105,8 +101,7 @@ object LlmCuration {
     * (survivors of the greedy MinHash-LSH drop, keeping (doc_id,
     * text)). */
   private def curation(id: Column, text: Column, minQuality: Double,
-                       lang: Option[String], minJaccard: Double,
-                       storage: StorageLevel): Seq[Stage] = Seq(
+                       lang: Option[String], minJaccard: Double): Seq[Stage] = Seq(
     Stage("gate", docs => qualityGate(
       docs.select(id.as("doc_id"), text.as("text")), minQuality, lang)),
     Stage("exact_dedup", kept =>
@@ -115,7 +110,7 @@ object LlmCuration {
         .select("doc_id", "text")),
     Stage("near_dup", { uniq =>
       val pairs = TextDedup.minHashLshPairs(uniq, col("doc_id"),
-        col("text"), minJaccard, storage)
+        col("text"), minJaccard)
       uniq.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
     }))
@@ -163,7 +158,7 @@ object LlmCuration {
 
   /** The DSIR importance model toward `target`'s domain, built from
     * the pool the draw will score. */
-  private def dsirModel(target: DataFrame, text: Column): DataFrame => DataFrame =
+  private[graft] def dsirModel(target: DataFrame, text: Column): DataFrame => DataFrame =
     pool => Dsir.model(target.select(text.as("text")), pool, col("text"))
 
   /** Run the pipeline; returns the surviving doc ids.
@@ -173,14 +168,14 @@ object LlmCuration {
     * @param lang        keep only docs identified as this language
     *                    (None = no language gate)
     * @param minJaccard  near-dup threshold for the MinHash stage
-    * @param storage     cache level for the operator-internal frames
-    *                    (see [[Caching]]; NONE disables caching) */
+    *
+    * Operator-internal frames persist at the session cache level; the
+    * caller owns their lifetime ([[Caching]]). */
   def run(docs: DataFrame, id: Column, text: Column,
           minQuality: Double = 0.5, lang: Option[String] = Some("en"),
-          minJaccard: Double = 0.1,
-          storage: StorageLevel = Caching.Default): DataFrame =
-    chain(docs, curation(id, text, minQuality, lang, minJaccard, storage),
-      storage).select("doc_id")
+          minJaccard: Double = 0.1): DataFrame =
+    chain(docs, curation(id, text, minQuality, lang, minJaccard))
+      .select("doc_id")
 
   /** Corpus report card — the per-source summary a data team reads
     * BEFORE choosing mixture weights (the decision input upstream of
@@ -231,20 +226,18 @@ object LlmCuration {
                         id: Column, text: Column,
                         minQuality: Double = 0.5,
                         lang: Option[String] = Some("en"),
-                        minJaccard: Double = 0.1, n: Int = 5,
-                        storage: StorageLevel = Caching.Default): DataFrame =
-    chain(docs, curation(id, text, minQuality, lang, minJaccard, storage) :+
-      decontam(eval, n), storage).select("doc_id")
+                        minJaccard: Double = 0.1, n: Int = 5): DataFrame =
+    chain(docs, curation(id, text, minQuality, lang, minJaccard) :+
+      decontam(eval, n)).select("doc_id")
 
   /** The selection chain: curation → model gate → DSIR select →
     * decontaminate, under either trained or frozen models. */
-  private def selection(eval: DataFrame, nbModel: DataFrame,
-                        nbPriors: DataFrame, dsir: DataFrame => DataFrame,
-                        id: Column, text: Column, keepLabel: String,
-                        minMargin: Double, k: Int, minQuality: Double,
-                        lang: Option[String], minJaccard: Double, n: Int,
-                        storage: StorageLevel): Seq[Stage] =
-    curation(id, text, minQuality, lang, minJaccard, storage) ++ Seq(
+  private[graft] def selection(eval: DataFrame, nbModel: DataFrame,
+      nbPriors: DataFrame, dsir: DataFrame => DataFrame, id: Column,
+      text: Column, keepLabel: String, minMargin: Double, k: Int,
+      minQuality: Double, lang: Option[String], minJaccard: Double,
+      n: Int): Seq[Stage] =
+    curation(id, text, minQuality, lang, minJaccard) ++ Seq(
       modelGate(nbModel, nbPriors, keepLabel, minMargin),
       dsirSelect(dsir, k), decontam(eval, n))
 
@@ -273,12 +266,11 @@ object LlmCuration {
                   label: Column, keepLabel: String, minMargin: Double,
                   k: Int,
                   minQuality: Double = 0.5, lang: Option[String] = Some("en"),
-                  minJaccard: Double = 0.1, n: Int = 5,
-                  storage: StorageLevel = Caching.Default): DataFrame =
-    chain(docs, selection(eval, NaiveBayes.model(labeled, text, label, storage),
+                  minJaccard: Double = 0.1, n: Int = 5): DataFrame =
+    chain(docs, selection(eval, NaiveBayes.model(labeled, text, label),
       NaiveBayes.priors(labeled, label), dsirModel(target, text), id, text,
-      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
-      storage).select("doc_id")
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n))
+      .select("doc_id")
 
   /** The frozen artifacts [[runSelectedServing]] consumes — train ONCE
     * what [[runSelected]] re-trains per invocation: the NB (model,
@@ -296,13 +288,12 @@ object LlmCuration {
                          minMargin: Double,
                          minQuality: Double = 0.5,
                          lang: Option[String] = Some("en"),
-                         minJaccard: Double = 0.1,
-                         storage: StorageLevel = Caching.Default)
+                         minJaccard: Double = 0.1)
       : (DataFrame, DataFrame, DataFrame) = {
-    val m = NaiveBayes.model(labeled, text, label, storage)
+    val m = NaiveBayes.model(labeled, text, label)
     val pri = NaiveBayes.priors(labeled, label)
-    val gated = chain(docs, curation(id, text, minQuality, lang, minJaccard,
-      storage) :+ modelGate(m, pri, keepLabel, minMargin), storage)
+    val gated = chain(docs, curation(id, text, minQuality, lang, minJaccard) :+
+      modelGate(m, pri, keepLabel, minMargin))
     (m, pri, dsirModel(target, text)(gated))
   }
 
@@ -330,11 +321,10 @@ object LlmCuration {
                          keepLabel: String, minMargin: Double, k: Int,
                          minQuality: Double = 0.5,
                          lang: Option[String] = Some("en"),
-                         minJaccard: Double = 0.1, n: Int = 5,
-                         storage: StorageLevel = Caching.Default): DataFrame =
+                         minJaccard: Double = 0.1, n: Int = 5): DataFrame =
     chain(docs, selection(eval, nbModel, nbPriors, _ => dsirModel, id, text,
-      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
-      storage).select("doc_id")
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n))
+      .select("doc_id")
 
   /** [[attritionReportSelected]]'s steady-state twin: the same
     * per-stage ops log over [[runSelectedServing]]'s chain (frozen
@@ -348,11 +338,9 @@ object LlmCuration {
                              keepLabel: String, minMargin: Double, k: Int,
                              minQuality: Double = 0.5,
                              lang: Option[String] = Some("en"),
-                             minJaccard: Double = 0.1, n: Int = 5,
-                             storage: StorageLevel = Caching.Default): DataFrame =
+                             minJaccard: Double = 0.1, n: Int = 5): DataFrame =
     report(docs, selection(eval, nbModel, nbPriors, _ => dsirModel, id, text,
-      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
-      storage)
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n))
 
   /** Per-stage attrition rows over [[runSelected]]'s chain — c5's
     * ops-log discipline extended to the selection stages (a model
@@ -366,12 +354,10 @@ object LlmCuration {
                               keepLabel: String, minMargin: Double, k: Int,
                               minQuality: Double = 0.5,
                               lang: Option[String] = Some("en"),
-                              minJaccard: Double = 0.1, n: Int = 5,
-                              storage: StorageLevel = Caching.Default): DataFrame =
-    report(docs, selection(eval, NaiveBayes.model(labeled, text, label, storage),
+                              minJaccard: Double = 0.1, n: Int = 5): DataFrame =
+    report(docs, selection(eval, NaiveBayes.model(labeled, text, label),
       NaiveBayes.priors(labeled, label), dsirModel(target, text), id, text,
-      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
-      storage)
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n))
 
   /** The crawl front door's ops log — c3's raw-markup chain with the
     * d20 URL/domain blocklist gate composed as STAGE 0 (the
@@ -388,8 +374,7 @@ object LlmCuration {
                            patternRules: Seq[(String, String)],
                            minQuality: Double = 0.5,
                            lang: Option[String] = Some("en"),
-                           minJaccard: Double = 0.1,
-                           storage: StorageLevel = Caching.Default): DataFrame =
+                           minJaccard: Double = 0.1): DataFrame =
     report(pages.select(id.as("doc_id"), url.as("url"), html.as("html")),
       Seq(
         Stage("url_gate", base => base.join(
@@ -401,9 +386,7 @@ object LlmCuration {
           graft.text.Html.extract(allowed, col("doc_id"), col("html"))
             .select(col("doc_id"), col("extracted").as("text"))
             .filter(length(col("text")) > 0))) ++
-        curation(col("doc_id"), col("text"), minQuality, lang, minJaccard,
-          storage),
-      storage)
+        curation(col("doc_id"), col("text"), minQuality, lang, minJaccard))
 
   /** Per-stage attrition report over [[runDecontaminated]]'s chain:
     * one row per stage (gate, exact_dedup, near_dup, decontam) with
@@ -412,8 +395,7 @@ object LlmCuration {
                       id: Column, text: Column,
                       minQuality: Double = 0.5,
                       lang: Option[String] = Some("en"),
-                      minJaccard: Double = 0.1, n: Int = 5,
-                      storage: StorageLevel = Caching.Default): DataFrame =
-    report(docs, curation(id, text, minQuality, lang, minJaccard, storage) :+
-      decontam(eval, n), storage)
+                      minJaccard: Double = 0.1, n: Int = 5): DataFrame =
+    report(docs, curation(id, text, minQuality, lang, minJaccard) :+
+      decontam(eval, n))
 }

@@ -772,13 +772,13 @@ object LlmEntry {
       val docs = t(s, dir, "documents")
       val pairs = graft.Caching.persisted(
         TextDedup.minHashLshPairs(docs, col("doc_id"), col("text"),
-          minJaccard = 0.1), graft.Caching.Default)
+          minJaccard = 0.1))
       // persisted: the assignment subtree (corpus scan + the iterative
       // CC join) feeds the split counts AND both sides of the leakage
       // audit — three branch reads otherwise
       val assign = graft.Caching.persisted(
         Sampling.dedupSplit(docs, col("doc_id"),
-          DupClusters.connectedComponents(pairs)), graft.Caching.Default)
+          DupClusters.connectedComponents(pairs)))
       val counts = assign.groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("grp")).as("n_groups"))
@@ -1953,8 +1953,7 @@ object LlmEntry {
       val extracted = graft.Caching.persisted(Html.extract(
         docs.select(col("doc_id"), renderedPage.as("html")),
         col("doc_id"), col("html"))
-        .select(col("doc_id"), col("extracted").as("text")),
-        graft.Caching.Default)
+        .select(col("doc_id"), col("extracted").as("text")))
       LlmCuration.run(extracted, col("doc_id"), col("text"),
         minQuality = 0.5, lang = Some("en"), minJaccard = 0.1)
     }),

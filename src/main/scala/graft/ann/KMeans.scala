@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import org.apache.spark.storage.StorageLevel
-
 import graft.Caching
 import graft.functions.Vectors
 
@@ -48,8 +46,7 @@ object KMeans {
     * Lloyd empty-cluster degeneracy, e.g. duplicate seeds) carries its
     * previous centroid forward, so the output always has exactly k
     * centroids. */
-  def lloyd(corpus: DataFrame, k: Int, iters: Int,
-            storage: StorageLevel = Caching.Default): DataFrame = {
+  def lloyd(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 1, "k and iters must be positive")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -57,7 +54,7 @@ object KMeans {
       corpus.select(col("vec_id").cast("long").as("vec_id"),
           Vectors.asDouble(col("embedding")).as("e"))
         .withColumn("nrm", Vectors.norm(col("e")))
-        .repartition(col("vec_id")), storage)
+        .repartition(col("vec_id")))
     // The model state is k·dim scalars — DRIVER-RESIDENT between
     // rounds (the MLlib k-means shape: collect the new centers each
     // iteration). The earlier DataFrame-state form paid two

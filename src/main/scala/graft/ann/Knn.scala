@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import org.apache.spark.storage.StorageLevel
-
 import graft.Caching
 import graft.functions.{TopKPairs, Vectors}
 
@@ -121,11 +119,10 @@ object Knn {
     * selection-round MMR value. Queries with fewer than k candidates
     * underfill, never pad. */
   def mmrTopK(queries: DataFrame, corpus: DataFrame, k: Int = 3,
-              poolSize: Int = 10, lambda: Double = 0.7,
-              storage: StorageLevel = Caching.Default): DataFrame = {
+              poolSize: Int = 10, lambda: Double = 0.7): DataFrame = {
     require(poolSize >= k, s"invalid k=$k poolSize=$poolSize")
     mmrRerank(bruteForceTopK(queries, corpus, poolSize), corpus, k,
-      lambda, storage)
+      lambda)
   }
 
   /** The retrieval-agnostic core of [[mmrTopK]]: MMR re-rank of a
@@ -146,8 +143,7 @@ object Knn {
     * indexed leg is the production path — do not "optimize" back to
     * brute off the local number. */
   def mmrRerank(pool: DataFrame, vectors: DataFrame, k: Int = 3,
-                lambda: Double = 0.7,
-                storage: StorageLevel = Caching.Default): DataFrame = {
+                lambda: Double = 0.7): DataFrame = {
     require(k >= 1, s"invalid k=$k")
     val lam10 = math.round(lambda * 10).toInt
     require(lam10 >= 0 && lam10 <= 10 && lam10 / 10.0 == lambda,
@@ -168,8 +164,7 @@ object Knn {
           Vectors.asDouble(col("embedding")).as("ce")), "neighbor_id")
         .withColumn("cn", Vectors.norm(col("ce")))
         .withColumn("rel_u", round(col("sim") * 1e6, 0).cast("long"))
-        .select("query_id", "rank", "neighbor_id", "sim", "rel_u", "ce", "cn"),
-      storage)
+        .select("query_id", "rank", "neighbor_id", "sim", "rel_u", "ce", "cn"))
     var all = cand.filter(col("rank") === 1)
       .select(col("query_id"), lit(1).as("mmr_rank"), col("neighbor_id"),
         col("sim").as("mmr_score"), col("ce"), col("cn"))
@@ -456,11 +451,10 @@ object Knn {
     def release(): Unit = { v.unpersist(); () }
   }
   private def measureGuard(vectors: DataFrame, planes: Option[Int],
-                           tables: Int, targetOccupancy: Int,
-                           storage: StorageLevel): GuardMeasure = {
+                           tables: Int, targetOccupancy: Int): GuardMeasure = {
     val n = vectors.count()
     val p = planes.getOrElse(derivePlanes(n, targetOccupancy))
-    val v = Caching.persisted(graphSigned(vectors, p, tables), storage)
+    val v = Caching.persisted(graphSigned(vectors, p, tables))
     val banded = graphBandedOf(v, p, tables)
     // control-plane: one row out of a partial-aggregated count
     val r = banded.groupBy("t", "bucket").agg(count(lit(1)).as("occ"))
@@ -476,7 +470,7 @@ object Knn {
     * invisible to a COUNT (identical vectors share every signature at
     * any plane count), and SCALING.md measured exactly that corpus
     * shape walking the within-bucket quadratic regardless of planes.
-    * After the signature pass (persisted at `storage`, reused by the
+    * After the signature pass (persisted, reused by the
     * happy path — no re-signing), ONE partial-aggregating count
     * measures max bucket occupancy:
     *
@@ -502,20 +496,17 @@ object Knn {
     * there the consumer provably never runs). This is
     * [[graft.dedup.TextDedup]]'s documented caching contract: frames
     * are evicted LRU under pressure, and a long-lived nightly session
-    * issuing many guarded builds should either pass
-    * `storage = StorageLevel.NONE` (trading one re-signing pass on
-    * the happy path for zero pinning) or
+    * issuing many guarded builds owns their lifetime: it should
     * `spark.catalog.clearCache()` between runs once each returned
-    * graph is materialized. */
+    * graph is materialized ([[graft.Caching]]). */
   def knnGraphGuarded(vectors: DataFrame, k: Int,
                       planes: Option[Int] = None, tables: Int = 4,
                       targetOccupancy: Int = DefaultGraphOccupancy,
                       maxOccupancy: Long = DefaultMaxGraphOccupancy,
                       routeToIvf: Boolean = true,
-                      nCentroids: Option[Int] = None,
-                      storage: StorageLevel = Caching.Default): DataFrame =
+                      nCentroids: Option[Int] = None): DataFrame =
     knnGraphGuardedWithReport(vectors, k, planes, tables,
-      targetOccupancy, maxOccupancy, routeToIvf, nCentroids, storage)._1
+      targetOccupancy, maxOccupancy, routeToIvf, nCentroids)._1
 
   /** [[knnGraphGuarded]] exposing the decision surface it measured:
     * returns (guarded graph, one-row report) where the report is
@@ -528,9 +519,8 @@ object Knn {
                       targetOccupancy: Int = DefaultGraphOccupancy,
                       maxOccupancy: Long = DefaultMaxGraphOccupancy,
                       routeToIvf: Boolean = true,
-                      nCentroids: Option[Int] = None,
-                      storage: StorageLevel = Caching.Default): (DataFrame, DataFrame) = {
-    val m = measureGuard(vectors, planes, tables, targetOccupancy, storage)
+                      nCentroids: Option[Int] = None): (DataFrame, DataFrame) = {
+    val m = measureGuard(vectors, planes, tables, targetOccupancy)
     val report = vectors.sparkSession.range(1).select(
       lit(m.planes).as("planes"), lit(tables).as("tables"),
       lit(m.n).as("n_vectors"), lit(m.nBuckets).as("n_buckets"),
@@ -590,8 +580,7 @@ object Knn {
                        tables: Int = 4,
                        targetOccupancy: Int = DefaultGraphOccupancy,
                        maxOccupancy: Long = DefaultMaxGraphOccupancy,
-                       nCentroids: Option[Int] = None,
-                       storage: StorageLevel = Caching.Default): DataFrame = {
+                       nCentroids: Option[Int] = None): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     import graft.sources.SnapshotStore
@@ -646,8 +635,7 @@ object Knn {
         execute(f("action"), f("planes").toInt, f("tables").toInt,
           f("n_centroids").toInt)
       case (None, None) =>
-        val m = measureGuard(vectors, planes, tables, targetOccupancy,
-          storage)
+        val m = measureGuard(vectors, planes, tables, targetOccupancy)
         val underBudget = m.maxOcc <= maxOccupancy
         val cents = nCentroids.getOrElse(deriveGraphCentroids(m.n))
         val action = if (underBudget) "lsh" else "ivf"
@@ -769,8 +757,7 @@ object Knn {
     * |corpus| × O(1) constant product), one equi-join on cent_id —
     * never an all-pairs stage across clusters. */
   def semanticDedupPairs(vectors: DataFrame, centroids: DataFrame,
-                         minSim: Double,
-                         storage: StorageLevel = Caching.Default): DataFrame = {
+                         minSim: Double): DataFrame = {
     val cents = assembleCentroids(centroids)
     def centSim(e: Column, n: Column): Column =
       Vectors.qcos(e, col("cent"), n * col("centn"))
@@ -780,8 +767,7 @@ object Knn {
         .groupBy("neighbor_id")
         .agg(first(col("ce")).as("ce"), first(col("cn")).as("cn"),
           max_by(col("cent_id"),
-            struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id")),
-      storage)
+            struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id")))
     assigned.as("a").join(assigned.as("b"),
         col("a.cent_id") === col("b.cent_id") &&
           col("a.neighbor_id") < col("b.neighbor_id"))
@@ -890,12 +876,11 @@ object Knn {
     * verify; no nested-loop or all-pairs stage anywhere. For
     * exhaustive small-data runs use [[embeddingNearDupPairsExact]]. */
   def embeddingNearDupPairs(vectors: DataFrame, minSim: Double,
-                            planes: Int = 6, tables: Int = 4,
-                            storage: StorageLevel = Caching.Default): DataFrame = {
+                            planes: Int = 6, tables: Int = 4): DataFrame = {
     val v = Caching.persisted(
       vectors.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("e"))
         .withColumn("nrm", Vectors.norm(col("e")))
-        .withColumn("sig", lshBucket(col("e"), planes * tables)), storage)
+        .withColumn("sig", lshBucket(col("e"), planes * tables)))
     val banded = v.select(col("vec_id"), explode(
         transform(sequence(lit(0), lit(tables - 1)),
           t => struct(t.as("t"),

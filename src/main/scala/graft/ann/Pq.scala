@@ -74,13 +74,11 @@ object Pq {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nCentroids: Int = 16, nProbe: Int = 4,
                 m: Int = 4, nCodes: Int = 16,
-                shortlist: Int = 100, dim: Int = 64,
-                storage: org.apache.spark.storage.StorageLevel =
-                  graft.Caching.Default): DataFrame = {
+                shortlist: Int = 100, dim: Int = 64): DataFrame = {
     // the prepped corpus feeds four stages (codebook sample, encoding,
-    // assignment, re-rank fetch) — cached once under the standard
-    // knob; StorageLevel.NONE recomputes (see graft.Caching)
-    val c = graft.Caching.persisted(prep(corpus), storage)
+    // assignment, re-rank fetch) — cached once; the caller owns its
+    // lifetime (see graft.Caching)
+    val c = graft.Caching.persisted(prep(corpus))
     // coarse quantizer: deterministic sample, broadcast constant
     val cents = broadcast(c.orderBy(sampleOrd: _*).limit(nCentroids)
       .select(col("neighbor_id").as("cent_id"), col("ce").as("cent"),
@@ -102,10 +100,7 @@ object Pq {
       .agg(array_sort(collect_list(struct(col("dim"), col("value")))).as("dv"))
       .select(col("cent_id"), transform(col("dv"), x => x("value")).as("cent"))
       .withColumn("centn", Vectors.norm(col("cent"))))
-    // (no storage knob here: Scala forbids defaults on both overloads;
-    // call clearCache or the base overload for cache control)
-    ivfPqCore(queries,
-      graft.Caching.persisted(prep(corpus), graft.Caching.Default),
+    ivfPqCore(queries, graft.Caching.persisted(prep(corpus)),
       cents, k, nProbe, m, nCodes, shortlist, dim)
   }
 

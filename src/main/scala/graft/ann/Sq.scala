@@ -47,11 +47,9 @@ object Sq {
     * re-rank. Output schema/ordering match [[Knn.bruteForceTopK]]:
     * (query_id, rnk, neighbor_id, sim). */
   def sqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-             levels: Int = 256, shortlist: Int = 100,
-             storage: org.apache.spark.storage.StorageLevel =
-               graft.Caching.Default): DataFrame = {
+             levels: Int = 256, shortlist: Int = 100): DataFrame = {
     require(levels >= 2, "need at least 2 quantization levels")
-    val c = graft.Caching.persisted(Pq.prep(corpus), storage)
+    val c = graft.Caching.persisted(Pq.prep(corpus))
 
     // 1. per-dim bounds -> one broadcast row of structs (d, lo, hi),
     // sorted by dim index so element_at(b, i+1) is dim i

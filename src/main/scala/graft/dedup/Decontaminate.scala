@@ -136,9 +136,7 @@ object Decontaminate {
     */
   def bloomContaminatedDocs(train: DataFrame, eval: DataFrame,
                             id: Column, text: Column, n: Int = 5,
-                            bits: Int = 1 << 20, hashes: Int = 3,
-                            storage: org.apache.spark.storage.StorageLevel =
-                              graft.Caching.Default): DataFrame = {
+                            bits: Int = 1 << 20, hashes: Int = 3): DataFrame = {
     require(hashes >= 1 && hashes <= MaxBloomHashes, s"1..$MaxBloomHashes hashes")
     require(bits >= 64 && (bits & (bits - 1)) == 0, "bits must be a power of two >= 64")
     def position(s: Column, i: Int): Column =
@@ -149,18 +147,17 @@ object Decontaminate {
     // functions overload is literal-only)
     val maskOfP = expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))")
 
-    // read twice (bloom build + exact verify) — cached under the
-    // standard knob; pass StorageLevel.NONE to recompute instead
+    // read twice (bloom build + exact verify) — cached; the caller
+    // owns its lifetime (graft.Caching)
     val evalSh = graft.Caching.persisted(
-      eval.select(explode(TextDedup.shingles(text, n)).as("s")).distinct(),
-      storage)
+      eval.select(explode(TextDedup.shingles(text, n)).as("s")).distinct())
     // built once and cached (it feeds one broadcast per probe bit);
     // bounded by bits/64 rows regardless of eval size
     val bloom = graft.Caching.persisted(evalSh
       .select(explode(array((0 until hashes).map(i =>
         position(col("s"), i)): _*)).as("p"))
       .select(word(col("p")).as("word"), maskOfP.as("m"))
-      .groupBy("word").agg(expr("bit_or(m)").as("mask")), storage)
+      .groupBy("word").agg(expr("bit_or(m)").as("mask")))
 
     // probe all `hashes` bits with one broadcast-hash lookup each —
     // an absent word means bit unset, so the inner join itself prunes;

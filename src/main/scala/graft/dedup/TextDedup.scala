@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import org.apache.spark.storage.StorageLevel
-
 import graft.Caching
 import graft.functions.{H32Array, Hashing, MinHashMins, SortedIntersectCount, WordShingles}
 import graft.text.TextAnalysis
@@ -28,12 +26,11 @@ import graft.text.TextAnalysis
   * (shingles+signatures; the capped path's hot set and doc metadata)
   * because each feeds several plan branches of the SAME returned
   * query. The returned frame is lazy, so the operator cannot unpersist
-  * them itself; they are evicted LRU under memory pressure, and a
+  * them itself: the caller owns their lifetime. They persist at the
+  * session cache level and are evicted LRU under memory pressure; a
   * long-lived session issuing many curation calls should
   * `spark.catalog.clearCache()` between batches (the bench harness
-  * does exactly that) — or pass `storage = StorageLevel.NONE` /
-  * an explicit level via each generator's `storage` parameter
-  * (see [[graft.Caching]]).
+  * does exactly that — see [[graft.Caching]]).
   */
 object TextDedup {
 
@@ -107,9 +104,8 @@ object TextDedup {
     * exactly the regime the cap exists for. */
   def ngramJaccardPairs(docs: DataFrame, id: Column, text: Column,
                         minJaccard: Double,
-                        maxDocFreq: Option[Int] = None,
-                        storage: StorageLevel = Caching.Default): DataFrame =
-    pairIntersections(docs, id, text, maxDocFreq, storage)
+                        maxDocFreq: Option[Int] = None): DataFrame =
+    pairIntersections(docs, id, text, maxDocFreq)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
@@ -129,9 +125,8 @@ object TextDedup {
     * with doc_small the smaller shingle set (ties → smaller id). */
   def containmentPairs(docs: DataFrame, id: Column, text: Column,
                        minContainment: Double,
-                       maxDocFreq: Option[Int] = None,
-                       storage: StorageLevel = Caching.Default): DataFrame = {
-    val st = pairIntersections(docs, id, text, maxDocFreq, storage)
+                       maxDocFreq: Option[Int] = None): DataFrame = {
+    val st = pairIntersections(docs, id, text, maxDocFreq)
       .withColumn("containment",
         col("inter").cast("double") / least(col("na"), col("nb")))
       .filter(col("containment") >= minContainment)
@@ -148,12 +143,11 @@ object TextDedup {
     * [[containmentPairs]] — the blocking join, optional df cap, and
     * hashed-domain verify documented on [[ngramJaccardPairs]]. */
   private def pairIntersections(docs: DataFrame, id: Column, text: Column,
-                                maxDocFreq: Option[Int],
-                                storage: StorageLevel): DataFrame = {
+                                maxDocFreq: Option[Int]): DataFrame = {
     maxDocFreq match {
       case None =>
         // exhaustive: |A∩B| counted directly off the blocking join
-        val t = Caching.persisted(shingled(docs, id, text), storage)
+        val t = Caching.persisted(shingled(docs, id, text))
         val ex = t.select(col("doc_id"), explode(col("sh")).as("s"))
         val pairs = ex.as("a").join(ex.as("b"),
             col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -181,11 +175,11 @@ object TextDedup {
         // full-corpus df shuffle runs once PER BRANCH.
         val th = Caching.persisted(shingled(docs, id, text)
           .select(col("doc_id"), array_distinct(ColumnBridge.column(
-            H32Array(ColumnBridge.expression(col("sh"))))).as("hs")), storage)
+            H32Array(ColumnBridge.expression(col("sh"))))).as("hs")))
         val exh = th.select(col("doc_id"), explode(col("hs")).as("h"))
         val hotSet = Caching.persisted(exh.groupBy("h")
           .agg(count(lit(1)).as("df"))
-          .filter(col("df") > cap).select("h"), storage)
+          .filter(col("df") > cap).select("h"))
         val cool = exh.join(broadcast(hotSet), Seq("h"), "left_anti")
         // one per-doc metadata frame (hashed set size + SORTED hot
         // hashes — the intersect kernel's contract), built in a
@@ -198,7 +192,7 @@ object TextDedup {
           .join(broadcast(hotSet.withColumn("is_hot", lit(true))), Seq("h"), "left")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n"),
-            sort_array(collect_list(when(col("is_hot"), col("h")))).as("hot")), storage)
+            sort_array(collect_list(when(col("is_hot"), col("h")))).as("hot")))
         val pairs = cool.as("a").join(cool.as("b"),
             col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -232,13 +226,12 @@ object TextDedup {
     * (the e12 posture). */
   def lshRecallAudit(docs: DataFrame, id: Column, text: Column,
                      minJaccard: Double,
-                     storage: StorageLevel = Caching.Default,
                      bands: Int = Bands,
                      rowsPerBand: Int = RowsPerBand): DataFrame = {
-    val exact = ngramJaccardPairs(docs, id, text, minJaccard, None, storage)
+    val exact = ngramJaccardPairs(docs, id, text, minJaccard)
       .select("doc_a", "doc_b")
-    val found = minHashLshPairs(docs, id, text, minJaccard, storage,
-        bands, rowsPerBand)
+    val found = minHashLshPairs(docs, id, text, minJaccard, bands,
+        rowsPerBand)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
     val hits = coalesce(col("hit"), lit(0L))
     exact.join(found, Seq("doc_a", "doc_b"), "left")
@@ -308,17 +301,17 @@ object TextDedup {
   def minHashSignature(sh: Column): Column =
     minHashSignatureFromHashes(transform(sh, s => Hashing.h32(s)))
 
-  /** (doc_id, sh, sig) — shingles + MinHash signature. Cached by
-    * default: in the pair generators the frame feeds both candidate
-    * generation and exact verify. Single-consumer shapes (bandIndex,
-    * streaming frames — which can't cache at all) skip the cache. */
+  /** (doc_id, sh, sig) — shingles + MinHash signature, unpersisted.
+    * The pair generators wrap it in [[Caching.persisted]]: there the
+    * frame feeds both candidate generation and exact verify.
+    * Single-consumer shapes (bandIndex, the index writes) read it
+    * once. */
   private def sigged(docs: DataFrame, id: Column, text: Column,
-                     storage: StorageLevel = Caching.Default,
                      k: Int = Bands * RowsPerBand): DataFrame =
-    Caching.persisted(shingled(docs, id, text)
+    shingled(docs, id, text)
       .withColumn("hs", ColumnBridge.column(H32Array(ColumnBridge.expression(col("sh")))))
       .withColumn("sig", minHashSignatureFromHashes(col("hs"), k))
-      .drop("hs"), storage)
+      .drop("hs")
 
   /** One row per (doc, band): (doc_id, band, bsig). */
   private def banded(t: DataFrame, bands: Int = Bands,
@@ -349,10 +342,9 @@ object TextDedup {
     * candidate verify join — no quadratic stage anywhere. */
   def minHashLshPairs(docs: DataFrame, id: Column, text: Column,
                       minJaccard: Double,
-                      storage: StorageLevel = Caching.Default,
                       bands: Int = Bands,
                       rowsPerBand: Int = RowsPerBand): DataFrame = {
-    val t = sigged(docs, id, text, storage, bands * rowsPerBand)
+    val t = Caching.persisted(sigged(docs, id, text, bands * rowsPerBand))
     verified(selfCandidates(t, bands, rowsPerBand), t, t, minJaccard)
   }
 
@@ -391,15 +383,14 @@ object TextDedup {
     * not N. */
   def lshOperatingReport(docs: DataFrame, id: Column, text: Column,
                          minJaccard: Double,
-                         configs: Seq[(String, Int, Int)],
-                         storage: StorageLevel = Caching.Default): DataFrame = {
+                         configs: Seq[(String, Int, Int)]): DataFrame = {
     require(configs.nonEmpty, "lshOperatingReport needs at least one config")
     configs.foreach { case (name, b, r) =>
       require(b >= 1 && r >= 1 && b * r <= MinHashPoolA.size,
         s"config $name: bands*rowsPerBand must be in [1, ${MinHashPoolA.size}]")
     }
     val maxK = configs.map { case (_, b, r) => b * r }.max
-    val t = sigged(docs, id, text, storage, maxK)
+    val t = Caching.persisted(sigged(docs, id, text, maxK))
     operatingReportMulti(t, configs, minJaccard)
   }
 
@@ -481,7 +472,7 @@ object TextDedup {
     * persisted form is [[writeDedupIndex]], from which this derives
     * map-only. */
   def bandIndex(docs: DataFrame, id: Column, text: Column): DataFrame =
-    banded(sigged(docs, id, text, StorageLevel.NONE))
+    banded(sigged(docs, id, text))
 
   // ---- persisted dedup index ------------------------------------------
   //
@@ -503,7 +494,7 @@ object TextDedup {
     * committed snapshot version. */
   def writeDedupIndex(docs: DataFrame, id: Column, text: Column,
                       dir: String): Int =
-    graft.sources.SnapshotStore.commit(sigged(docs, id, text, StorageLevel.NONE), dir)
+    graft.sources.SnapshotStore.commit(sigged(docs, id, text), dir)
 
   /** MERGE an incoming batch's index rows into the persisted index
     * (upsert keyed on doc_id) — the post-probe maintenance step of a
@@ -511,7 +502,7 @@ object TextDedup {
   def updateDedupIndex(incoming: DataFrame, id: Column, text: Column,
                        dir: String): Int =
     graft.sources.SnapshotStore.mergeInto(
-      sigged(incoming, id, text, StorageLevel.NONE), dir, Seq("doc_id"))
+      sigged(incoming, id, text), dir, Seq("doc_id"))
 
   /** The persisted (doc_id, sh, sig) index frame. */
   def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
@@ -534,10 +525,9 @@ object TextDedup {
   def minHashLshPairsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                                   indexDir: String, incoming: DataFrame,
                                   id: Column, text: Column,
-                                  minJaccard: Double,
-                                  storage: StorageLevel = Caching.Default): DataFrame = {
+                                  minJaccard: Double): DataFrame = {
     val ta = readDedupIndex(spark, indexDir)
-    val tb = sigged(incoming, id, text, storage)
+    val tb = Caching.persisted(sigged(incoming, id, text))
     val cand = banded(ta).as("a").join(banded(tb).as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -664,7 +654,7 @@ object TextDedup {
     * bucket's band rows fit one task (corpus bands / buckets). */
   def writeDedupIndexBucketed(docs: DataFrame, id: Column, text: Column,
                               name: String, buckets: Int = 32): Int =
-    commitBucketed(sigged(docs, id, text, StorageLevel.NONE), name, buckets)
+    commitBucketed(sigged(docs, id, text), name, buckets)
 
   /** MERGE an incoming batch into the bucketed index (upsert keyed on
     * doc_id, schema-stable) and commit the next version — the
@@ -678,7 +668,7 @@ object TextDedup {
     val spark = incoming.sparkSession
     val p = IndexStore.pin(spark, name)
     val merged = graft.operators.Merge.upsert(p.table("docs"),
-      sigged(incoming, id, text, StorageLevel.NONE), Seq("doc_id"))
+      sigged(incoming, id, text), Seq("doc_id"))
     val (pb, pr) = committedPlan(spark, name, p.version)
     commitBucketed(merged, name, buckets, pb, pr)
   }
@@ -711,8 +701,8 @@ object TextDedup {
     * above either index scan). */
   def minHashLshPairsAgainstBucketedIndex(
       spark: org.apache.spark.sql.SparkSession, name: String,
-      incoming: DataFrame, id: Column, text: Column, minJaccard: Double,
-      storage: StorageLevel = Caching.Default): DataFrame = {
+      incoming: DataFrame, id: Column, text: Column,
+      minJaccard: Double): DataFrame = {
     // pin ONE version up front (atomic ptr) and read both member
     // tables at it — a probe planned mid-commit can't mix a new bands
     // table with old docs
@@ -728,7 +718,7 @@ object TextDedup {
     // a full batch text scan; the price is hashing the pool tail per
     // shingle on the first probe).
     val (pb, pr) = committedPlan(spark, name, p.version)
-    val tb = sigged(incoming, id, text, storage, MinHashPoolA.size)
+    val tb = Caching.persisted(sigged(incoming, id, text, MinHashPoolA.size))
     val cand = p.table("bands").as("a")
       .join(banded(tb, pb, pr).as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
@@ -795,8 +785,7 @@ object TextDedup {
     * it. */
   def lshOperatingReportFromIndex(spark: org.apache.spark.sql.SparkSession,
                                   name: String, minJaccard: Double,
-                                  configs: Seq[(String, Int, Int)],
-                                  storage: StorageLevel = Caching.Default): DataFrame = {
+                                  configs: Seq[(String, Int, Int)]): DataFrame = {
     require(configs.nonEmpty, "operating report needs at least one config")
     configs.foreach { case (n, b, r) =>
       require(b >= 1 && r >= 1 && b * r <= Bands * RowsPerBand,
@@ -810,8 +799,7 @@ object TextDedup {
     // DROP VIEW uncaches dependent entries — and (b) make two
     // versions' byte-identical reports plan-distinct. The physical
     // table is the carry's own content pin.
-    val t = Caching.persisted(
-      p.physicalTable("docs"), storage)
+    val t = Caching.persisted(p.physicalTable("docs"))
     // persist the REPORT too (configs-sized — one row per config):
     // the report is a pure function of the stored docs member and the
     // config list, and retune flows price the SAME index repeatedly
@@ -820,7 +808,7 @@ object TextDedup {
     // pricing of this docs member skip the union verify join, the
     // single most expensive job of a retune invocation (measured
     // ~2 s at sf0.1).
-    Caching.persisted(operatingReportMulti(t, configs, minJaccard), storage)
+    Caching.persisted(operatingReportMulti(t, configs, minJaccard))
   }
 
   /** Close the retune loop: measure the operating report on the live
@@ -834,19 +822,16 @@ object TextDedup {
     * bill busts the budget (the caller alarms rather than shipping an
     * over-budget plan). `newVersion` is Some only when a reband
     * committed (a chosen winner equal to the committed plan is a
-    * no-op). `storage` is the report's signature-frame persistence
-    * knob — pass StorageLevel.NONE when a long-lived nightly session
-    * must not churn the block manager on repeated retunes
-    * ([[graft.operators.Caching]]'s documented opt-out). */
+    * no-op). The report's frames persist at the session cache level;
+    * a long-lived nightly session that must not churn the block
+    * manager on repeated retunes owns their lifetime
+    * (`spark.catalog.clearCache()` after the retune — [[graft.Caching]]). */
   def rebandToBudget(spark: org.apache.spark.sql.SparkSession,
                      name: String, minJaccard: Double,
                      configs: Seq[(String, Int, Int)],
                      maxCandidatesPerPair: Double,
-                     buckets: Int = 32,
-                     storage: StorageLevel = Caching.Default):
-      (Banding.Choice, Option[Int]) = {
-    val report = lshOperatingReportFromIndex(spark, name, minJaccard,
-      configs, storage)
+                     buckets: Int = 32): (Banding.Choice, Option[Int]) = {
+    val report = lshOperatingReportFromIndex(spark, name, minJaccard, configs)
     val outcome = Banding.chooseOperatingOutcome(report, maxCandidatesPerPair)
     val v = IndexStore.pin(spark, name).version
     outcome match {
@@ -866,10 +851,9 @@ object TextDedup {
     * (doc_a = corpus id, doc_b = incoming id, exact jaccard). */
   def minHashLshPairsBetween(corpus: DataFrame, incoming: DataFrame,
                              id: Column, text: Column,
-                             minJaccard: Double,
-                             storage: StorageLevel = Caching.Default): DataFrame = {
-    val ta = sigged(corpus, id, text, storage)
-    val tb = sigged(incoming, id, text, storage)
+                             minJaccard: Double): DataFrame = {
+    val ta = Caching.persisted(sigged(corpus, id, text))
+    val tb = Caching.persisted(sigged(incoming, id, text))
     val cand = banded(ta).as("a").join(banded(tb).as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -891,10 +875,10 @@ object TextDedup {
     * left_anti on the drop id set. `idName` names the incoming-side id
     * column for the anti-join. */
   def crossDedupApply(reference: DataFrame, incoming: DataFrame,
-                      idName: String, text: Column, minJaccard: Double,
-                      storage: StorageLevel = Caching.Default): DataFrame = {
+                      idName: String, text: Column,
+                      minJaccard: Double): DataFrame = {
     val drops = minHashLshPairsBetween(reference, incoming, col(idName),
-      text, minJaccard, storage)
+      text, minJaccard)
       .select(col("doc_b").as(idName)).distinct()
     incoming.join(drops, Seq(idName), "left_anti")
   }

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Caching
 
@@ -45,7 +44,6 @@ object NaiveBayes {
     * c, logp), |V| × |labels| rows.
     */
   def model(docs: DataFrame, text: Column, label: Column,
-            cacheLevel: StorageLevel = Caching.Default,
             minDf: Long = 1L): DataFrame =
     // one corpus pass; vocabulary-sized result, materialized so the
     // distinct-labels / distinct-vocab branches below don't each
@@ -54,8 +52,7 @@ object NaiveBayes {
     modelFromCounts(Caching.persisted(
       docs.select(label.cast("string").as("label"),
           explode(TextAnalysis.tokens(text)).as("token"))
-        .groupBy("label", "token").agg(count(lit(1)).as("c")),
-      cacheLevel), minDf)
+        .groupBy("label", "token").agg(count(lit(1)).as("c"))), minDf)
 
   /** [[model]] from an already-materialized (label, token, c) counts
     * frame — the surface incremental maintenance feeds
@@ -173,9 +170,8 @@ object NaiveBayes {
     * as [[classify]] plus a row-local filter. Output: the flagged
     * docs, (doc_id, actual, pred, score, margin, correct=false). */
   def labelAudit(docs: DataFrame, id: Column, text: Column, label: Column,
-                 minMargin: Double = 1.0,
-                 cacheLevel: StorageLevel = Caching.Default): DataFrame =
-    classify(docs, docs, id, text, label, cacheLevel)
+                 minMargin: Double = 1.0): DataFrame =
+    classify(docs, docs, id, text, label)
       .filter(!col("correct") && col("margin") >= minMargin)
 
   /** Margin-calibration table over [[classify]]'s output — the check
@@ -194,9 +190,8 @@ object NaiveBayes {
     * (doc_id, actual, pred, score, margin, correct) — the held-out
     * evaluation surface (t29b). Same OOV contract as [[score]]. */
   def classify(trainDocs: DataFrame, scoreDocs: DataFrame, id: Column,
-               text: Column, label: Column,
-               cacheLevel: StorageLevel = Caching.Default): DataFrame =
+               text: Column, label: Column): DataFrame =
     scoreAgainst(scoreDocs, id, text, Some(label),
-      model(trainDocs, text, label, cacheLevel),
+      model(trainDocs, text, label),
       priors(trainDocs, label))
 }

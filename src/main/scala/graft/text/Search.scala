@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import org.apache.spark.storage.StorageLevel
-
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.TopKPairs
@@ -21,7 +19,7 @@ import graft.functions.TopKPairs
   *
   *  1. postings: explode → map-side-combined (doc, token) counts,
   *     one shuffle (shared with [[TextAnalysis.tfIdfTopTerm]]'s tf
-  *     frame shape). Persisted under the `storage` knob — it feeds
+  *     frame shape). Persisted ([[graft.Caching]]) — it feeds
   *     doc lengths, document frequencies, and the scoring join.
   *  2. doc lengths / corpus stats: keyed aggregation off the postings,
   *     with the (N, Σdl) pair attached downstream as a ONE-ROW
@@ -58,14 +56,13 @@ object Search {
     */
   def bm25TopK(docs: DataFrame, id: Column, text: Column,
                queries: Seq[(String, Seq[String])], k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               storage: StorageLevel = graft.Caching.Default): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     bm25(docs, id, text,
       queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
         .toDF("query_id", "token"),
-      k, k1, b, storage)
+      k, k1, b)
   }
 
   /** BM25 where each query is itself a document ("more like this"):
@@ -75,12 +72,11 @@ object Search {
     * is identical to [[bm25TopK]]. */
   def bm25MoreLikeThis(corpus: DataFrame, id: Column, text: Column,
                        queryDocs: DataFrame, qid: Column, qtext: Column,
-                       k: Int, k1: Double = 1.2, b: Double = 0.75,
-                       storage: StorageLevel = graft.Caching.Default): DataFrame =
+                       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     bm25(corpus, id, text,
       queryDocs.select(qid.as("query_id"),
         explode(array_distinct(TextAnalysis.tokens(qtext))).as("token")),
-      k, k1, b, storage)
+      k, k1, b)
 
   /** (doc_id, token, tf) postings of a corpus — the inverted index's
     * data plane and the shared head of every BM25 path. */
@@ -103,8 +99,7 @@ object Search {
     * doc-length join exists). Docs with no tokens drop out, matching
     * the postings-derived formulation. */
   private def bm25(docs: DataFrame, id: Column, text: Column,
-                   qterms: DataFrame, k: Int, k1: Double, b: Double,
-                   storage: StorageLevel): DataFrame = {
+                   qterms: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
     val qtok = broadcast(qterms.select("token").distinct())
     val base = docs.select(id.as("doc_id"), TextAnalysis.tokens(text).as("tks"))
       .withColumn("dl", size(col("tks")).cast("long"))
@@ -113,8 +108,7 @@ object Search {
     val tfq = graft.Caching.persisted(
       base.select(col("doc_id"), col("dl"), explode(col("tks")).as("token"))
         .join(qtok, "token")
-        .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf")),
-      storage)
+        .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf")))
     val dfq = tfq.groupBy("token").agg(count(lit(1)).as("dfn"))
     scoreAndRank(tfq, dfq, stats, qterms, k, k1, b)
   }
@@ -200,11 +194,10 @@ object Search {
     * Returns the committed version. */
   def writeIndex(docs: DataFrame, id: Column, text: Column, name: String,
                  buckets: Int = 32,
-                 storage: StorageLevel = graft.Caching.Default,
                  metaCols: Seq[String] = Nil): Int = {
     val spark = docs.sparkSession
     val postings = graft.Caching.persisted(
-      buildPostings(docs, id, text), storage)
+      buildPostings(docs, id, text))
     val dl = docLengths(postings)
     IndexStore.commit(spark, name, Map(
       "postings" -> postings, "doclen" -> dl,
@@ -224,12 +217,11 @@ object Search {
     * the final corpus (spec-asserted). Deleted-then-absent tokens drop
     * out at dfn 0. One index rewrite pass; returns the new version. */
   def updateIndex(incoming: DataFrame, id: Column, text: Column,
-                  name: String, buckets: Int = 32,
-                  storage: StorageLevel = graft.Caching.Default): Int = {
+                  name: String, buckets: Int = 32): Int = {
     val spark = incoming.sparkSession
     val ix = IndexStore.pin(spark, name)
     val pNew = graft.Caching.persisted(
-      buildPostings(incoming, id, text), storage)
+      buildPostings(incoming, id, text))
     val dlNew = docLengths(pNew)
     // the re-ingested id set comes from the INCOMING frame, not the new
     // postings: a doc re-ingested with token-less text produces no
@@ -238,7 +230,7 @@ object Search {
     // old contributions of the re-ingested ids (bucketed scans; the
     // id set is a probe batch — broadcast-joinable)
     val pOld = graft.Caching.persisted(
-      ix.table("postings").join(broadcast(ids), "doc_id"), storage)
+      ix.table("postings").join(broadcast(ids), "doc_id"))
     val dlOld = ix.table("doclen").join(broadcast(ids), "doc_id")
     val postings = ix.table("postings").join(broadcast(ids), Seq("doc_id"), "left_anti")
       .unionAll(pNew)
@@ -291,13 +283,12 @@ object Search {
     * Ids absent from the index are no-ops. `ids`' first column is the
     * doc id; a delete set is takedown-request-sized — broadcast.
     * One index rewrite pass; returns the new committed version. */
-  def deleteFromIndex(ids: DataFrame, name: String, buckets: Int = 32,
-                      storage: StorageLevel = graft.Caching.Default): Int = {
+  def deleteFromIndex(ids: DataFrame, name: String, buckets: Int = 32): Int = {
     val spark = ids.sparkSession
     val ix = IndexStore.pin(spark, name)
     val del = ids.select(col(ids.columns.head).as("doc_id")).distinct()
     val pOld = graft.Caching.persisted(
-      ix.table("postings").join(broadcast(del), "doc_id"), storage)
+      ix.table("postings").join(broadcast(del), "doc_id"))
     val dlOld = ix.table("doclen").join(broadcast(del), "doc_id")
     val termstats = ix.table("termstats")
       .join(pOld.groupBy("token").agg(count(lit(1)).as("d_old")),

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import org.apache.spark.storage.StorageLevel
-
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.RollingHash64
@@ -280,10 +278,10 @@ object TextAnalysis {
   def bpeTrain(df: DataFrame, text: Column, rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = df.sparkSession
-    val words0 = df.select(explode(bpeWords(text)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wn"))
-      .select(regexp_replace(col("word"), "(.)", "[$1]").as("wr"), col("wn"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val words0 = graft.Caching.persisted(
+      df.select(explode(bpeWords(text)).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("wn"))
+        .select(regexp_replace(col("word"), "(.)", "[$1]").as("wr"), col("wn")))
     var cur = words0
     val merges = Vector.newBuilder[(Int, String, String, Long)]
     var r = 1
@@ -425,11 +423,10 @@ object TextAnalysis {
     * Lifecycle: the returned frame is lazy, so the persisted tf
     * intermediate cannot be unpersisted here — the CALLER owns its
     * lifecycle (the [[graft.Caching]] contract). A long-lived session
-    * that calls this repeatedly should pass `StorageLevel.NONE` (plans
-    * recompute the shared branch) or unpersist after its terminal
-    * action; otherwise the cached blocks linger until LRU eviction. */
-  def bigramSurprisal(df: DataFrame, id: Column, text: Column,
-                      storage: StorageLevel = graft.Caching.Default): DataFrame = {
+    * that calls this repeatedly should unpersist it or
+    * `spark.catalog.clearCache()` after its terminal action; otherwise
+    * the cached blocks linger until LRU eviction. */
+  def bigramSurprisal(df: DataFrame, id: Column, text: Column): DataFrame = {
     val tk = tokens(text)
     val bg = df.select(id.as("doc_id"), tk.as("tk"))
       .filter(size(col("tk")) >= 2)
@@ -443,7 +440,7 @@ object TextAnalysis {
     // ReuseExchange can't dedupe them — un-persisted, the tokenize +
     // bigram explode + (doc, bigram) shuffle runs once per branch
     val tf = graft.Caching.persisted(
-      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")), storage)
+      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")))
     val c2 = tf.groupBy("bigram").agg(sum(col("tf")).as("c2"))
       .withColumn("w1", split(col("bigram"), " ").getItem(0))
     val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
@@ -487,19 +484,18 @@ object TextAnalysis {
     * broadcast product. Docs with fewer than 2 tokens emit no row.
     *
     * Lifecycle: the persisted uni/tf intermediates follow
-    * [[bigramSurprisal]]'s caller-owns contract — pass
-    * `StorageLevel.NONE` or unpersist after the terminal action in a
+    * [[bigramSurprisal]]'s caller-owns contract — unpersist them or
+    * `spark.catalog.clearCache()` after the terminal action in a
     * long-lived session. */
   def interpolatedSurprisal(df: DataFrame, id: Column, text: Column,
-                            lambda: Double = 0.7,
-                            storage: StorageLevel = graft.Caching.Default): DataFrame = {
+                            lambda: Double = 0.7): DataFrame = {
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1), got $lambda")
     val base = df.select(id.as("doc_id"), tokens(text).as("tk"))
     // persisted: vocabulary-sized, and read by BOTH the total agg and
     // the scoring join — un-persisted each re-runs the corpus explode
     val uni = graft.Caching.persisted(
       base.select(explode(col("tk")).as("w2"))
-        .groupBy("w2").agg(count(lit(1)).as("ctf")), storage)
+        .groupBy("w2").agg(count(lit(1)).as("ctf")))
     val total = uni.agg(sum(col("ctf")).as("n_total"))
     val bg = base.filter(size(col("tk")) >= 2)
       .select(col("doc_id"), explode(transform(
@@ -511,7 +507,7 @@ object TextAnalysis {
     // branch and the scoring join prune tf differently, so the
     // (doc, bigram) shuffle would execute once per branch
     val tf = graft.Caching.persisted(
-      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")), storage)
+      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")))
     val c2 = tf.groupBy("bigram").agg(sum(col("tf")).as("c2"))
       .withColumn("w1", split(col("bigram"), " ").getItem(0))
       .withColumn("w2", split(col("bigram"), " ").getItem(1))
@@ -547,21 +543,19 @@ object TextAnalysis {
     * round.
     *
     * Scale shape: ONE corpus pass to (source, bucket) counts
-    * (persisted under `storage` — sources×buckets rows, tiny; the
+    * (persisted — sources×buckets rows, tiny; the
     * grid/sources branches would otherwise re-execute the corpus
     * explode), densified against the constant grid per source, side
     * totals and the global per-bucket counts as window sums over the
     * dense frame. Output per source: n_tokens, kl_bits. */
   def sourceDrift(df: DataFrame, text: Column, source: Column,
-                  buckets: Int = graft.text.Dsir.DefaultBuckets,
-                  storage: StorageLevel = graft.Caching.Default): DataFrame = {
+                  buckets: Int = graft.text.Dsir.DefaultBuckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = graft.Caching.persisted(
       df.select(source.as("source"), explode(tokens(text)).as("token"))
         .select(col("source"),
           (graft.functions.Hashing.h32(col("token")) % buckets).as("bucket"))
-        .groupBy("source", "bucket").agg(count(lit(1)).as("c")),
-      storage)
+        .groupBy("source", "bucket").agg(count(lit(1)).as("c")))
     val spark = df.sparkSession
     val grid = counts.select("source").distinct()
       .crossJoin(broadcast(spark.range(buckets).select(col("id").as("bucket"))))
@@ -644,14 +638,13 @@ object TextAnalysis {
     * pass), not a nested-loop stage; no windows, no driver round-trip.
     * Docs with no tokens have no terms and drop out, mirroring the SQL
     * formulation. The tf frame feeds both the df aggregation and the
-    * scoring join, so it persists under the standard `storage` knob
-    * (NONE = recompute the tokenize+count branch twice). */
-  def tfIdfTopTerm(df: DataFrame, id: Column, text: Column,
-                   storage: StorageLevel = graft.Caching.Default): DataFrame = {
+    * scoring join, so it persists ([[graft.Caching]]; the caller owns
+    * its lifetime). */
+  def tfIdfTopTerm(df: DataFrame, id: Column, text: Column): DataFrame = {
     val total = df.agg(count(lit(1)).as("n_corpus"))
     val tf = graft.Caching.persisted(
       df.select(id.as("doc_id"), explode(tokens(text)).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")), storage)
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("dfn"))
     val scored = tf.join(dfreq, "token")
       .crossJoin(broadcast(total))
@@ -684,15 +677,14 @@ object TextAnalysis {
     * 6 dp edge.
     *
     * Scale shape mirrors [[tfIdfTopTerm]]: one (doc, token) count
-    * shuffle (persisted under `storage` — it feeds both the corpus
+    * shuffle (persisted — it feeds both the corpus
     * counts and the scoring join), a vocabulary-keyed join, the
     * corpus-total attached by a one-row broadcast product, and a
     * per-doc decimal aggregation. Docs with no tokens drop out. */
-  def unigramSurprisal(df: DataFrame, id: Column, text: Column,
-                       storage: StorageLevel = graft.Caching.Default): DataFrame = {
+  def unigramSurprisal(df: DataFrame, id: Column, text: Column): DataFrame = {
     val tf = graft.Caching.persisted(
       df.select(id.as("doc_id"), explode(tokens(text)).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")), storage)
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
     val corpus = tf.groupBy("token").agg(sum(col("tf")).as("ctf"))
     val total = corpus.agg(sum(col("ctf")).as("n_total"))
     tf.join(corpus, "token")
@@ -787,14 +779,12 @@ object TextAnalysis {
     * pass to `approx_percentile` — the bin-assignment contract is
     * unchanged; the oracle pins the exact path at test scale. The
     * single projected value column feeds both the boundary pass and
-    * the bin pass, so it persists under the `storage` knob (one
-    * column/row — cheap; `StorageLevel.NONE` restores the two-scan
-    * shape, which may win when `value` is a pruned parquet column). */
-  def quantileBins(df: DataFrame, value: Column, nBins: Int,
-                   storage: StorageLevel = graft.Caching.Default): DataFrame = {
+    * the bin pass, so it persists (one column/row — cheap; the caller
+    * owns its lifetime, [[graft.Caching]]). */
+  def quantileBins(df: DataFrame, value: Column, nBins: Int): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
     val ps = (1 until nBins).map(_.toDouble / nBins).toArray
-    val v = graft.Caching.persisted(df.select(value.as("v")), storage)
+    val v = graft.Caching.persisted(df.select(value.as("v")))
     // §6 quantizer on the bin boundaries (they feed the bin verdicts)
     val bounds = v.agg(
       transform(percentile(col("v"), lit(ps)), b => qdp(b, 4)).as("bounds"))
@@ -825,12 +815,11 @@ object TextAnalysis {
     * specialize each branch's plan and re-execute the whole
     * corpus-sized surprisal subtree twice (the r11 single-pass-audit
     * class; this was the bench's worst variance surface), so it
-    * persists under the standard `storage` knob. The persisted frame
-    * is doc-count-sized (4 columns/doc), not corpus-text-sized;
-    * `StorageLevel.NONE` restores the two-pass recompute. */
-  def perplexityBuckets(df: DataFrame, id: Column, text: Column,
-                        storage: StorageLevel = graft.Caching.Default): DataFrame = {
-    val s = graft.Caching.persisted(unigramSurprisal(df, id, text, storage), storage)
+    * persists. The persisted frame is doc-count-sized (4
+    * columns/doc), not corpus-text-sized; the caller owns its lifetime
+    * ([[graft.Caching]]). */
+  def perplexityBuckets(df: DataFrame, id: Column, text: Column): DataFrame = {
+    val s = graft.Caching.persisted(unigramSurprisal(df, id, text))
     val bounds = s.agg(transform(
       percentile(col("mean_surprisal"), lit(Array(1.0 / 3, 2.0 / 3))),
       b => qdp(b, 4)).as("bounds"))

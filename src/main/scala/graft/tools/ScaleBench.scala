@@ -154,21 +154,6 @@ object ScaleBench {
           f"med=${ops("d2b_rel_cap")._2}%.3f rows=${ops("d2b_rel_cap")._3}")
       }
 
-      // t26 WITHOUT the persist (StorageLevel.NONE) — the
-      // un-materialized-branch tradeoff measured: the bounds branch
-      // and the bucketing branch each re-execute the corpus-sized
-      // surprisal subtree (column pruning defeats exchange reuse), vs
-      // the shipped persisted doc-frame share. The delta IS the
-      // second corpus pass.
-      if (want("t26_nopersist")) {
-        ops("t26_nopersist") = bench(() =>
-          graft.text.TextAnalysis.perplexityBuckets(
-            Tables.load(spark, dir, "documents"), col("doc_id"),
-            col("text"), org.apache.spark.storage.StorageLevel.NONE).count())
-        println(f"[scalebench] x$m t26_nopersist min=${ops("t26_nopersist")._1}%.3f " +
-          f"med=${ops("t26_nopersist")._2}%.3f rows=${ops("t26_nopersist")._3}")
-      }
-
       // e16 at doubled plane count: the first x10 run measured the
       // 4-plane graph build going SUPERLINEAR on this corpus (16 tight
       // clusters -> whole clusters share buckets -> within-cluster

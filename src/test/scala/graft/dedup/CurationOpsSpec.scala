@@ -225,20 +225,24 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("runSelected plan: broadcast model scoring, bounded-heap selection") {
+    import graft.LlmCuration
+    import graft.text.NaiveBayes
     val docs = table("documents")
-    // storage = NONE opts out of the stage-boundary plan truncation
-    // (Caching.staged), leaving the fully-composed lazy plan — the
-    // shipped default truncates at stage boundaries, which hides the
-    // upstream stages' join/heap shapes from the FINAL frame's plan;
-    // the operators compose identically either way, so the assertions
-    // keep their force on the untruncated form
-    val out = graft.LlmCuration.runSelected(docs,
-      docs.filter(col("doc_id") % 25 === 0),
-      docs.filter(graft.operators.Sampling.hashBucket(col("doc_id"), 5) =!= 0),
-      docs.filter(col("source").isin("src0", "src1")),
-      col("doc_id"), col("text"), col("lang"),
-      keepLabel = "en", minMargin = 1.0, k = 20,
-      storage = org.apache.spark.storage.StorageLevel.NONE)
+    val labeled =
+      docs.filter(graft.operators.Sampling.hashBucket(col("doc_id"), 5) =!= 0)
+    // runSelected's stage list folded with plain st.run, i.e. without
+    // the stage-boundary plan truncation (Caching.staged) that hides
+    // the upstream stages' join/heap shapes from the FINAL frame's
+    // plan; the operators compose identically either way, so the
+    // assertions keep their force on the untruncated form
+    val out = LlmCuration.selection(docs.filter(col("doc_id") % 25 === 0),
+        NaiveBayes.model(labeled, col("text"), col("lang")),
+        NaiveBayes.priors(labeled, col("lang")),
+        LlmCuration.dsirModel(docs.filter(col("source").isin("src0", "src1")),
+          col("text")),
+        col("doc_id"), col("text"), keepLabel = "en", minMargin = 1.0,
+        k = 20, minQuality = 0.5, lang = Some("en"), minJaccard = 0.1, n = 5)
+      .foldLeft(docs)((df, st) => st.run(df)).select("doc_id")
     val plan = out.queryExecution.executedPlan.toString
     // the NB scoring / DSIR model joins and the k-row selection
     // join-back are broadcast equi-joins (the model frames are

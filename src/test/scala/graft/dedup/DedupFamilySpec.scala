@@ -40,25 +40,32 @@ class TextDedupSpec extends SparkSpec {
     assert(generous == full)
   }
 
-  test("storage = NONE leaves no cached frames; results unchanged") {
+  test("operators cache at the session's default cache storage level") {
     import org.apache.spark.storage.StorageLevel
-    val docs = table("documents").limit(200)
+    val key = "spark.sql.defaultCacheStorageLevel"
+    val prior = spark.conf.getOption(key)
     spark.catalog.clearCache()
-    val nJac = TextDedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
-      0.05, Some(10), StorageLevel.NONE).count()
-    val nLsh = TextDedup.minHashLshPairs(docs, col("doc_id"), col("text"),
-      0.1, StorageLevel.NONE).count()
-    val nEmb = Knn.embeddingNearDupPairs(table("embeddings").limit(100),
-      minSim = 0.4, storage = StorageLevel.NONE).count()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "no-cache runs must not register cache entries")
-    assert(nJac === TextDedup.ngramJaccardPairs(docs, col("doc_id"),
-      col("text"), 0.05, Some(10)).count())
-    assert(nLsh === TextDedup.minHashLshPairs(docs, col("doc_id"),
-      col("text"), 0.1).count())
-    assert(nEmb === Knn.embeddingNearDupPairs(table("embeddings").limit(100),
-      minSim = 0.4).count())
-    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.conf.set(key, "DISK_ONLY")
+    try {
+      TextDedup.minHashLshPairs(table("documents").limit(200), col("doc_id"),
+        col("text"), 0.1).count()
+      val levels = spark.sparkContext.getPersistentRDDs
+        .collect { case (id, rdd) if !before(id) => rdd.getStorageLevel }
+      assert(levels.nonEmpty, "the pair generator registered no cache entry")
+      assert(levels.forall(_ == StorageLevel.DISK_ONLY),
+        s"cache levels must follow the session conf: $levels")
+      // streaming frames cannot be cached: both forms pass them through
+      val stream = spark.readStream.format("rate").load()
+      Seq(graft.Caching.persisted(stream), graft.Caching.staged(stream))
+        .foreach { df =>
+          assert(df.isStreaming && (df eq stream))
+          assert(df.storageLevel === StorageLevel.NONE)
+        }
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.catalog.clearCache()
+    }
   }
 
   test("verbatim overlap: shared long run detected, boilerplate capped") {

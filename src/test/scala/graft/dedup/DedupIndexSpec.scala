@@ -270,12 +270,6 @@ class DedupIndexSpec extends SparkSpec {
       assert(newV.isEmpty, "nothing to dedup → the committed plan stands")
       assert(TextDedup.committedPlan(spark, "dnp", v0) ===
         (TextDedup.Bands, TextDedup.RowsPerBand))
-      // the opt-out storage knob is accepted end to end (no
-      // block-manager persistence for a nightly session that asks out)
-      val (o2, _) = TextDedup.rebandToBudget(spark, "dnp", 0.15,
-        Seq(("default", 4, 4)), maxCandidatesPerPair = 10.0, buckets = 4,
-        storage = org.apache.spark.storage.StorageLevel.NONE)
-      assert(o2 === graft.dedup.Banding.NoPairs)
     } finally TextDedup.dropDedupIndexBucketed(spark, "dnp")
   }
 
