@@ -1,9 +1,11 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+
+import VectorStages._
 
 /** Persisted IVF-PQ index — build once, probe every batch, update
   * incrementally. The ANN analogue of the dedup family's persisted
@@ -51,6 +53,8 @@ import graft.functions.Vectors
   * Probing an index written with [[write]]'s defaults returns exactly
   * [[Pq.ivfPqTopK]]'s output for the same corpus (spec-asserted):
   * persistence changes where the stages run, not what they compute.
+  * Both are built from [[VectorStages]]' single definition of each
+  * stage.
   */
 object AnnIndex {
 
@@ -73,50 +77,8 @@ object AnnIndex {
     * shipped e6 entries and the specs so the cleanup path can't drift. */
   def drop(spark: SparkSession, name: String): Unit = Store.drop(spark, name)
 
-  private def centSim(e: Column, n: Column): Column =
-    Vectors.qcos(e, col("cent"), n * col("centn"))
-
-  /** Nearest stored centroid per vector of `c` — same argmax (csim
-    * desc, cent_id asc) as [[Pq]]'s assignment. */
-  private def assign(c: DataFrame, cents: DataFrame): DataFrame =
-    c.join(cents)
-      .withColumn("csim", centSim(col("ce"), col("cn")))
-      .groupBy("neighbor_id")
-      .agg(max_by(col("cent_id"),
-        struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id"))
-
-  /** PQ codes of `c` under a stored codebook. Subspace geometry comes
-    * from the codebook rows themselves (`j`, `size(cw)`), so no m/dim
-    * scalars are needed — an index probe can't drift from its build. */
-  private def encode(c: DataFrame, cb: DataFrame): DataFrame =
-    c.join(cb)
-      .withColumn("xs",
-        slice(col("ce"), col("j") * size(col("cw")) + 1, size(col("cw"))))
-      // §6 quantizer (Quantize scaladoc): d2 feeds the code argmin,
-      // so the 6-dp cut must be engine-identical at the half boundary
-      .withColumn("d2", graft.functions.Quantize.qdp(
-        Vectors.dot(col("xs"), col("xs"))
-          - lit(2) * Vectors.dot(col("xs"), col("cw")) + col("cc"), 6))
-      .groupBy("neighbor_id", "j")
-      .agg(min_by(col("code_id"), struct(col("d2"), col("code_id"))).as("code"))
-
   private def metaOf(df: DataFrame, metaCols: Seq[String]): DataFrame =
     df.select((col("vec_id").as("neighbor_id") +: metaCols.map(col)): _*)
-
-  /** The [[Pq]]-rule deterministic codebook sample over a prepped
-    * corpus: the first `nCodes` ids under hash order, each split into
-    * `m` subvectors of length `sub`. Shared by [[write]] and
-    * [[retrain]] so a retrain's codebook can't drift from the build
-    * rule. */
-  private def sampleCodebook(c: DataFrame, nCodes: Int, m: Int,
-                             sub: Int): DataFrame =
-    c.orderBy(Pq.sampleOrd: _*).limit(nCodes)
-      .select(col("neighbor_id").as("code_id"),
-        explode(transform(sequence(lit(0), lit(m - 1)),
-          j => struct(j.as("j"),
-            slice(col("ce"), j * sub + 1, lit(sub)).as("sv")))).as("s"))
-      .select(col("s.j").as("j"), col("code_id"), col("s.sv").as("cw"))
-      .withColumn("cc", Vectors.dot(col("cw"), col("cw")))
 
   /** Build and commit a full index over `corpus` (vec_id, embedding);
     * returns the committed version. Quantizers default to [[Pq]]'s
@@ -132,19 +94,13 @@ object AnnIndex {
             centroids: Option[DataFrame] = None): Int = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val spark = corpus.sparkSession
-    val sub = dim / m
-    val c = Pq.prep(corpus)
-    val cents = centroids match {
-      case Some(tr) => Knn.assembleCentroids(tr)
-      case None => c.orderBy(Pq.sampleOrd: _*).limit(nCentroids)
-        .select(col("neighbor_id").as("cent_id"), col("ce").as("cent"),
-          col("cn").as("centn"))
-    }
-    val cb = sampleCodebook(c, nCodes, m, sub)
+    val c = corpusSide(corpus)
+    val cents = centroids.fold(sampledCentroids(c, nCentroids))(trainedCentroids)
+    val cb = sampleCodebook(c, nCodes, m, dim / m)
     Store.commit(spark, name, Map(
       "cents" -> cents, "codebook" -> cb,
-      "assign" -> assign(c, broadcast(cents)),
-      "codes" -> encode(c, broadcast(cb)),
+      "assign" -> nearestCentroid(c, broadcast(cents)),
+      "codes" -> pqEncode(c, broadcast(cb)),
       "vectors" -> storedVectors(corpus)) ++
       Option.when(metaCols.nonEmpty)("meta" -> metaOf(corpus, metaCols)),
       buckets)
@@ -165,7 +121,7 @@ object AnnIndex {
     val p = Store.pin(spark, name)
     val cents = broadcast(p.table("cents"))
     val cb = broadcast(p.table("codebook"))
-    val inc = Pq.prep(incoming)
+    val inc = corpusSide(incoming)
     import graft.operators.Merge
     // an index written with metaCols keeps its metadata current: the
     // incoming batch must carry the same columns (fail-fast select)
@@ -176,9 +132,9 @@ object AnnIndex {
         Seq("neighbor_id"))
     }
     Store.commit(spark, name, Map(
-      "assign" -> Merge.upsert(p.table("assign"), assign(inc, cents),
+      "assign" -> Merge.upsert(p.table("assign"), nearestCentroid(inc, cents),
         Seq("neighbor_id")),
-      "codes" -> Merge.upsert(p.table("codes"), encode(inc, cb),
+      "codes" -> Merge.upsert(p.table("codes"), pqEncode(inc, cb),
         Seq("neighbor_id", "j")),
       "vectors" -> Merge.upsert(p.table("vectors"), storedVectors(incoming),
         Seq("neighbor_id"))) ++ meta,
@@ -247,13 +203,13 @@ object AnnIndex {
         (max(col("j")) + 1).as("m"), max(size(col("cw"))).as("sub")).head()
     val (nCodes, m, sub) =
       (geo.getLong(0).toInt, geo.getInt(1), geo.getInt(2))
-    val cents = Knn.assembleCentroids(KMeans.lloyd(corpus, k, iters))
-    val c = Pq.prep(corpus)
+    val cents = trainedCentroids(KMeans.lloyd(corpus, k, iters))
+    val c = corpusSide(corpus)
     val cb = sampleCodebook(c, nCodes, m, sub)
     Store.commit(spark, name, Map(
       "cents" -> cents, "codebook" -> cb,
-      "assign" -> assign(c, broadcast(cents)),
-      "codes" -> encode(c, broadcast(cb))),
+      "assign" -> nearestCentroid(c, broadcast(cents)),
+      "codes" -> pqEncode(c, broadcast(cb))),
       buckets,
       // a retrain re-fits quantizers and re-encodes, but the stored
       // vectors (and metadata) pass through UNTOUCHED — carry them so
@@ -380,11 +336,8 @@ object AnnIndex {
   def fit(spark: SparkSession, name: String): DataFrame = {
     val p = Store.pin(spark, name)
     val cents = broadcast(p.table("cents"))
-    val vecs = p.table("vectors")
-      .select(col("neighbor_id"),
-        Vectors.asDouble(col("embedding")).as("ce"), col("cn"))
     p.table("assign")
-      .join(vecs, "neighbor_id")
+      .join(storedCorpus(p.table("vectors")), "neighbor_id")
       .join(cents, "cent_id")
       .withColumn("csim", centSim(col("ce"), col("cn")))
       .groupBy("cent_id")
@@ -452,21 +405,10 @@ object AnnIndex {
         s"index $name has no metadata member; write it with metaCols")
     val cents = broadcast(p.table("cents"))
     val cb = broadcast(p.table("codebook"))
-    val q = queries.select((col("vec_id").as("query_id") +:
-        filterKeys.map(fk => col(fk).as(s"__q_$fk"))) :+
-        Vectors.asDouble(col("embedding")).as("qe"): _*)
-      .withColumn("qn", Vectors.norm(col("qe")))
-    val probes = q.join(cents)
-      .withColumn("csim", centSim(col("qe"), col("qn")))
-      .groupBy("query_id")
-      .agg(Knn.topKAgg(col("csim"), col("cent_id"), nProbe).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("cent_id"))
-    val qtab = broadcast(q.join(cb)
-      .select(col("query_id"), col("j"), col("code_id").as("code"),
-        graft.functions.Quantize.qdp(Vectors.dot(
-          slice(col("qe"), col("j") * size(col("cw")) + 1, size(col("cw"))),
-          col("cw")), 6).as("qdot")))
-    val rawCand = probes
+    val q = querySide(queries,
+      filterKeys.map(fk => col(fk).as(s"__q_$fk")))
+    val qtab = adcTable(q, cb)
+    val rawCand = probeCells(q, cents, nProbe)
       .join(p.table("assign"), "cent_id")
       .select("query_id", "neighbor_id")
     // metadata filter BEFORE ADC: join the bucketed meta member on the
@@ -482,23 +424,15 @@ object AnnIndex {
             filterKeys.map(fk => col(s"__q_$fk")): _*)), "query_id")) {
         (df, fk) => df.filter(col(fk) === col(s"__q_$fk"))
       }.select("query_id", "neighbor_id")
-    val adc = cand
-      .join(p.table("codes"), "neighbor_id")
-      .join(qtab, Seq("query_id", "j", "code"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(round(sum(col("qdot").cast("decimal(28,12)")), 6).cast("double")
-        .as("adc"))
-    val short = adc.groupBy("query_id")
-      .agg(Knn.topKAgg(col("adc"), col("neighbor_id"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
-    val scored = short
-      .join(q.select("query_id", "qe", "qn"), "query_id")
-      .join(p.table("vectors")
-        .select(col("neighbor_id"),
-          Vectors.asDouble(col("embedding")).as("ce"), col("cn")),
-        "neighbor_id")
-      .withColumn("sim",
-        Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
-    Knn.rankTopK(scored.select("query_id", "neighbor_id", "sim"), k)
+    val adc = adcScore(cand, p.table("codes"), qtab)
+    rerank(shortlisted(adc, "adc", shortlist), q,
+      storedCorpus(p.table("vectors")), k)
   }
+
+  /** The stored `vectors` member in the working corpus form
+    * (neighbor_id, ce, cn): the double cast is exact and cn is the
+    * stored norm. */
+  private def storedCorpus(vectors: DataFrame): DataFrame =
+    vectors.select(col("neighbor_id"),
+      Vectors.asDouble(col("embedding")).as("ce"), col("cn"))
 }

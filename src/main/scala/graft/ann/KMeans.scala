@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.DecimalType
 import graft.Caching
 import graft.functions.Vectors
 
+import VectorStages._
+
 /** Lloyd's k-means over an embedding column — the centroid-training
   * step [[Knn.ivfTopK]] assumes (its scaladoc: "swap for k-means
   * outputs in production"). Coarse IVF quantization per Jégou et al.
@@ -44,17 +46,14 @@ object KMeans {
     * rows — cent_id is the seed vector's vec_id, `value` rounded to
     * 6 dp. A cluster that receives no vectors in a round (the classic
     * Lloyd empty-cluster degeneracy, e.g. duplicate seeds) carries its
-    * previous centroid forward, so the output always has exactly k
-    * centroids. */
+    * previous centroid forward, so the output has exactly
+    * min(k, |corpus|) centroids: a corpus of fewer than k vectors seeds
+    * only |corpus| of them. */
   def lloyd(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 1, "k and iters must be positive")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = Caching.persisted(
-      corpus.select(col("vec_id").cast("long").as("vec_id"),
-          Vectors.asDouble(col("embedding")).as("e"))
-        .withColumn("nrm", Vectors.norm(col("e")))
-        .repartition(col("vec_id")))
+    val c = Caching.persisted(kmeansSide(corpus).repartition(col("vec_id")))
     // The model state is k·dim scalars — DRIVER-RESIDENT between
     // rounds (the MLlib k-means shape: collect the new centers each
     // iteration). The earlier DataFrame-state form paid two
@@ -76,11 +75,7 @@ object KMeans {
       // come back from the vec_id-partitioned cache via a
       // partition-aligned join (both sides hash(vec_id) — no exchange
       // on the corpus side, so no vectors cross the wire).
-      val assigned = c.join(ct)
-        .withColumn("csim", Vectors.qcos(col("e"), col("cent"), col("nrm") * col("centn")))
-        .groupBy("vec_id")
-        .agg(max_by(col("cent_id"),
-          struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id"))
+      val assigned = nearestCentroid(c, ct, "vec_id", "e", "nrm")
       val dims = c.join(assigned, Seq("vec_id"))
         .select(col("cent_id"), posexplode(col("e")))
         .groupBy(col("cent_id"), col("pos").as("dim"))
@@ -104,22 +99,17 @@ object KMeans {
   }
 
   /** Nearest trained centroid per corpus vector — the serving half of
-    * [[lloyd]] (its per-round assignment step, factored for consumers
-    * that cluster once and then slice by cluster): (vec_id, cent_id),
-    * cosine rounded to 6 dp, argmax tie-broken to the smallest
-    * cent_id — the same total order as the training rounds, so
-    * assignments can't drift from the fit. `centroids` takes
-    * [[lloyd]]'s (cent_id, dim, value) output directly. Plan:
+    * [[lloyd]] (its per-round assignment step, for consumers that
+    * cluster once and then slice by cluster): (vec_id, cent_id), the
+    * [[VectorStages]] assignment the training rounds run. `centroids`
+    * takes [[lloyd]]'s (cent_id, dim, value) output directly. Plan:
     * broadcast-centroid map-only product (corpus × O(k) constants)
     * plus one max_by partial aggregate — no corpus-sized join. */
-  def assign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val c = corpus.select(col("vec_id").cast("long").as("vec_id"),
-        Vectors.asDouble(col("embedding")).as("e"))
-      .withColumn("nrm", Vectors.norm(col("e")))
-    c.join(Knn.assembleCentroids(centroids))
-      .withColumn("csim", Vectors.qcos(col("e"), col("cent"), col("nrm") * col("centn")))
-      .groupBy("vec_id")
-      .agg(max_by(col("cent_id"),
-        struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id"))
-  }
+  def assign(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    nearestCentroid(kmeansSide(corpus), trainedCentroids(centroids),
+      "vec_id", "e", "nrm")
+
+  /** (vec_id as long, e, nrm): k-means' prep of a corpus. */
+  private def kmeansSide(corpus: DataFrame): DataFrame =
+    prep(corpus, col("vec_id").cast("long").as("vec_id"), "e", "nrm")
 }

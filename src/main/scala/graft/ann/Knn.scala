@@ -7,6 +7,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 import graft.Caching
 import graft.functions.{TopKPairs, Vectors}
 
+import VectorStages._
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * - [[bruteForceTopK]] is the exact baseline: broadcast the (small)
@@ -47,12 +49,8 @@ object Knn {
     // Norms computed once per row before the join; per-pair work is a
     // single codegen'd dot product. Same float ops as cosine() — the
     // divisor is the identical sqrt(dot) values — so results match.
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe"))))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      Vectors.asDouble(col("embedding")).as("ce"))
-      .withColumn("cn", Vectors.norm(col("ce")))
+    val q = broadcast(querySide(queries))
+    val c = corpusSide(corpus)
     val scored = q.join(c)
       .withColumn("sim",
         Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
@@ -76,14 +74,8 @@ object Knn {
   def filteredTopK(queries: DataFrame, corpus: DataFrame,
                    filterKeys: Seq[String], k: Int): DataFrame = {
     require(filterKeys.nonEmpty, "filteredTopK needs at least one filter key")
-    val q = broadcast(queries.select(
-      (col("vec_id").as("query_id") +: filterKeys.map(col)) :+
-        Vectors.asDouble(col("embedding")).as("qe"): _*)
-      .withColumn("qn", Vectors.norm(col("qe"))))
-    val c = corpus.select(
-      (col("vec_id").as("neighbor_id") +: filterKeys.map(col)) :+
-        Vectors.asDouble(col("embedding")).as("ce"): _*)
-      .withColumn("cn", Vectors.norm(col("ce")))
+    val q = broadcast(querySide(queries, filterKeys.map(col)))
+    val c = corpusSide(corpus, filterKeys.map(col))
     val scored = q.join(c, filterKeys)
       .withColumn("sim",
         Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
@@ -215,29 +207,24 @@ object Knn {
     * occupancy, never |Q|x|C|. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               planes: Int = 4, tables: Int = 4): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
-      .withColumn("sig", lshBucket(col("qe"), planes * tables))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      Vectors.asDouble(col("embedding")).as("ce"))
-      .withColumn("cn", Vectors.norm(col("ce")))
-      .withColumn("sig", lshBucket(col("ce"), planes * tables))
-    def banded(df: DataFrame, id: String): DataFrame =
-      df.select(col(id), explode(
-          transform(sequence(lit(0), lit(tables - 1)),
-            t => struct(t.as("t"),
-              col("sig").substr(t * planes + 1, lit(planes)).as("bucket")))).as("b"))
-        .select(col(id), col("b.t"), col("b.bucket"))
-    val cand = banded(q, "query_id").join(banded(c, "neighbor_id"), Seq("t", "bucket"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cand
-      .join(q.select("query_id", "qe", "qn"), "query_id")
-      .join(c.select("neighbor_id", "ce", "cn"), "neighbor_id")
-      .withColumn("sim",
-        Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
-    rankTopK(scored.select("query_id", "neighbor_id", "sim"), k)
+    val (q, c) = lshSides(queries, corpus, planes, tables)
+    rerank(lshCandidates(q, c, planes, tables), q, c, k)
   }
+
+  /** The signed query and corpus sides of [[lshTopK]] and
+    * [[lshRangeSearch]]. */
+  private def lshSides(queries: DataFrame, corpus: DataFrame, planes: Int,
+                       tables: Int): (DataFrame, DataFrame) =
+    (lshSigned(querySide(queries), "qe", planes, tables),
+      lshSigned(corpusSide(corpus), "ce", planes, tables))
+
+  /** Distinct (query_id, neighbor_id) pairs colliding in any table:
+    * explode -> hash shuffle on (table, bucket) -> equi-join. */
+  private def lshCandidates(q: DataFrame, c: DataFrame, planes: Int,
+                            tables: Int): DataFrame =
+    banded(q, "query_id", planes, tables)
+      .join(banded(c, "neighbor_id", planes, tables), Seq("t", "bucket"))
+      .select("query_id", "neighbor_id").distinct()
 
   /** Radius (range) search: every corpus neighbor with cosine >=
     * minSim per query — the "find all sufficiently-similar documents"
@@ -252,27 +239,8 @@ object Knn {
     * → distinct → fetch-join → filter; no per-query corpus scan. */
   def lshRangeSearch(queries: DataFrame, corpus: DataFrame, minSim: Double,
                      planes: Int = 4, tables: Int = 4): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
-      .withColumn("sig", lshBucket(col("qe"), planes * tables))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      Vectors.asDouble(col("embedding")).as("ce"))
-      .withColumn("cn", Vectors.norm(col("ce")))
-      .withColumn("sig", lshBucket(col("ce"), planes * tables))
-    def banded(df: DataFrame, id: String): DataFrame =
-      df.select(col(id), explode(
-          transform(sequence(lit(0), lit(tables - 1)),
-            t => struct(t.as("t"),
-              col("sig").substr(t * planes + 1, lit(planes)).as("bucket")))).as("b"))
-        .select(col(id), col("b.t"), col("b.bucket"))
-    banded(q, "query_id").join(banded(c, "neighbor_id"), Seq("t", "bucket"))
-      .select("query_id", "neighbor_id").distinct()
-      .join(q.select("query_id", "qe", "qn"), "query_id")
-      .join(c.select("neighbor_id", "ce", "cn"), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn"))
-          .as("sim"))
+    val (q, c) = lshSides(queries, corpus, planes, tables)
+    exactSim(lshCandidates(q, c, planes, tables), q, c)
       .filter(col("sim") >= minSim)
   }
 
@@ -344,26 +312,13 @@ object Knn {
   def knnGraphAt(vectors: DataFrame, k: Int,
                  planes: Int, tables: Int = 4): DataFrame = {
     val v = graphSigned(vectors, planes, tables)
-    knnGraphCore(v, graphBandedOf(v, planes, tables), k)
+    knnGraphCore(v, banded(v, "query_id", planes, tables), k)
   }
 
   /** The graph ops' shared signature pass: (query_id, qe, qn, sig). */
   private def graphSigned(vectors: DataFrame, planes: Int,
                           tables: Int): DataFrame =
-    vectors.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
-      .withColumn("sig", lshBucket(col("qe"), planes * tables))
-
-  /** The per-table band rows (query_id, t, bucket) of a signed frame —
-    * map-only slice-and-explode. */
-  private def graphBandedOf(v: DataFrame, planes: Int,
-                            tables: Int): DataFrame =
-    v.select(col("query_id"), explode(
-        transform(sequence(lit(0), lit(tables - 1)),
-          t => struct(t.as("t"),
-            col("sig").substr(t * planes + 1, lit(planes)).as("bucket")))).as("b"))
-      .select(col("query_id"), col("b.t"), col("b.bucket"))
+    lshSigned(querySide(vectors), "qe", planes, tables)
 
   /** Candidate self-join + exact-cosine bounded-heap rank over
     * prepared graph frames — the tail both [[knnGraphAt]] and the
@@ -376,13 +331,8 @@ object Knn {
         col("t"), col("bucket")), Seq("t", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = cand
-      .join(v.select("query_id", "qe", "qn"), "query_id")
-      .join(v.select(col("query_id").as("neighbor_id"),
-        col("qe").as("ce"), col("qn").as("cn")), "neighbor_id")
-      .withColumn("sim",
-        Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
-    rankTopK(scored.select("query_id", "neighbor_id", "sim"), k)
+    rerank(cand, v, v.select(col("query_id").as("neighbor_id"),
+      col("qe").as("ce"), col("qn").as("cn")), k)
   }
 
   /** The guard threshold [[knnGraphGuarded]] defaults to: 8× the
@@ -412,12 +362,7 @@ object Knn {
                            maxOccupancy: Long = DefaultMaxGraphOccupancy): DataFrame = {
     val n = vectors.count()
     val p = planes.getOrElse(derivePlanes(n, targetOccupancy))
-    val banded = graphBandedOf(graphSigned(vectors, p, tables), p, tables)
-    banded.groupBy("t", "bucket").agg(count(lit(1)).as("occ"))
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n_buckets"),
-        coalesce(max("occ"), lit(0L)).as("max_occupancy"),
-        coalesce(sum(col("occ") * (col("occ") - 1)), lit(0L))
-          .as("candidate_rows"))
+    occupancy(banded(graphSigned(vectors, p, tables), "query_id", p, tables))
       .select(lit(p).as("planes"), lit(tables).as("tables"),
         lit(n).as("n_vectors"), col("n_buckets"), col("max_occupancy"),
         col("candidate_rows"),
@@ -434,12 +379,21 @@ object Knn {
     math.max(16L, math.ceil(math.sqrt(math.max(0L, n).toDouble)).toLong)
       .min(Int.MaxValue.toLong).toInt
 
-  /** The guard's measurement stage — sign + persist + band + ONE
-    * partial-aggregated occupancy pass (bucket count, max occupancy,
-    * and the exact candidate bill Σ occ·(occ−1) come out of the same
-    * row) — factored so [[knnGraphGuarded]] and [[knnGraphLedgered]]
-    * decide from the SAME implementation (two copies of the
-    * control-plane measurement could silently drift). `release()`
+  /** The one occupancy measurement of a banded signature frame: a
+    * single partial-aggregated pass whose one row holds (n_buckets,
+    * max_occupancy, candidate_rows = Σ occ·(occ−1)).
+    * [[graphOccupancyReport]] and the guard ([[measureGuard]]) both
+    * read it. */
+  private def occupancy(banded: DataFrame): DataFrame =
+    banded.groupBy("t", "bucket").agg(count(lit(1)).as("occ"))
+      .agg(coalesce(count(lit(1)), lit(0L)).as("n_buckets"),
+        coalesce(max("occ"), lit(0L)).as("max_occupancy"),
+        coalesce(sum(col("occ") * (col("occ") - 1)), lit(0L))
+          .as("candidate_rows"))
+
+  /** The guard's measurement stage — sign + persist + band + the one
+    * [[occupancy]] pass — shared by [[knnGraphGuarded]] and
+    * [[knnGraphLedgered]], so both decide from one measurement. `release()`
     * drops the persisted signature frame on branches that will never
     * read it (the IVF route and fail-fast): the Caching no-unpersist
     * rationale — "the consumer hasn't run yet" — doesn't apply when
@@ -455,13 +409,10 @@ object Knn {
     val n = vectors.count()
     val p = planes.getOrElse(derivePlanes(n, targetOccupancy))
     val v = Caching.persisted(graphSigned(vectors, p, tables))
-    val banded = graphBandedOf(v, p, tables)
+    val b = banded(v, "query_id", p, tables)
     // control-plane: one row out of a partial-aggregated count
-    val r = banded.groupBy("t", "bucket").agg(count(lit(1)).as("occ"))
-      .agg(coalesce(count(lit(1)), lit(0L)),
-        coalesce(max("occ"), lit(0L)),
-        coalesce(sum(col("occ") * (col("occ") - 1)), lit(0L))).head()
-    GuardMeasure(n, p, v, banded, r.getLong(0), r.getLong(1), r.getLong(2))
+    val r = occupancy(b).head()
+    GuardMeasure(n, p, v, b, r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** [[knnGraph]] with the OCCUPANCY GUARD closed over it — the
@@ -683,12 +634,8 @@ object Knn {
     * doc_id, sim). */
   def rerankByCosine(hits: DataFrame, queries: DataFrame,
                      corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
-    val c = corpus.select(col("vec_id").as("doc_id"),
-      Vectors.asDouble(col("embedding")).as("ce"))
-      .withColumn("cn", Vectors.norm(col("ce")))
+    val q = querySide(queries)
+    val c = prep(corpus, col("vec_id").as("doc_id"), "ce", "cn")
     val scored = hits.select("query_id", "doc_id")
       .join(q, "query_id").join(c, "doc_id")
       .withColumn("sim",
@@ -715,13 +662,8 @@ object Knn {
     * and ranking are engine-reproducible. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val c = prepCorpus(corpus)
-    val cents = broadcast(c.orderBy(
-        graft.functions.Hashing.h32(col("neighbor_id").cast("string")),
-        col("neighbor_id")).limit(nCentroids)
-      .select(col("neighbor_id").as("cent_id"), col("ce").as("cent"),
-        col("cn").as("centn")))
-    ivfCore(queries, c, cents, k, nProbe)
+    val c = corpusSide(corpus)
+    ivfCore(queries, c, broadcast(sampledCentroids(c, nCentroids)), k, nProbe)
   }
 
   /** IVF top-k with externally trained centroids — the production
@@ -731,18 +673,7 @@ object Knn {
     * broadcast (k·dim scalars — driver-free, one tiny aggregation). */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               centroids: DataFrame, nProbe: Int): DataFrame =
-    ivfCore(queries, prepCorpus(corpus), assembleCentroids(centroids), k, nProbe)
-
-  /** [[KMeans.lloyd]]'s (cent_id, dim, value) scalar rows reassembled
-    * into dim-ordered broadcast arrays (k·dim scalars — driver-free,
-    * one tiny aggregation). Package-visible: [[AnnIndex]] reuses it
-    * for trained writes and retrains. */
-  private[ann] def assembleCentroids(centroids: DataFrame): DataFrame =
-    broadcast(centroids
-      .groupBy(col("cent_id").cast("long").as("cent_id"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("value")))).as("dv"))
-      .select(col("cent_id"), transform(col("dv"), x => x("value")).as("cent"))
-      .withColumn("centn", Vectors.norm(col("cent"))))
+    ivfCore(queries, corpusSide(corpus), trainedCentroids(centroids), k, nProbe)
 
   /** SemDeDup-style semantic dedup pairs (Abbas et al. 2023: cluster
     * the embedding space with k-means, then search for near-duplicates
@@ -758,16 +689,8 @@ object Knn {
     * never an all-pairs stage across clusters. */
   def semanticDedupPairs(vectors: DataFrame, centroids: DataFrame,
                          minSim: Double): DataFrame = {
-    val cents = assembleCentroids(centroids)
-    def centSim(e: Column, n: Column): Column =
-      Vectors.qcos(e, col("cent"), n * col("centn"))
-    val assigned = Caching.persisted(
-      prepCorpus(vectors).join(cents)
-        .withColumn("csim", centSim(col("ce"), col("cn")))
-        .groupBy("neighbor_id")
-        .agg(first(col("ce")).as("ce"), first(col("cn")).as("cn"),
-          max_by(col("cent_id"),
-            struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id")))
+    val assigned = Caching.persisted(nearestCentroid(corpusSide(vectors),
+      trainedCentroids(centroids), carry = Seq("ce", "cn")))
     assigned.as("a").join(assigned.as("b"),
         col("a.cent_id") === col("b.cent_id") &&
           col("a.neighbor_id") < col("b.neighbor_id"))
@@ -778,37 +701,15 @@ object Knn {
       .filter(col("sim") >= minSim)
   }
 
-  private def prepCorpus(corpus: DataFrame): DataFrame =
-    corpus.select(col("vec_id").as("neighbor_id"),
-      Vectors.asDouble(col("embedding")).as("ce"))
-      .withColumn("cn", Vectors.norm(col("ce")))
-
   /** Shared IVF search: assign corpus vectors to their nearest
     * broadcast centroid, pick each query's nProbe nearest centroids,
-    * equi-join on cent_id, exact-cosine rank. */
+    * equi-join on cent_id, exact-cosine rank. Both sides carry their
+    * vectors through the aggregate, so the cell join scores directly. */
   private def ivfCore(queries: DataFrame, c: DataFrame, cents: DataFrame,
                       k: Int, nProbe: Int): DataFrame = {
-    def centSim(e: Column, n: Column): Column =
-      Vectors.qcos(e, col("cent"), n * col("centn"))
-    // argmax over centroids (csim desc, cent_id asc) as a max_by
-    // aggregation — partial-aggregates like rankTopK; ce/cn are
-    // functionally dependent on neighbor_id so first() is exact
-    val assigned = c.join(cents)
-      .withColumn("csim", centSim(col("ce"), col("cn")))
-      .groupBy("neighbor_id")
-      .agg(first(col("ce")).as("ce"), first(col("cn")).as("cn"),
-        max_by(col("cent_id"),
-          struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
-    val probes = q.join(cents)
-      .withColumn("csim", centSim(col("qe"), col("qn")))
-      .groupBy("query_id")
-      .agg(first(col("qe")).as("qe"), first(col("qn")).as("qn"),
-        topKAgg(col("csim"), col("cent_id"), nProbe).as("top"))
-      .select(col("query_id"), col("qe"), col("qn"),
-        explode(col("top.id")).as("cent_id"))
+    val assigned = nearestCentroid(c, cents, carry = Seq("ce", "cn"))
+    val probes = probeCells(querySide(queries), cents, nProbe,
+      carry = Seq("qe", "qn"))
     val scored = probes.join(assigned, "cent_id")
       .withColumn("sim",
         Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
@@ -832,20 +733,9 @@ object Knn {
     * (query_id, rank, neighbor_id, sim). */
   def knnGraphIvf(vectors: DataFrame, k: Int,
                   nCentroids: Int = 16): DataFrame = {
-    val c = prepCorpus(vectors)
-    val cents = broadcast(c.orderBy(
-        graft.functions.Hashing.h32(col("neighbor_id").cast("string")),
-        col("neighbor_id")).limit(nCentroids)
-      .select(col("neighbor_id").as("cent_id"), col("ce").as("cent"),
-        col("cn").as("centn")))
-    def centSim(e: Column, n: Column): Column =
-      Vectors.qcos(e, col("cent"), n * col("centn"))
-    val assigned = c.join(cents)
-      .withColumn("csim", centSim(col("ce"), col("cn")))
-      .groupBy("neighbor_id")
-      .agg(first(col("ce")).as("ce"), first(col("cn")).as("cn"),
-        max_by(col("cent_id"),
-          struct(col("csim"), (-col("cent_id")).as("nid"))).as("cent_id"))
+    val c = corpusSide(vectors)
+    val assigned = nearestCentroid(c, broadcast(sampledCentroids(c, nCentroids)),
+      carry = Seq("ce", "cn"))
     val scored = assigned
       .select(col("neighbor_id").as("query_id"), col("ce").as("qe"),
         col("cn").as("qn"), col("cent_id"))
@@ -878,15 +768,9 @@ object Knn {
   def embeddingNearDupPairs(vectors: DataFrame, minSim: Double,
                             planes: Int = 6, tables: Int = 4): DataFrame = {
     val v = Caching.persisted(
-      vectors.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("e"))
-        .withColumn("nrm", Vectors.norm(col("e")))
-        .withColumn("sig", lshBucket(col("e"), planes * tables)))
-    val banded = v.select(col("vec_id"), explode(
-        transform(sequence(lit(0), lit(tables - 1)),
-          t => struct(t.as("t"),
-            col("sig").substr(t * planes + 1, lit(planes)).as("bucket")))).as("b"))
-      .select(col("vec_id"), col("b.t"), col("b.bucket"))
-    val cand = banded.as("a").join(banded.as("b"),
+      lshSigned(prep(vectors, col("vec_id"), "e", "nrm"), "e", planes, tables))
+    val b = banded(v, "vec_id", planes, tables)
+    val cand = b.as("a").join(b.as("b"),
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
@@ -902,8 +786,7 @@ object Knn {
   /** Exhaustive all-pairs variant of [[embeddingNearDupPairs]] — exact
     * recall, O(n²) nested-loop plan. Small-data / oracle use only. */
   def embeddingNearDupPairsExact(vectors: DataFrame, minSim: Double): DataFrame = {
-    val v = vectors.select(col("vec_id"), Vectors.asDouble(col("embedding")).as("e"))
-      .withColumn("nrm", Vectors.norm(col("e")))
+    val v = prep(vectors, col("vec_id"), "e", "nrm")
     v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         Vectors.qcos(col("a.e"), col("b.e"), col("a.nrm") * col("b.nrm"))

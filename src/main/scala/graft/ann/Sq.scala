@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
 
+import VectorStages._
+
 /** Scalar-quantized (SQ8-style) approximate nearest-neighbor search —
   * the simplest compressed-domain scale path, the standard alternative
   * to [[Pq]]'s product quantization (FAISS's `IndexScalarQuantizer`
@@ -49,7 +51,7 @@ object Sq {
   def sqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              levels: Int = 256, shortlist: Int = 100): DataFrame = {
     require(levels >= 2, "need at least 2 quantization levels")
-    val c = graft.Caching.persisted(Pq.prep(corpus))
+    val c = graft.Caching.persisted(corpusSide(corpus))
 
     // 1. per-dim bounds -> one broadcast row of structs (d, lo, hi),
     // sorted by dim index so element_at(b, i+1) is dim i
@@ -71,9 +73,7 @@ object Sq {
           least(floor((x - lo(i)) / step(i)), lit(levels - 1L)))
           .cast("int")).as("codes"))
 
-    val q = queries.select(col("vec_id").as("query_id"),
-        Vectors.asDouble(col("embedding")).as("qe"))
-      .withColumn("qn", Vectors.norm(col("qe")))
+    val q = querySide(queries)
 
     // 3. reconstruct-and-dot against the codes only
     val recon = q.join(codes).crossJoin(bounds)
@@ -83,14 +83,6 @@ object Sq {
         Vectors.dot(col("qe"), col("xhat")), 6))
 
     // 4. bounded-heap shortlist, 5. exact re-rank
-    val short = recon.groupBy("query_id")
-      .agg(Knn.topKAgg(col("sq"), col("neighbor_id"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
-    val scored = short
-      .join(q.select("query_id", "qe", "qn"), "query_id")
-      .join(c.select("neighbor_id", "ce", "cn"), "neighbor_id")
-      .withColumn("sim",
-        Vectors.qcos(col("qe"), col("ce"), col("qn") * col("cn")))
-    Knn.rankTopK(scored.select("query_id", "neighbor_id", "sim"), k)
+    rerank(shortlisted(recon, "sq", shortlist), q, c, k)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
-import graft.ann.{AnnIndex, Pq}
+import graft.ann.{AnnIndex, KMeans, Pq}
 import graft.sources.BucketedStore
 
 class AnnIndexSpec extends SparkSpec {
@@ -216,6 +216,30 @@ class AnnIndexSpec extends SparkSpec {
       .collect().map(_.toString).sorted
     assert(got.sameElements(direct),
       "persistence must change where stages run, not what they compute")
+  }
+
+  test("trained quantizer: index probe equals Pq's trained overload, assign member equals KMeans.assign") {
+    dropIndex("atq")
+    val lloyd = Caching.persisted(KMeans.lloyd(corpus, k = 8, iters = 2))
+    try {
+      AnnIndex.write(corpus, "atq", m = 4, nCodes = 16, dim = 64,
+        buckets = 4, centroids = Some(lloyd))
+      val got = AnnIndex.topK(spark, "atq", queries, k = 5, nProbe = 2,
+        shortlist = 100).collect().map(_.toString).sorted
+      val direct = Pq.ivfPqTopK(queries, corpus, k = 5, centroids = lloyd,
+        nProbe = 2, m = 4, nCodes = 16, shortlist = 100, dim = 64)
+        .collect().map(_.toString).sorted
+      assert(got.nonEmpty && got.sameElements(direct),
+        "a trained index must probe exactly like the trained Pq pipeline")
+      def pairs(df: org.apache.spark.sql.DataFrame): Array[String] =
+        df.select(col("neighbor_id").cast("long"), col("cent_id").cast("long"))
+          .collect().map(_.toString).sorted
+      val stored = pairs(AnnIndex.Store.pin(spark, "atq").table("assign"))
+      val served = pairs(KMeans.assign(corpus, lloyd)
+        .withColumnRenamed("vec_id", "neighbor_id"))
+      assert(stored.length == corpus.count() && stored.sameElements(served),
+        "the index's assignment must be KMeans.assign's")
+    } finally { lloyd.unpersist(); dropIndex("atq") }
   }
 
   test("probe plan: bucketed index scans feed their joins with no Exchange") {
