@@ -12,7 +12,8 @@ import VectorStages._
   * band index ([[graft.dedup.TextDedup.writeDedupIndexBucketed]]),
   * sharing its metastore protocol: data lands in versioned tables,
   * a single `CREATE OR REPLACE VIEW` is the atomic current pointer,
-  * single-writer, one prior version retained for in-flight readers.
+  * a racing commit of the same version throws, one prior version
+  * retained for in-flight readers.
   *
   * Atomicity: the ONE `<name>_ptr` view (a literal `SELECT v`) is the
   * only pointer; [[topK]] and [[update]] resolve it once and then read

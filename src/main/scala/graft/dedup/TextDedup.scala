@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Caching
-import graft.functions.{H32Array, Hashing, MinHashMins, SortedIntersectCount, WordShingles}
-import graft.text.TextAnalysis
+import graft.functions.{H32Array, Hashing, MinHashMins, SortedIntersectCount}
+import graft.text.{TextAnalysis, TextStages}
 
 /** Document deduplication family: exact, n-gram Jaccard, MinHash+LSH,
   * SimHash. All hash math is md5-based (see [[graft.functions.Hashing]])
@@ -34,13 +34,12 @@ import graft.text.TextAnalysis
   */
 object TextDedup {
 
-  /** Distinct word 3-gram shingles of the lowercased text, as the
-    * codegen'd [[graft.functions.WordShingles]] kernel. Semantically
-    * identical to the HOF formulation
+  /** Distinct word 3-gram shingles of the lowercased text
+    * ([[graft.text.TextStages.shingles]]). Semantically identical to
+    * the HOF formulation
     * array_distinct(transform(seq, i => concat_ws(" ", slice(toks, i, n))))
     * over whitespace tokens (spec-checked equal). */
-  def shingles(text: Column, n: Int = 3): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
+  def shingles(text: Column, n: Int = 3): Column = TextStages.shingles(text, n)
 
   /** Exact-dup metrics via content-hash groupBy: (n_docs, n_groups,
     * n_dupes) as one row. */
@@ -544,8 +543,8 @@ object TextDedup {
   // bucketed by (band, bsig) — candidate generation joins it with NO
   // exchange on the corpus side — and `<name>_docs` holds (doc_id, sh,
   // sig) bucketed by doc_id — exact verification fetches corpus
-  // shingles, again exchange-free on the index side. Single-writer,
-  // like every log-less table format.
+  // shingles, again exchange-free on the index side. A racing commit
+  // of the same version throws (the store's version claim).
 
   import graft.sources.BucketedStore
   import graft.sources.BucketedStore.{Carry, Layout, Member, Pinned}

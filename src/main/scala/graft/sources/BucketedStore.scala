@@ -37,10 +37,14 @@ import org.apache.spark.sql.functions.col
   *    repointed AFTER the ptr, sequentially, each by a drop and a
   *    create — NOT safe for queries joining across members, and a
   *    query naming one can briefly find it missing mid-commit.
+  *  - claim: `<name>_claim_<N>`, a view that lives while a commit of
+  *    version N runs. Creating it is the catalog's atomic
+  *    create-if-absent ([[SnapshotStore.tryClaim]]'s one-winner
+  *    primitive, kept beside the ptr it guards): of two commits racing
+  *    for a version one proceeds, the other throws before writing.
   *
-  * Single-writer, like every log-less table format; exactly one prior
-  * version is retained for in-flight readers, older versions drop at
-  * commit.
+  * Exactly one prior version is retained for in-flight readers, older
+  * versions drop at commit.
   */
 object BucketedStore {
 
@@ -98,11 +102,31 @@ object BucketedStore {
       * failed member write never publishes a version and leaves no
       * write running into the next commit; the swap itself stays
       * strictly AFTER every member is fully written, preserving the
-      * reader guarantee (a resolved version is always complete). */
+      * reader guarantee (a resolved version is always complete).
+      * Throws IllegalStateException, before writing, when another
+      * commit holds the version (the object scaladoc's claim). */
     def commit(spark: SparkSession, name: String,
                frames: Map[String, DataFrame], buckets: Int,
                carry: Seq[Carry] = Nil): Int = {
       val v = currentVersion(spark, name).getOrElse(-1) + 1
+      val claim = s"${name}_claim_$v"
+      try spark.sql(s"CREATE VIEW ${qualified(spark, claim)} AS SELECT $v AS version")
+      catch { case e: org.apache.spark.sql.AnalysisException if exists(spark, claim) =>
+        throw new IllegalStateException(s"$kind store $name: another commit holds v$v", e)
+      }
+      try {
+        // a claim taken on a stale ptr read (the ptr moved on) is void
+        if (currentVersion(spark, name).getOrElse(-1) != v - 1)
+          throw new IllegalStateException(s"$kind store $name moved past v${v - 1}")
+        publish(spark, name, frames, buckets, carry, v)
+      } finally dropViewNoUncache(spark, claim)
+      v
+    }
+
+    /** The body of [[commit]] once version `v` is claimed. */
+    private def publish(spark: SparkSession, name: String,
+                        frames: Map[String, DataFrame], buckets: Int,
+                        carry: Seq[Carry], v: Int): Unit = {
       val carried = carry.map(_.suffix).toSet
       require(carry.forall(c => c.fromVersion >= 0 && c.fromVersion < v),
         s"carry versions must be committed and behind v$v: $carry")
@@ -202,11 +226,10 @@ object BucketedStore {
           }
         }
       }
-      v
     }
 
     /** Drop every catalog object and on-disk remnant of store `name`:
-      * ptr + convenience views, all versioned tables, and orphaned
+      * ptr + convenience views, claims, all versioned tables, and orphaned
       * managed-table directories under the session's warehouse (a
       * crashed prior JVM leaves directories with no catalog entry — the
       * in-memory catalog forgets them — and the next `saveAsTable` then
@@ -215,11 +238,12 @@ object BucketedStore {
       (s"${name}_ptr" +: suffixes.map(t => s"${name}_$t"))
         .foreach(v => spark.sql(s"DROP VIEW IF EXISTS ${qualified(spark, v)}"))
       val pat = (java.util.regex.Pattern.quote(name) +
-        "_(?:" + suffixes.mkString("|") + ")_v\\d+").r
-      // versioned members may be physical tables OR carried views —
-      // DROP TABLE on a view throws, so route by catalog type. Views
-      // drop first (a view may reference a physical sibling). Session
-      // temp views are listed too; they are never the store's.
+        "_(?:(?:" + suffixes.mkString("|") + ")_v|claim_)\\d+").r
+      // versioned members may be physical tables OR carried views (and
+      // a left-over claim is a view) — DROP TABLE on a view throws, so
+      // route by catalog type. Views drop first (a view may reference
+      // a physical sibling). Session temp views are listed too; they
+      // are never the store's.
       val versioned = spark.catalog.listTables().collect()
         .filter(t => !t.isTemporary && pat.matches(t.name))
       versioned.filter(_.tableType == "VIEW")

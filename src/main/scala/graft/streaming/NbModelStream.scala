@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.sources.SnapshotStore
-import graft.text.{NaiveBayes, TextAnalysis}
+import graft.text.{NaiveBayes, TextAnalysis, TextStages}
 
 /** Streaming classifier-model maintenance — the retrain half of the
   * [[ClassifyStream]] loop: labeled documents (human review verdicts,
@@ -55,9 +55,8 @@ object NbModelStream {
           val b = batch.persist()
           try {
             SnapshotStore.mergeInto(
-              b.select(col("label"),
-                  explode(TextAnalysis.tokens(col("__text"))).as("token"))
-                .groupBy("label", "token").agg(count(lit(1)).as("c"))
+              TextStages.termCounts(b, Seq(col("label")),
+                  TextAnalysis.tokens(col("__text")), "c")
                 .withColumn("batch_id", lit(id)),
               tokDir, Seq("batch_id", "label", "token"))
             SnapshotStore.mergeInto(

@@ -52,48 +52,22 @@ object Dsir {
     * unlike the dedup family's distinct shingles). */
   private def features(text: Column, ngrams: Int): Column = {
     val tk = TextAnalysis.tokens(text)
-    if (ngrams <= 1) tk
-    else concat(tk, when(size(tk) >= 2,
-      zip_with(slice(tk, lit(1), size(tk) - 1),
-        slice(tk, lit(2), size(tk) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>")))
+    if (ngrams <= 1) tk else concat(tk, TextStages.bigrams(tk))
   }
-
-  /** Dense per-bucket counts for one corpus: (bucket, c, n) with every
-    * bucket in [0, buckets) present (c = 0 where unobserved) and `n`
-    * the corpus' total token mass, a one-row scalar subquery over the
-    * counts. One corpus pass; output is exactly `buckets` rows. */
-  private def denseCounts(docs: DataFrame, text: Column,
-                          buckets: Int, ngrams: Int): DataFrame = {
-    val counts = docs
-      .select(explode(features(text, ngrams)).as("token"))
-      .select((Hashing.h32(col("token")) % buckets).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("c"))
-    docs.sparkSession.range(buckets).select(col("id").as("bucket"))
-      .join(counts, Seq("bucket"), "left")
-      .na.fill(0L, Seq("c"))
-      .withColumn("n", counts.agg(coalesce(sum("c"), lit(0L))).scalar())
-  }
-
-  /** Add-one log-prob of one dense side: round(ln((c+1)/(n+B)), 9). */
-  private def logp(c: Column, n: Column, buckets: Int): Column =
-    round(log((c + lit(1.0)) / (n + lit(buckets.toDouble))), 9)
 
   /** The importance model: (bucket, lr) for EVERY bucket in
     * [0, buckets), lr the exact-decimal difference of the two sides'
-    * 9-dp-rounded add-one log-probs. `buckets` rows — broadcast it. */
+    * 9-dp-rounded add-one log-probs, each side the dense
+    * [[TextStages.gridCounts]] of one corpus pass. `buckets` rows —
+    * broadcast it. */
   def model(target: DataFrame, raw: DataFrame, text: Column,
             buckets: Int = DefaultBuckets, ngrams: Int = 1): DataFrame = {
-    val t = denseCounts(target, text, buckets, ngrams)
-      .select(col("bucket"), col("c").as("ct"), col("n").as("nt"))
-    val r = denseCounts(raw, text, buckets, ngrams)
-      .select(col("bucket"), col("c").as("cr"), col("n").as("nr"))
-    t.join(r, "bucket")
-      .select(col("bucket"),
-        (logp(col("ct"), col("nt"), buckets).cast("decimal(28,12)")
-          - logp(col("cr"), col("nr"), buckets).cast("decimal(28,12)"))
-          .as("lr"))
+    def logp(side: DataFrame, as: String): DataFrame =
+      TextStages.gridCounts(side, Nil, features(text, ngrams), buckets)
+        .select(col("bucket"), TextStages.addOneLogp(col("c"), col("n"),
+          lit(buckets.toDouble)).cast("decimal(28,12)").as(as))
+    logp(target, "lp_t").join(logp(raw, "lp_r"), "bucket")
+      .select(col("bucket"), (col("lp_t") - col("lp_r")).as("lr"))
   }
 
   /** (doc_id, n_feats, w_dec) of `docs` against a PRE-BUILT model
@@ -108,26 +82,20 @@ object Dsir {
     docs
       .select(id.as("doc_id"), explode(features(text, ngrams)).as("token"))
       .select(col("doc_id"),
-        (Hashing.h32(col("token")) % buckets).as("bucket"))
+        TextStages.bucketOf(col("token"), buckets).as("bucket"))
       .join(broadcast(m), "bucket")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_feats"), sum(col("lr")).as("w_dec"))
 
-  /** [[importanceWeights]]' rounded output shape against a pre-built
+  /** [[importanceWeights]]' output shape against a pre-built
     * `m(bucket, lr)`: (doc_id, n_feats, weight). */
   def score(docs: DataFrame, id: Column, text: Column, m: DataFrame,
             buckets: Int = DefaultBuckets, ngrams: Int = 1): DataFrame =
     scoreDec(docs, id, text, m, buckets, ngrams)
+      // decimal-space round, then cast (see NaiveBayes.scoreAgainst:
+      // a half-boundary sum rounds engine-dependently on doubles)
       .select(col("doc_id"), col("n_feats"),
         round(col("w_dec"), 6).cast("double").as("weight"))
-
-  /** (doc_id, n_feats, w_dec) over the raw docs — the exact-decimal
-    * weight frame both public surfaces project from. */
-  private def weightsDec(target: DataFrame, raw: DataFrame, id: Column,
-                         text: Column, buckets: Int,
-                         ngrams: Int): DataFrame =
-    scoreDec(raw, id, text, model(target, raw, text, buckets, ngrams),
-      buckets, ngrams)
 
   /** Per-raw-doc importance weight: Σ over the doc's hashed tokens of
     * the model's log ratio — positive means target-like. Docs with no
@@ -136,11 +104,7 @@ object Dsir {
   def importanceWeights(target: DataFrame, raw: DataFrame, id: Column,
                         text: Column, buckets: Int = DefaultBuckets,
                         ngrams: Int = 1): DataFrame =
-    weightsDec(target, raw, id, text, buckets, ngrams)
-      // decimal-space round, then cast (see NaiveBayes.scoreAgainst:
-      // a half-boundary sum rounds engine-dependently on doubles)
-      .select(col("doc_id"), col("n_feats"),
-        round(col("w_dec"), 6).cast("double").as("weight"))
+    score(raw, id, text, model(target, raw, text, buckets, ngrams), buckets, ngrams)
 
   /** Deterministic Gumbel noise from the doc id: round 9-dp at each
     * log so both engines replay it; inner log clamped to −1e−9 (see

@@ -163,14 +163,10 @@ object LangIdNgram {
     val langs = broadcast(Seeds.map(_._1).toDF("lang"))
     val norm = trim(regexp_replace(
       regexp_replace(lower(text), "[^\\p{L} ]", " "), " +", " "))
-    val grams = docs
-      .select(id.as("doc_id"), norm.as("s"))
-      .select(col("doc_id"), explode(
-        when(length(col("s")) >= 3,
-          transform(sequence(lit(1), length(col("s")) - 2),
-            i => col("s").substr(i, lit(3))))
-          .otherwise(array().cast("array<string>"))).as("tg"))
-    val counts = grams.groupBy("doc_id", "tg").agg(count(lit(1)).as("n"))
+    val counts = TextStages.termCounts(docs.select(id.as("doc_id"), norm.as("s")),
+      Seq(col("doc_id")), when(length(col("s")) >= 3,
+        transform(sequence(lit(1), length(col("s")) - 2), i => col("s").substr(i, lit(3))))
+        .otherwise(array().cast("array<string>")), "n", "tg")
     val w = Window.partitionBy("doc_id").orderBy(col("n").desc, col("tg"))
     val top = counts.withColumn("dr", row_number().over(w))
       .filter(col("dr") <= K)

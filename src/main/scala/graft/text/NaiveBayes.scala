@@ -49,10 +49,8 @@ object NaiveBayes {
     // distinct-labels / distinct-vocab branches below don't each
     // re-execute the explode+shuffle subtree (the r11 single-pass
     // audit class)
-    modelFromCounts(Caching.persisted(
-      docs.select(label.cast("string").as("label"),
-          explode(TextAnalysis.tokens(text)).as("token"))
-        .groupBy("label", "token").agg(count(lit(1)).as("c"))), minDf)
+    modelFromCounts(Caching.persisted(TextStages.termCounts(docs,
+      Seq(label.cast("string").as("label")), TextAnalysis.tokens(text), "c")), minDf)
 
   /** [[model]] from an already-materialized (label, token, c) counts
     * frame — the surface incremental maintenance feeds
@@ -91,23 +89,22 @@ object NaiveBayes {
       .withColumn("n_tok", sum("c").over(wLabel))
       .withColumn("vn", count(lit(1)).over(wLabel))
       .select(col("token"), col("label"), col("c"),
-        round(log((col("c") + lit(1.0)) /
-          (col("n_tok") + col("vn")).cast("double")), 9).as("logp"))
+        TextStages.addOneLogp(col("c"), col("n_tok"), col("vn")).as("logp"))
   }
 
   /** Exact-decimal ln label priors from the train split's label
-    * document counts: (pred, prior_dec). The label-sized frame
-    * carries its own total as an unpartitioned window sum
-    * (aggregated-small receiver — no second train pass). */
+    * document counts: (pred, prior_dec). */
   def priors(trainDocs: DataFrame, label: Column): DataFrame =
     priorsFromCounts(trainDocs.select(label.cast("string").as("label"))
       .groupBy("label").agg(count(lit(1)).as("n_docs")))
 
   /** [[priors]] from an already-aggregated (label, n_docs) frame —
-    * the incremental-maintenance twin of [[modelFromCounts]]. */
+    * the incremental-maintenance twin of [[modelFromCounts]]. The total
+    * is a one-row scalar subquery over the label counts, not a window
+    * funnelling every label through one reducer. */
   def priorsFromCounts(docCounts: DataFrame): DataFrame =
     docCounts.select(col("label").as("pred"), col("n_docs"))
-      .withColumn("n_total", sum("n_docs").over(Window.partitionBy()))
+      .withColumn("n_total", docCounts.agg(sum("n_docs")).scalar())
       .select(col("pred"),
         round(log(col("n_docs").cast("double") / col("n_total")), 9)
           .cast("decimal(28,12)").as("prior_dec"))

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -56,13 +56,14 @@ object Search {
     */
   def bm25TopK(docs: DataFrame, id: Column, text: Column,
                queries: Seq[(String, Seq[String])], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
+               k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25(docs, id, text, queryTerms(docs.sparkSession, queries), k, k1, b)
+
+  /** (query_id, token) rows of keyword queries, distinct per query. */
+  private def queryTerms(spark: SparkSession,
+                         queries: Seq[(String, Seq[String])]): DataFrame = {
     import spark.implicits._
-    bm25(docs, id, text,
-      queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-        .toDF("query_id", "token"),
-      k, k1, b)
+    queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }.toDF("query_id", "token")
   }
 
   /** BM25 where each query is itself a document ("more like this"):
@@ -81,8 +82,7 @@ object Search {
   /** (doc_id, token, tf) postings of a corpus — the inverted index's
     * data plane and the shared head of every BM25 path. */
   private def buildPostings(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("doc_id"), explode(TextAnalysis.tokens(text)).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    TextStages.termCounts(docs, Seq(id.as("doc_id")), TextAnalysis.tokens(text), "tf")
 
   private def docLengths(postings: DataFrame): DataFrame =
     postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
@@ -151,18 +151,25 @@ object Search {
       .agg(graft.functions.Quantize.qdp(
         sum(col("term_score").cast(DecimalType(28, 12)))
           .cast(DoubleType), 6).as("score"))
-    perDoc.groupBy("query_id")
+    topKPerQuery(perDoc, "score", k, "score")
+  }
+
+  /** (query_id, rank, doc_id, `out`): each query's top `k` docs by
+    * `score` desc, doc_id asc, through the bounded-heap [[TopKPairs]]
+    * aggregate — k rows per (query, mapper) cross the wire, never a
+    * global sort. */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int,
+                           out: String): DataFrame =
+    scored.groupBy("query_id")
       .agg(ColumnBridge.column(TopKPairs(
-        ColumnBridge.expression(struct(col("score"), col("doc_id").cast("long"))), k)
+        ColumnBridge.expression(struct(col(score), col("doc_id").cast("long"))), k)
         .toAggregateExpression()).as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("doc_id"), col("col.sim").as("score"))
-  }
+        col("col.id").as("doc_id"), col("col.sim").as(out))
 
   // --- persisted inverted index ---------------------------------------
 
-  import org.apache.spark.sql.SparkSession
   import graft.sources.BucketedStore.{Layout, Member}
 
   /** The persisted index's store layout (members described at
@@ -333,13 +340,8 @@ object Search {
     * vocabulary sliver. */
   def probeIndex(spark: SparkSession, name: String,
                  queries: Seq[(String, Seq[String])], k: Int,
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import spark.implicits._
-    probeIndexTerms(spark, name,
-      queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-        .toDF("query_id", "token"),
-      k, k1, b)
-  }
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    probeIndexTerms(spark, name, queryTerms(spark, queries), k, k1, b)
 
   /** [[probeIndex]] with the query terms as a (query_id, token) frame
     * (distinct per query; a probe batch — broadcast-sized). The form
@@ -495,13 +497,7 @@ object Search {
         Seq("query_id", "doc_id"), "full_outer")
       .withColumn("fused", lit(alpha) * coalesce(col("nv"), lit(0.0)) +
         lit(1.0 - alpha) * coalesce(col("nl"), lit(0.0)))
-    fused.groupBy("query_id")
-      .agg(ColumnBridge.column(TopKPairs(
-        ColumnBridge.expression(struct(col("fused"), col("doc_id").cast("long"))), k)
-        .toAggregateExpression()).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("doc_id"), col("col.sim").as("fused_score"))
+    topKPerQuery(fused, "fused", k, "fused_score")
   }
 
   def rrfFuse(legs: Seq[DataFrame], k: Int, kRrf: Int = 60): DataFrame = {
@@ -519,12 +515,6 @@ object Search {
       .agg(graft.functions.Quantize.qdp(
         sum(col("term").cast(DecimalType(28, 12)))
           .cast(DoubleType), 6).as("rrf_score"))
-    fused.groupBy("query_id")
-      .agg(ColumnBridge.column(TopKPairs(
-        ColumnBridge.expression(struct(col("rrf_score"), col("doc_id").cast("long"))), k)
-        .toAggregateExpression()).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("doc_id"), col("col.sim").as("rrf_score"))
+    topKPerQuery(fused, "rrf_score", k, "rrf_score")
   }
 }

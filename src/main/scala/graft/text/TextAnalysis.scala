@@ -50,14 +50,15 @@ object TextAnalysis {
   /** Argmax over profile hit counts; 'und' when no profile hits.
     * Explicit when-chain: language L wins if its score is >= every other
     * and > 0; chain order (alphabetical) is the tiebreak. */
-  def langId(text: Column): Column = {
-    val scores = langScores(tokens(text))
-    val chain = scores.map { case (lang, s) =>
-      val geAll = scores.filter(_._1 != lang).map { case (_, o) => s >= o }.reduce(_ && _)
-      (lang, geAll && s > 0)
-    }
-    chain.foldRight(lit("und")) { case ((lang, cond), els) => when(cond, lit(lang)).otherwise(els) }
-  }
+  def langId(text: Column): Column = argmaxName(langScores(tokens(text)), "und")
+
+  /** The name whose score is >= every other's and > 0, declaration
+    * order breaking ties; `none` when no score is positive. */
+  private def argmaxName(scores: Seq[(String, Column)], none: String): Column =
+    scores.map { case (name, s) =>
+      val geAll = scores.filter(_._1 != name).map { case (_, o) => s >= o }.reduce(_ && _)
+      (name, geAll && s > 0)
+    }.foldRight(lit(none)) { case ((name, cond), els) => when(cond, lit(name)).otherwise(els) }
 
   // --- quality scoring ------------------------------------------------
 
@@ -183,8 +184,7 @@ object TextAnalysis {
     * token set per doc — no second shuffle, one aggregation pass over
     * (token, is_first_in_doc) rows. */
   def vocab(df: DataFrame, id: Column, text: Column, k: Int): DataFrame =
-    df.select(id.as("__doc"), explode(tokens(text)).as("token"))
-      .groupBy("__doc", "token").agg(count(lit(1)).as("in_doc"))
+    TextStages.termCounts(df, Seq(id.as("doc_id")), tokens(text), "in_doc")
       .groupBy("token")
       .agg(sum(col("in_doc")).as("n_occurrences"),
         count(lit(1)).as("n_docs"))
@@ -211,7 +211,7 @@ object TextAnalysis {
         .as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.item").as("token"), col("e.est").as("est"))
-    val exact = toks.groupBy("token").agg(count(lit(1)).as("exact"))
+    val exact = TextStages.termCounts(df, Nil, tokens(text), "exact")
     val total = toks.agg(count(lit(1)).as("n_total"))
     summary.join(exact, "token").crossJoin(broadcast(total))
       .withColumn("bound", floor(col("n_total") / lit(k + 1)))
@@ -233,8 +233,7 @@ object TextAnalysis {
     * bounded per-partition heap (TakeOrderedAndProject), never a
     * global sort. */
   def bpePairStats(df: DataFrame, text: Column, k: Int): DataFrame = {
-    val words = df.select(explode(tokens(text)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wn"))
+    val words = TextStages.termCounts(df, Nil, tokens(text), "wn", "word")
     // adjacent char pairs of one word: substr(i, 2) for i in 1..len-1
     // (1-based); single-char words have no pairs
     val pairList = transform(
@@ -279,8 +278,7 @@ object TextAnalysis {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = df.sparkSession
     val words0 = graft.Caching.persisted(
-      df.select(explode(bpeWords(text)).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("wn"))
+      TextStages.termCounts(df, Nil, bpeWords(text), "wn", "word")
         .select(regexp_replace(col("word"), "(.)", "[$1]").as("wr"), col("wn")))
     var cur = words0
     val merges = Vector.newBuilder[(Int, String, String, Long)]
@@ -427,35 +425,20 @@ object TextAnalysis {
     * `spark.catalog.clearCache()` after its terminal action; otherwise
     * the cached blocks linger until LRU eviction. */
   def bigramSurprisal(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val tk = tokens(text)
-    val bg = df.select(id.as("doc_id"), tk.as("tk"))
-      .filter(size(col("tk")) >= 2)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("tk")) - 2),
-        i => concat_ws(" ",
-          element_at(col("tk"), i + 1),
-          element_at(col("tk"), i + 2)))).as("bigram"))
     // persisted: tf feeds the model branch (c2 -> c1) AND the scoring
     // join, and column pruning specializes each branch's exchange so
     // ReuseExchange can't dedupe them — un-persisted, the tokenize +
     // bigram explode + (doc, bigram) shuffle runs once per branch
-    val tf = graft.Caching.persisted(
-      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")))
-    val c2 = tf.groupBy("bigram").agg(sum(col("tf")).as("c2"))
-      .withColumn("w1", split(col("bigram"), " ").getItem(0))
-    val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
+    val tf = graft.Caching.persisted(TextStages.termCounts(
+      df.select(id.as("doc_id"), tokens(text).as("tk")),
+      Seq(col("doc_id")), TextStages.bigrams(col("tk")), "tf", "bigram"))
     // surp is NOT pre-rounded — see unigramSurprisal's determinism
     // note (an intermediate round amplifies engine log2 ulp
-    // disagreements; the DECIMAL cast below is the quantizer)
-    val scored = tf.join(c2, "bigram").join(c1, "w1")
+    // disagreements; the DECIMAL cast is the quantizer)
+    TextStages.meanSurprisal(TextStages.bigramModel(tf)
       .withColumn("surp",
-        -log2(col("c2").cast(DoubleType) / col("c1").cast(DoubleType)))
-    scored.groupBy("doc_id").agg(
-      sum(col("tf")).cast("long").as("n_bigrams"),
-      // §6 quantizer on the weighted-mean quotient (Quantize scaladoc)
-      qdp(
-        sum((col("tf") * col("surp")).cast(DecimalType(28, 12))).cast(DoubleType)
-          / sum(col("tf")), 6).as("mean_surprisal"))
+        -log2(col("c2").cast(DoubleType) / col("c1").cast(DoubleType))),
+      "n_bigrams")
   }
 
   /** Jelinek–Mercer interpolated bigram surprisal — [[bigramSurprisal]]
@@ -494,37 +477,21 @@ object TextAnalysis {
     // persisted: vocabulary-sized, and read by BOTH the total agg and
     // the scoring join — un-persisted each re-runs the corpus explode
     val uni = graft.Caching.persisted(
-      base.select(explode(col("tk")).as("w2"))
-        .groupBy("w2").agg(count(lit(1)).as("ctf")))
+      TextStages.termCounts(base, Nil, col("tk"), "ctf", "w2"))
     val total = uni.agg(sum(col("ctf")).as("n_total"))
-    val bg = base.filter(size(col("tk")) >= 2)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), size(col("tk")) - 2),
-        i => concat_ws(" ",
-          element_at(col("tk"), i + 1),
-          element_at(col("tk"), i + 2)))).as("bigram"))
     // persisted for bigramSurprisal's reason: the c2 -> c1 model
     // branch and the scoring join prune tf differently, so the
     // (doc, bigram) shuffle would execute once per branch
-    val tf = graft.Caching.persisted(
-      bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")))
-    val c2 = tf.groupBy("bigram").agg(sum(col("tf")).as("c2"))
-      .withColumn("w1", split(col("bigram"), " ").getItem(0))
-      .withColumn("w2", split(col("bigram"), " ").getItem(1))
-    val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-    val scored = tf.join(c2, "bigram").join(c1, "w1").join(uni, "w2")
+    val tf = graft.Caching.persisted(TextStages.termCounts(base,
+      Seq(col("doc_id")), TextStages.bigrams(col("tk")), "tf", "bigram"))
+    val scored = TextStages.bigramModel(tf).join(uni, "w2")
       .crossJoin(broadcast(total))
       .withColumn("surp", -log2(
         lit(lambda) *
           (col("c2").cast(DoubleType) / col("c1").cast(DoubleType)) +
         lit(1.0 - lambda) *
           (col("ctf").cast(DoubleType) / col("n_total").cast(DoubleType))))
-    scored.groupBy("doc_id").agg(
-      sum(col("tf")).cast("long").as("n_bigrams"),
-      // §6 quantizer on the weighted-mean quotient (Quantize scaladoc)
-      qdp(
-        sum((col("tf") * col("surp")).cast(DecimalType(28, 12))).cast(DoubleType)
-          / sum(col("tf")), 6).as("mean_surprisal"))
+    TextStages.meanSurprisal(scored, "n_bigrams")
   }
 
   /** Per-source distribution-drift audit — the feed monitor a corpus
@@ -543,40 +510,22 @@ object TextAnalysis {
     * round.
     *
     * Scale shape: ONE corpus pass to (source, bucket) counts
-    * (persisted — sources×buckets rows, tiny; the
-    * grid/sources branches would otherwise re-execute the corpus
-    * explode), densified against the constant grid per source, side
-    * totals and the global per-bucket counts as window sums over the
-    * dense frame. Output per source: n_tokens, kl_bits. */
+    * ([[TextStages.gridCounts]]: persisted, sources×buckets rows),
+    * densified against the constant grid per source, the corpus total
+    * a one-row scalar subquery; side totals and the per-bucket counts
+    * are window sums partitioned by source and by bucket. Output per
+    * source: n_tokens, kl_bits. */
   def sourceDrift(df: DataFrame, text: Column, source: Column,
                   buckets: Int = graft.text.Dsir.DefaultBuckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = graft.Caching.persisted(
-      df.select(source.as("source"), explode(tokens(text)).as("token"))
-        .select(col("source"),
-          (graft.functions.Hashing.h32(col("token")) % buckets).as("bucket"))
-        .groupBy("source", "bucket").agg(count(lit(1)).as("c")))
-    val spark = df.sparkSession
-    val grid = counts.select("source").distinct()
-      .crossJoin(broadcast(spark.range(buckets).select(col("id").as("bucket"))))
-    val dense = grid.join(counts, Seq("source", "bucket"), "left")
-      .na.fill(0L, Seq("c"))
+    val dense = TextStages.gridCounts(df, Seq(source.as("source")), tokens(text), buckets)
       .withColumn("n_s", sum(col("c")).over(Window.partitionBy(col("source"))))
       .withColumn("c_all", sum(col("c")).over(Window.partitionBy(col("bucket"))))
-      .withColumn("n_all", sum(col("c")).over(Window.partitionBy()))
     val b = lit(buckets.toDouble)
-    val p = (col("c") + lit(1.0)) / (col("n_s") + b)
-    val q = (col("c_all") - col("c") + lit(1.0)) /
-      (col("n_all") - col("n_s") + b)
-    dense
-      .withColumn("term",
-        round(p * log2(p / q), 9).cast(DecimalType(38, 9)))
-      .groupBy("source")
-      .agg(max(col("n_s")).as("n_tokens"),
-        // final round IN DECIMAL SPACE, then cast (the r11 rule: a
-        // half-boundary double rounds engine-dependently; decimals
-        // round half-away-from-zero identically in Spark and DuckDB)
-        round(sum(col("term")), 6).cast(DoubleType).as("kl_bits"))
+    TextStages.klBits(dense, Seq("source"),
+      TextStages.addOne(col("c"), col("n_s"), b),
+      TextStages.addOne(col("c_all") - col("c"), col("n") - col("n_s"), b),
+      col("n_s"))
   }
 
   /** Dense hashed-unigram profile of one corpus on the fixed grid —
@@ -584,18 +533,11 @@ object TextAnalysis {
     * the total token mass: the frozen REFERENCE side of [[klDrift]]
     * (fit it once on the healthy corpus, persist/store it, compare
     * every new batch against it). `buckets` rows regardless of corpus
-    * size — the DSIR broadcastability property. */
+    * size — the DSIR broadcastability property: this IS one side of
+    * [[Dsir.model]]'s dense counts. */
   def unigramProfile(df: DataFrame, text: Column,
-                     buckets: Int = graft.text.Dsir.DefaultBuckets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = df.select(explode(tokens(text)).as("token"))
-      .select((graft.functions.Hashing.h32(col("token")) % buckets).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("c"))
-    df.sparkSession.range(buckets).select(col("id").as("bucket"))
-      .join(counts, Seq("bucket"), "left")
-      .na.fill(0L, Seq("c"))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy()))
-  }
+                     buckets: Int = graft.text.Dsir.DefaultBuckets): DataFrame =
+    TextStages.gridCounts(df, Nil, tokens(text), buckets)
 
   /** KL(docs ‖ reference) in bits over the shared hashed grid — the
     * one-number drift answer [[sourceDrift]] gives per source,
@@ -608,18 +550,15 @@ object TextAnalysis {
     * (n_tokens, kl_bits). */
   def klDrift(docs: DataFrame, text: Column, ref: DataFrame,
               buckets: Int = graft.text.Dsir.DefaultBuckets): DataFrame = {
-    val cur = unigramProfile(docs, text, buckets)
     val b = lit(buckets.toDouble)
-    val joined = cur.join(
-      ref.select(col("bucket"), col("c").as("c_ref"), col("n").as("n_ref")),
-      "bucket")
-    val p = (col("c") + lit(1.0)) / (col("n") + b)
-    val q = (col("c_ref") + lit(1.0)) / (col("n_ref") + b)
-    joined
-      .withColumn("term", round(p * log2(p / q), 9).cast(DecimalType(38, 9)))
-      .agg(max(col("n")).as("n_tokens"),
-        // decimal-space final round — same rule as sourceDrift
-        round(sum(col("term")), 6).cast(DoubleType).as("kl_bits"))
+    TextStages.klBits(
+      unigramProfile(docs, text, buckets).join(
+        ref.select(col("bucket"), col("c").as("c_ref"), col("n").as("n_ref")),
+        "bucket"),
+      Nil,
+      TextStages.addOne(col("c"), col("n"), b),
+      TextStages.addOne(col("c_ref"), col("n_ref"), b),
+      col("n"))
   }
 
   /** Per-document top TF-IDF term — the "most distinctive term" signal
@@ -643,8 +582,7 @@ object TextAnalysis {
   def tfIdfTopTerm(df: DataFrame, id: Column, text: Column): DataFrame = {
     val total = df.agg(count(lit(1)).as("n_corpus"))
     val tf = graft.Caching.persisted(
-      df.select(id.as("doc_id"), explode(tokens(text)).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
+      TextStages.termCounts(df, Seq(id.as("doc_id")), tokens(text), "tf"))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("dfn"))
     val scored = tf.join(dfreq, "token")
       .crossJoin(broadcast(total))
@@ -683,8 +621,7 @@ object TextAnalysis {
     * per-doc decimal aggregation. Docs with no tokens drop out. */
   def unigramSurprisal(df: DataFrame, id: Column, text: Column): DataFrame = {
     val tf = graft.Caching.persisted(
-      df.select(id.as("doc_id"), explode(tokens(text)).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
+      TextStages.termCounts(df, Seq(id.as("doc_id")), tokens(text), "tf"))
     val corpus = tf.groupBy("token").agg(sum(col("tf")).as("ctf"))
     val total = corpus.agg(sum(col("ctf")).as("n_total"))
     tf.join(corpus, "token")
@@ -717,15 +654,10 @@ object TextAnalysis {
     df.withColumn("dup_token_frac",
         frac(size(array_distinct(tokens(text))), n, 1))
       .withColumn("dup_2gram_frac",
-        frac(size(TextDedupShingles(text, 2)), n - 1, 2))
+        frac(size(TextStages.shingles(text, 2)), n - 1, 2))
       .withColumn("dup_3gram_frac",
-        frac(size(TextDedupShingles(text, 3)), n - 2, 3))
+        frac(size(TextStages.shingles(text, 3)), n - 2, 3))
   }
-
-  /** [[graft.dedup.TextDedup.shingles]] without the circular import. */
-  private def TextDedupShingles(text: Column, n: Int): Column =
-    ColumnBridge.column(graft.functions.WordShingles(
-      ColumnBridge.expression(text), n))
 
   /** Per-document token-distribution Shannon entropy (bits):
     * -Σ (n_t/N) log2(n_t/N) over each doc's distinct tokens — the
@@ -748,9 +680,7 @@ object TextAnalysis {
     *
     * Output: (all input columns kept) + token_entropy. */
   def tokenEntropy(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val counts = df.select(id.as("doc_id"), explode(tokens(text)).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("n_t"))
-    val entropy = counts
+    val entropy = TextStages.termCounts(df, Seq(id.as("doc_id")), tokens(text), "n_t")
       .withColumn("n_doc", sum(col("n_t")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))))
       .withColumn("p", col("n_t").cast(DoubleType) / col("n_doc"))
@@ -784,17 +714,21 @@ object TextAnalysis {
   def quantileBins(df: DataFrame, value: Column, nBins: Int): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
     val ps = (1 until nBins).map(_.toDouble / nBins).toArray
-    val v = graft.Caching.persisted(df.select(value.as("v")))
-    // §6 quantizer on the bin boundaries (they feed the bin verdicts)
-    val bounds = v.agg(
-      transform(percentile(col("v"), lit(ps)), b => qdp(b, 4)).as("bounds"))
-    v
-      .crossJoin(broadcast(bounds))
-      .withColumn("bin", size(filter(col("bounds"), b => col("v") > b)))
+    quantileBin(graft.Caching.persisted(df.select(value.as("v"))), col("v"), ps, "bin")
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"),
         min(col("v")).as("min_score"), max(col("v")).as("max_score"))
   }
+
+  /** `df` + `bin`: the count of `value`'s exact `ps` percentiles
+    * strictly below it (ties fall to the lower bin). The boundaries
+    * take the §6 quantizer at 4 dp (they feed the bin verdicts) and
+    * attach as a one-row broadcast. */
+  private def quantileBin(df: DataFrame, value: Column, ps: Array[Double],
+                          bin: String): DataFrame =
+    df.crossJoin(broadcast(df.agg(
+        transform(percentile(value, lit(ps)), b => qdp(b, 4)).as("bounds"))))
+      .withColumn(bin, size(filter(col("bounds"), b => value > b)))
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020 §4.3: score
     * every document under a reference LM, split the corpus into
@@ -819,13 +753,8 @@ object TextAnalysis {
     * columns/doc), not corpus-text-sized; the caller owns its lifetime
     * ([[graft.Caching]]). */
   def perplexityBuckets(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val s = graft.Caching.persisted(unigramSurprisal(df, id, text))
-    val bounds = s.agg(transform(
-      percentile(col("mean_surprisal"), lit(Array(1.0 / 3, 2.0 / 3))),
-      b => qdp(b, 4)).as("bounds"))
-    s.crossJoin(broadcast(bounds))
-      .withColumn("nb",
-        size(filter(col("bounds"), b => col("mean_surprisal") > b)))
+    quantileBin(graft.Caching.persisted(unigramSurprisal(df, id, text)),
+        col("mean_surprisal"), Array(1.0 / 3, 2.0 / 3), "nb")
       .withColumn("bucket",
         when(col("nb") === 0, "head")
           .when(col("nb") === 1, "middle").otherwise(lit("tail")))
@@ -943,15 +872,8 @@ object TextAnalysis {
         .reduce(_ + _)
     val mixed = size(filter(tokens(text), w => nScripts(w) >= 2))
       .cast("long").as("n_mixed_words")
-    val base = df.select((id.as("doc_id") +: counts) :+ mixed: _*)
-    val dom = names.map { nm =>
-      val geAll = names.filter(_ != nm)
-        .map(o => col(s"n_$nm") >= col(s"n_$o")).reduce(_ && _)
-      (nm, geAll && col(s"n_$nm") > 0)
-    }.foldRight(lit("none")) { case ((nm, c), els) =>
-      when(c, lit(nm)).otherwise(els)
-    }
-    base.withColumn("dominant_script", dom)
+    df.select((id.as("doc_id") +: counts) :+ mixed: _*)
+      .withColumn("dominant_script", argmaxName(names.map(nm => nm -> col(s"n_$nm")), "none"))
   }
 
   /** Charset/normalization FIXER — the apply leg of [[charsetAudit]]

@@ -201,6 +201,30 @@ class EntryPlanSpec extends SparkSpec {
     }
   }
 
+  test("the text-statistics plans have no unpartitioned Window, subqueries included") {
+    // corpus and label totals are one-row scalar subqueries: no frame
+    // of these plans funnels through a window with an empty partition
+    // spec (one reducer)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import graft.text.TextAnalysis
+    val docs = table("documents")
+    val direct: Seq[(String, DataFrame)] = Seq(
+      "unigramProfile" -> TextAnalysis.unigramProfile(docs, col("text")),
+      "klDrift" -> TextAnalysis.klDrift(docs, col("text"),
+        TextAnalysis.unigramProfile(docs, col("text"))))
+    // (x15, x15b and x18 plan no Window at all: the test above)
+    val keys = Seq("t31_source_drift", "t29_nb_model", "t29c_nb_model_mindf",
+      "t29b_nb_classify", "x15c_dsir_bigram")
+    for ((name, df) <- keys.map(k => k -> SparkEntry.queries(k)(spark, sfDir)) ++ direct) {
+      val plan = df.queryExecution.optimizedPlan
+      val global = plan.collectWithSubqueries {
+        case w: Window if w.partitionSpec.isEmpty => w
+      }
+      assert(global.isEmpty, s"$name plans an unpartitioned Window:\n$plan")
+    }
+  }
+
   test("map-only entries plan ZERO keyed shuffles (the stage-0 gate posture)") {
     // d20 (inline blocklist path), m10 (byte-surgery scrub), m11
     // (metadata audit): a crawl's first gates must run at scan speed —

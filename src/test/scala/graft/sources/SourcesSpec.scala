@@ -555,6 +555,52 @@ class BucketedStoreCarrySpec extends SparkSpec {
     } finally Store.drop(spark, name)
   }
 
+  test("two racing commits of one version: one wins, the loser throws, ptr is whole") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import scala.util.Try
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    val name = "bsrace"
+    Store.drop(spark, name)
+    val gate = new CountDownLatch(1)
+    CommitGate.latch = gate
+    try {
+      Store.commit(spark, name, Map("data" -> data, "plan" -> planDf(0)),
+        buckets = 4)
+      // each racer's data write blocks until the gate opens, so both
+      // read the ptr at v0 and race for v1
+      val held = udf { (k: Long) => CommitGate.latch.await(60, TimeUnit.SECONDS); k }
+      def racer(tag: Int) = Future(Try(Store.commit(spark, name,
+        Map("data" -> data.select(held(col("k")).as("k"), lit(s"w$tag").as("pay")),
+          "plan" -> planDf(tag)), buckets = 4)))
+      val racers = Seq(racer(1), racer(2))
+      // the loser fails at its claim, before any member write finishes
+      Try(Await.ready(Future.firstCompletedOf(racers), 30.seconds))
+      val early = racers.flatMap(_.value).map(_.get)
+      gate.countDown()
+      assert(early.size == 1 && early.head.isFailure,
+        s"exactly one racer must fail before the gate opens: $early")
+      assert(early.head.failed.get.isInstanceOf[IllegalStateException],
+        s"the loser must lose its claim: ${early.head}")
+      val results = racers.map(f => Await.result(f, 120.seconds))
+      assert(results.count(_.isSuccess) == 1, s"exactly one commit wins: $results")
+      assert(results.flatMap(_.toOption) == Seq(1))
+      // the ptr names the winner's complete version: every member from
+      // the one writer, none from the loser
+      val p = Store.pin(spark, name)
+      assert(p.version == 1)
+      val tag = p.table("plan").head().getInt(0)
+      assert(p.table("data").select("pay").distinct().collect()
+        .map(_.getString(0)).toSeq == Seq(s"w$tag"))
+      assert(p.table("data").count() == 64)
+      assert(!spark.catalog.tableExists(s"${name}_claim_1"), "claims end with the commit")
+      assert(Store.commit(spark, name, Map("plan" -> planDf(3)), buckets = 4,
+        carry = Seq(Carry("data", 1))) == 2)
+    } finally { gate.countDown(); Store.drop(spark, name) }
+  }
+
   test("a failed member write publishes nothing; the next commit succeeds") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val name = "bsfail"
@@ -576,4 +622,10 @@ class BucketedStoreCarrySpec extends SparkSpec {
       assert(p.table("plan").head().getInt(0) == 1)
     } finally Store.drop(spark, name)
   }
+}
+
+/** The gate [[BucketedStoreCarrySpec]]'s racing commits block on; read
+  * from a UDF, so it lives in an object the executor threads share. */
+object CommitGate {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
 }

@@ -46,6 +46,9 @@ class NbModelStreamSpec extends SparkSpec {
     val batch = NaiveBayes.model(union, col("text"), col("label"))
     assert(sortedRows(streamed) === sortedRows(batch),
       "folded registers must reproduce the batch model bit for bit")
+    assert(sortedRows(NbModelStream.readCounts(spark, tokDir).get) ===
+      sortedRows(batch.filter(col("c") > 0).select("label", "token", "c")),
+      "folded register counts must be the batch model's counts")
     assert(sortedRows(NbModelStream.readPriors(spark, docDir).get) ===
       sortedRows(NaiveBayes.priors(union, col("label"))))
   }
