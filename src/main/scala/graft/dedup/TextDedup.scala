@@ -468,8 +468,8 @@ object TextDedup {
     * bsig) row per doc per band. This is the artifact a nightly or
     * streaming ingest joins against (see [[minHashLshPairsBetween]] and
     * [[graft.streaming.CurationStream.nearDupFlagStream]]); the
-    * persisted form is [[writeDedupIndex]], from which this derives
-    * map-only. */
+    * persisted forms are [[writeDedupIndex]]'s signatures and
+    * [[writeDedupIndexBucketed]]'s `bands` member. */
   def bandIndex(docs: DataFrame, id: Column, text: Column): DataFrame =
     banded(sigged(docs, id, text))
 
@@ -508,13 +508,6 @@ object TextDedup {
                      dir: String): DataFrame =
     graft.sources.SnapshotStore.read(spark, dir).getOrElse(
       throw new IllegalStateException(s"no dedup index committed at $dir"))
-
-  /** The persisted index in [[bandIndex]] shape — what the streaming
-    * probe ([[graft.streaming.CurationStream.nearDupFlagStream]])
-    * takes as its static side. Map-only over the index parquet. */
-  def readBandIndex(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DataFrame =
-    banded(readDedupIndex(spark, dir))
 
   /** [[minHashLshPairsBetween]] against the PERSISTED index: the
     * incoming batch is shingled and signed once; the corpus side is

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ann.AnnIndex
-import graft.sources.SnapshotStore
 
 /** Streaming similarity search: a stream of query vectors (vec_id,
   * embedding) probes a persisted [[AnnIndex]] — the online leg of the
@@ -14,8 +13,8 @@ import graft.sources.SnapshotStore
   * Top-k is inherently an aggregation, which on a raw stream would be
   * a stateful op needing a watermark the queries don't have (each
   * micro-batch is a complete, independent question). So the probe runs
-  * inside `foreachBatch`, where the micro-batch is a plain DataFrame
-  * and [[AnnIndex.topK]] applies verbatim — same bucketed index scans,
+  * in the [[MicroBatchSink]] body, where the micro-batch is a plain
+  * DataFrame and [[AnnIndex.topK]] applies verbatim — same bucketed index scans,
   * broadcast quantizers, bounded-heap shortlist, exact re-rank. State
   * posture: the streaming engine holds NO state at all (the only
   * stateful thing is the checkpoint's offset log); index state lives
@@ -23,7 +22,7 @@ import graft.sources.SnapshotStore
   * and an index [[AnnIndex.update]] between micro-batches is picked up
   * by the next batch through the atomic view pointer.
   *
-  * Results MERGE into a versioned [[SnapshotStore]] keyed on
+  * Results MERGE into a versioned [[graft.sources.SnapshotStore]] keyed on
   * (query_id, rank): re-delivered micro-batches (restart replay)
   * upsert instead of duplicating — exactly-once results per query, the
   * same sink contract as [[CurationStream.run]].
@@ -33,19 +32,8 @@ object AnnStream {
   def run(queryStream: DataFrame, indexName: String,
           targetDir: String, checkpointDir: String, k: Int,
           nProbe: Int = 4, shortlist: Int = 100): StreamingQuery =
-    queryStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persisted: the emptiness guard and the MERGE are two actions,
-        // and without the persist each would run the full probe again
-        val res = AnnIndex.topK(batch.sparkSession, indexName, batch, k,
-          nProbe, shortlist).persist()
-        try {
-          if (!res.isEmpty) {
-            SnapshotStore.mergeInto(res, targetDir, Seq("query_id", "rank")): Unit
-          }
-        } finally { res.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(queryStream, checkpointDir) { (b, _) =>
+      MicroBatchSink.mergeNonEmpty(AnnIndex.topK(b.sparkSession, indexName, b,
+        k, nProbe, shortlist), targetDir, Seq("query_id", "rank"))
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.SnapshotStore
 import graft.text.NaiveBayes
@@ -34,24 +34,20 @@ import graft.text.NaiveBayes
   *
   * The caller should `persist()` the model and priors frames before
   * starting (they are re-read every micro-batch; un-persisted they
-  * re-execute their training subtree each batch — the foreachBatch
-  * hazard, measured in StreamBench for CurationStream's dedup).
+  * re-execute their training subtree each batch).
   */
 object ClassifyStream {
 
   /** Pure per-batch routing logic, factored for spec replay: score
     * `batch` against (m, pri), left-join back so NO doc is dropped,
     * and attach `route`. A doc_id delivered twice within one
-    * micro-batch (source redelivery) is collapsed to ONE row first —
-    * otherwise its tokens explode twice and double the per-(doc,
-    * label) token sums inside [[NaiveBayes.score]] (wrong score and
-    * margin while the priors count once), and the MERGE keyed on
-    * doc_id would commit duplicate rows. max(text) makes the survivor
-    * deterministic (redeliveries are normally byte-identical; ties
-    * need a total order either way). */
+    * micro-batch is collapsed to ONE row first
+    * ([[MicroBatchSink.perDoc]]) — otherwise its tokens double the
+    * per-(doc, label) token sums inside [[NaiveBayes.score]] (wrong
+    * score and margin while the priors count once). */
   def routeBatch(batch: DataFrame, m: DataFrame, pri: DataFrame,
                  minMargin: Double): DataFrame = {
-    val uniq = batch.groupBy("doc_id").agg(max("text").as("text"))
+    val uniq = MicroBatchSink.perDoc(batch)
     uniq
       .join(NaiveBayes.score(uniq, col("doc_id"), col("text"), m, pri),
         Seq("doc_id"), "left")
@@ -66,17 +62,9 @@ object ClassifyStream {
           m: DataFrame, pri: DataFrame,
           targetDir: String, checkpointDir: String,
           minMargin: Double = 0.0): StreamingQuery =
-    stream.select(id.as("doc_id"), text.as("text"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch feeds BOTH the scorer and the join-back: persist
-        // once so the micro-batch plan doesn't execute twice
-        val b = batch.persist()
-        try SnapshotStore.mergeInto(
-          routeBatch(b, m, pri, minMargin), targetDir, Seq("doc_id")): Unit
-        finally { b.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(stream.select(id.as("doc_id"), text.as("text")),
+        checkpointDir) { (b, _) =>
+      SnapshotStore.mergeInto(routeBatch(b, m, pri, minMargin), targetDir,
+        Seq("doc_id")): Unit
+    }
 }

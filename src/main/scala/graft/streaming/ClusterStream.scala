@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.{DupClusters, TextDedup}
 import graft.sources.SnapshotStore
@@ -60,49 +60,38 @@ object ClusterStream {
   def run(stream: DataFrame, indexDir: String, clustersDir: String,
           checkpointDir: String, minJaccard: Double = 0.1,
           id: Column = col("doc_id"), text: Column = col("text")): StreamingQuery =
-    stream.select(id.as("doc_id"), text.as("text"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persist: the batch feeds pair generation, the index MERGE,
-        // and (via endpoints) the cluster merge — without it each
-        // action re-executes the upstream micro-batch plan
-        val b = batch.persist()
-        try {
-          val spark = b.sparkSession
-          import spark.implicits._
-          val pairCols: DataFrame => DataFrame = _.select("doc_a", "doc_b")
-          val cross =
-            if (SnapshotStore.read(spark, indexDir).isDefined)
-              pairCols(TextDedup.minHashLshPairsAgainstIndex(spark, indexDir,
-                b, col("doc_id"), col("text"), minJaccard))
-            else Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-          val within = pairCols(TextDedup.minHashLshPairs(b, col("doc_id"),
-            col("text"), minJaccard))
-          // persist the generated pairs too, not just the batch: the
-          // pair lineage (signatures + index probe + verify) feeds the
-          // contracted graph's eager checkpoint AND the delta write's
-          // new-doc leg — unpersisted it executes twice per batch
-          val pairs = cross.unionByName(within).persist()
-          try {
-            val stored = SnapshotStore.read(spark, clustersDir)
-              .map(_.select("doc_id", "cluster_id"))
-              .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"))
-            val merged = DupClusters.mergeComponents(stored, pairs)
-            // ship only the delta: rows whose assignment changed or is new
-            val delta = merged
-              .join(stored.withColumnRenamed("cluster_id", "__prev"),
-                Seq("doc_id"), "left")
-              .filter(col("__prev").isNull || col("__prev") =!= col("cluster_id"))
-              .select("doc_id", "cluster_id")
-            SnapshotStore.mergeInto(delta, clustersDir, Seq("doc_id")): Unit
-            // grow the index last: a batch must not pair against itself
-            // through the index (its within-pairs are generated directly)
-            TextDedup.updateDedupIndex(b, col("doc_id"), col("text"),
-              indexDir): Unit
-          } finally { pairs.unpersist(): Unit }
-        } finally { b.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(stream.select(id.as("doc_id"), text.as("text")),
+        checkpointDir) { (b, _) =>
+      val spark = b.sparkSession
+      import spark.implicits._
+      val pairCols: DataFrame => DataFrame = _.select("doc_a", "doc_b")
+      val cross =
+        if (SnapshotStore.read(spark, indexDir).isDefined)
+          pairCols(TextDedup.minHashLshPairsAgainstIndex(spark, indexDir,
+            b, col("doc_id"), col("text"), minJaccard))
+        else Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+      val within = pairCols(TextDedup.minHashLshPairs(b, col("doc_id"),
+        col("text"), minJaccard))
+      // persist the generated pairs: the pair lineage (signatures +
+      // index probe + verify) feeds the contracted graph's eager
+      // checkpoint AND the delta write's new-doc leg
+      val pairs = cross.unionByName(within).persist()
+      try {
+        val stored = SnapshotStore.read(spark, clustersDir)
+          .map(_.select("doc_id", "cluster_id"))
+          .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"))
+        val merged = DupClusters.mergeComponents(stored, pairs)
+        // ship only the delta: rows whose assignment changed or is new
+        val delta = merged
+          .join(stored.withColumnRenamed("cluster_id", "__prev"),
+            Seq("doc_id"), "left")
+          .filter(col("__prev").isNull || col("__prev") =!= col("cluster_id"))
+          .select("doc_id", "cluster_id")
+        SnapshotStore.mergeInto(delta, clustersDir, Seq("doc_id")): Unit
+        // grow the index last: a batch must not pair against itself
+        // through the index (its within-pairs are generated directly)
+        TextDedup.updateDedupIndex(b, col("doc_id"), col("text"),
+          indexDir): Unit
+      } finally { pairs.unpersist(): Unit }
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.TextDedup
 import graft.sources.SnapshotStore
@@ -11,9 +11,8 @@ import graft.sources.SnapshotStore
   * near-dup candidates of an EXISTING corpus — the streaming leg of
   * the incremental-batch `d8` shape ([[TextDedup.minHashLshPairsBetween]]).
   *
-  * The corpus side is a static [[TextDedup.bandIndex]] frame —
-  * typically [[TextDedup.readBandIndex]] over the persisted dedup
-  * index, so no corpus text is ever rescanned. The stream side is
+  * The corpus side is a static [[TextDedup.bandIndex]] frame of the
+  * corpus, built once and persisted by the caller. The stream side is
   * map-only per micro-batch:
   * shingle → signature → explode bands; the stream-static inner join
   * is stateless, so no watermark is needed and state never grows —
@@ -52,8 +51,8 @@ object CurationStream {
       stream.select(id.as("doc_id"), text.as("text"), ts.as("ts")),
       minQuality, lang)
     // the band-hit count is an aggregation, which would be a SECOND
-    // stateful op on the stream; inside foreachBatch the micro-batch
-    // is a plain frame, so the probe + count run stateless per batch
+    // stateful op on the stream; in the sink body the micro-batch is a
+    // plain frame, so the probe + count run stateless per batch
     dedupAndMerge(kept, watermark, targetDir, checkpointDir) { b =>
       b.join(nearDupFlagStream(b, col("doc_id"), col("text"), corpusIndex)
           .groupBy("doc_id").agg(count(lit(1)).as("n_band_hits")),
@@ -64,34 +63,20 @@ object CurationStream {
 
   /** The curation streams' shared tail: watermark-bounded exact content
     * dedup of `kept` (doc_id, text, ts) — the one stateful op — then a
-    * foreachBatch sink that MERGEs `route(batch)` into the versioned
+    * [[MicroBatchSink]] that MERGEs `route(batch)` into the versioned
     * [[SnapshotStore]] at `targetDir` keyed on doc_id. */
   private[streaming] def dedupAndMerge(kept: DataFrame, watermark: String,
                                        targetDir: String,
                                        checkpointDir: String)
                                       (route: DataFrame => DataFrame)
       : StreamingQuery =
-    kept
-      .withColumn("__h", md5(col("text")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("__h")
-      .drop("__h")
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // The batch MUST be persisted before `route` reads it from
-        // several branches: the foreachBatch frame wraps the micro-batch
-        // PLAN (including the stateful dedup), so referencing it from two
-        // join branches re-executes that stateful subtree twice per
-        // batch — double state-store work and two commits of the same
-        // state version (StreamBench measured the dedup operator's state
-        // metrics doubled before this persist).
-        val b = batch.persist()
-        try SnapshotStore.mergeInto(route(b), targetDir, Seq("doc_id")): Unit
-        finally { b.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(kept
+        .withColumn("__h", md5(col("text")))
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark("__h")
+        .drop("__h"), checkpointDir) { (b, _) =>
+      SnapshotStore.mergeInto(route(b), targetDir, Seq("doc_id")): Unit
+    }
 
   /** Contamination hits of `stream` docs against a static eval corpus:
     * (doc_id, s) per shared word n-gram — the streaming leg of

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.SnapshotStore
 import graft.text.TextAnalysis
 
 /** Streaming ingest-drift monitor — [[TextAnalysis.klDrift]] (t31's
@@ -20,13 +19,13 @@ import graft.text.TextAnalysis
   * frame; per batch the work is one tokenize+count pass over the
   * batch, a grid-sized join, and a 4096-term sum. STATELESS (no
   * watermark, no state store). Sink: MERGE keyed on batch_id — a
-  * replayed batch (at-least-once foreachBatch) overwrites its own
-  * row, so the series stays exactly-once (RollupStream's
+  * replayed batch (micro-batch delivery is at-least-once) overwrites
+  * its own row, so the series stays exactly-once (RollupStream's
   * batch-keyed-register move, here for an audit row).
   *
   * The caller should `persist()` the reference frame before starting
   * (re-read every micro-batch; un-persisted it re-executes its fit
-  * subtree each batch — the foreachBatch hazard).
+  * subtree each batch).
   */
 object DriftStream {
 
@@ -35,26 +34,15 @@ object DriftStream {
   def run(stream: DataFrame, text: Column, ref: DataFrame,
           targetDir: String, checkpointDir: String,
           buckets: Int = graft.text.Dsir.DefaultBuckets): StreamingQuery =
-    stream.select(text.as("text"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // the batch feeds the profile's counts branch and the grid
-        // join: persist once per batch
-        val b = batch.persist()
-        // a zero-token batch carries no evidence — add-one smoothing
-        // would read a feed lull as maximal drift (uniform vs ref), so
-        // the series records only batches with tokens; persisted
-        // because the guard and the merge both read the one-row frame
-        val drift = TextAnalysis.klDrift(b, col("text"), ref, buckets)
+    MicroBatchSink.run(stream.select(text.as("text")),
+        checkpointDir) { (b, id) =>
+      // a zero-token batch carries no evidence — add-one smoothing
+      // would read a feed lull as maximal drift (uniform vs ref), so
+      // the series records only batches with tokens
+      MicroBatchSink.mergeNonEmpty(
+        TextAnalysis.klDrift(b, col("text"), ref, buckets)
           .filter(col("n_tokens") > 0L)
-          .withColumn("batch_id", lit(id))
-          .persist()
-        try {
-          if (!drift.isEmpty)
-            SnapshotStore.mergeInto(drift, targetDir, Seq("batch_id")): Unit
-        } finally { drift.unpersist(); b.unpersist(): Unit }
-      }
-      .start()
+          .withColumn("batch_id", lit(id)),
+        targetDir, Seq("batch_id"))
+    }
 }

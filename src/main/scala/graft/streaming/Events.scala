@@ -339,13 +339,9 @@ object Events {
     * atomically-versioned snapshots). */
   def mergeUpsertSink(events: DataFrame, targetDir: String,
                       checkpointDir: String, keys: Seq[String]): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SnapshotStore.mergeInto(batch, targetDir, keys): Unit
-      }
-      .start()
+    MicroBatchSink.run(events, checkpointDir) { (b, _) =>
+      SnapshotStore.mergeInto(b, targetDir, keys): Unit
+    }
 
   // --- streaming sessionization (custom state) ------------------------
 

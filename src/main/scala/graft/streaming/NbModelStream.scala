@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.SnapshotStore
 import graft.text.{NaiveBayes, TextAnalysis, TextStages}
@@ -20,7 +20,7 @@ import graft.text.{NaiveBayes, TextAnalysis, TextStages}
   * maintained exactly like [[RollupStream]]'s: per-micro-batch
   * partial counts MERGEd keyed (batch_id, group) — a replayed batch
   * overwrites its own rows instead of re-adding them, which is what
-  * makes additive state exactly-once over at-least-once foreachBatch
+  * makes additive state exactly-once over at-least-once micro-batch
   * delivery. [[readModel]]/[[readPriors]] fold the registers and
   * hand the result to [[graft.text.NaiveBayes.modelFromCounts]] /
   * `priorsFromCounts` — bit-identical to a batch fit on the union of
@@ -44,29 +44,19 @@ object NbModelStream {
   def run(stream: DataFrame, text: Column, label: Column,
           tokDir: String, docDir: String,
           checkpointDir: String): StreamingQuery =
-    stream.select(label.cast("string").as("label"), text.as("__text"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // guard on the raw batch (limit-1 scan); the batch feeds TWO
-        // register writes — persist so the source plan runs once
-        if (!batch.isEmpty) {
-          val b = batch.persist()
-          try {
-            SnapshotStore.mergeInto(
-              TextStages.termCounts(b, Seq(col("label")),
-                  TextAnalysis.tokens(col("__text")), "c")
-                .withColumn("batch_id", lit(id)),
-              tokDir, Seq("batch_id", "label", "token"))
-            SnapshotStore.mergeInto(
-              b.groupBy("label").agg(count(lit(1)).as("n_docs"))
-                .withColumn("batch_id", lit(id)),
-              docDir, Seq("batch_id", "label")): Unit
-          } finally { b.unpersist(): Unit }
-        }
-      }
-      .start()
+    MicroBatchSink.run(
+        stream.select(label.cast("string").as("label"), text.as("__text")),
+        checkpointDir) { (b, id) =>
+      SnapshotStore.mergeInto(
+        TextStages.termCounts(b, Seq(col("label")),
+            TextAnalysis.tokens(col("__text")), "c")
+          .withColumn("batch_id", lit(id)),
+        tokDir, Seq("batch_id", "label", "token"))
+      SnapshotStore.mergeInto(
+        b.groupBy("label").agg(count(lit(1)).as("n_docs"))
+          .withColumn("batch_id", lit(id)),
+        docDir, Seq("batch_id", "label")): Unit
+    }
 
   /** Fold the token registers to (label, token, c). None before the
     * first batch. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.IncrementalAgg
 import graft.sources.SnapshotStore
@@ -11,7 +11,7 @@ import graft.sources.SnapshotStore
   * [[IncrementalAgg]]: a fact stream keeps a gold aggregate current
   * without ever recomputing from history.
   *
-  * foreachBatch delivery is at-least-once, and additive state is NOT
+  * Micro-batch delivery is at-least-once, and additive state is NOT
   * replay-safe (folding the same micro-batch twice double-counts). So
   * each micro-batch MERGEs its partial registers keyed
   * (batch_id, group) — a replayed batch overwrites its own rows
@@ -29,20 +29,10 @@ object RollupStream {
     * partial registers at `stateDir`. */
   def run(stream: DataFrame, stateDir: String, checkpointDir: String,
           groupCols: Seq[String], sumCols: Seq[String]): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // guard on the RAW batch (a limit-1 scan, the AnnStream sink's
-        // pattern) — guarding on the partial would run the full
-        // aggregation twice per micro-batch
-        if (!batch.isEmpty) {
-          val p = IncrementalAgg.partial(batch, groupCols, sumCols)
-            .withColumn("batch_id", lit(id))
-          SnapshotStore.mergeInto(p, stateDir, "batch_id" +: groupCols): Unit
-        }
-      }
-      .start()
+    MicroBatchSink.run(stream, checkpointDir) { (b, id) =>
+      SnapshotStore.mergeInto(IncrementalAgg.partial(b, groupCols, sumCols)
+        .withColumn("batch_id", lit(id)), stateDir, "batch_id" +: groupCols): Unit
+    }
 
   /** The current rollup: per-batch partials folded to one row per
     * group. None before the first batch. */
@@ -54,7 +44,7 @@ object RollupStream {
   /** Fold the no-longer-replayable partials into one base register row
     * per group (batch_id = -1) and commit — bounds the state at
     * ~|groups| rows no matter how many micro-batches have landed.
-    * Replay safety: foreachBatch commits a batch to the checkpoint
+    * Replay safety: the sink commits a batch to the checkpoint
     * AFTER the merge returns, so on restart only the newest batch can
     * be redelivered — compaction therefore folds every batch BELOW the
     * newest and leaves the newest batch's rows keyed, where a replay

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Scd2
 import graft.sources.SnapshotStore
@@ -12,7 +12,7 @@ import graft.sources.SnapshotStore
   * versioned history current, one [[Scd2.applyChanges]] per
   * micro-batch into a [[SnapshotStore]].
   *
-  * Replay safety: foreachBatch is at-least-once and `applyChanges` is
+  * Replay safety: delivery is at-least-once and `applyChanges` is
   * NOT naturally idempotent (replaying a batch whose last value differs
   * from its first would re-open old versions). Each batch is therefore
   * pre-filtered to updates STRICTLY NEWER than the key's open version
@@ -55,12 +55,9 @@ object Scd2Stream {
   def run(changes: DataFrame, stateDir: String, checkpointDir: String,
           keys: Seq[String], tracked: Seq[String],
           tsCol: String, tieCols: Seq[String] = Nil): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, stateDir, keys, tracked, tsCol, tieCols): Unit
-      }
-      .start()
+    MicroBatchSink.run(changes, checkpointDir) { (b, _) =>
+      applyBatch(b, stateDir, keys, tracked, tsCol, tieCols): Unit
+    }
 
   /** The current SCD2 table. None before the first batch. */
   def read(spark: SparkSession, stateDir: String): Option[DataFrame] =
@@ -97,23 +94,13 @@ object Scd2Stream {
   def enrich(facts: DataFrame, dimDir: String, targetDir: String,
              checkpointDir: String, keys: Seq[String], tracked: Seq[String],
              factTs: String, factKeys: Seq[String]): StreamingQuery =
-    facts.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dim = SnapshotStore.read(batch.sparkSession, dimDir)
-          .getOrElse(throw new IllegalStateException(
-            s"scd2 enrich: no committed dimension version at $dimDir yet " +
-              "— failing the batch so it retries after the maintenance " +
-              "stream's first commit (offsets stay uncheckpointed)"))
-        // persisted: the emptiness guard and the MERGE are two actions,
-        // and without the persist each would run the as-of join again
-        val res = Scd2.asOfJoin(batch, factTs, dim, keys, tracked).persist()
-        try {
-          if (!res.isEmpty) {
-            SnapshotStore.mergeInto(res, targetDir, factKeys): Unit
-          }
-        } finally { res.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(facts, checkpointDir) { (b, _) =>
+      val dim = SnapshotStore.read(b.sparkSession, dimDir)
+        .getOrElse(throw new IllegalStateException(
+          s"scd2 enrich: no committed dimension version at $dimDir yet " +
+            "— failing the batch so it retries after the maintenance " +
+            "stream's first commit (offsets stay uncheckpointed)"))
+      MicroBatchSink.mergeNonEmpty(
+        Scd2.asOfJoin(b, factTs, dim, keys, tracked), targetDir, factKeys)
+    }
 }

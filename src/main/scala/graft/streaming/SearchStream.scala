@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.SnapshotStore
 import graft.text.Search
@@ -10,7 +10,7 @@ import graft.text.Search
 /** Streaming keyword search: a stream of queries (query_id,
   * terms array<string>) probes a persisted BM25 inverted index — the
   * lexical twin of [[AnnStream]], sharing its architecture verbatim:
-  * the probe runs inside `foreachBatch` (each micro-batch is a
+  * the probe runs in the [[MicroBatchSink]] body (each micro-batch is a
   * complete, independent question; no watermark/state needed), the
   * streaming engine holds NO state beyond the checkpoint's offset log,
   * index state lives in the metastore tables behind the atomic ptr
@@ -30,26 +30,12 @@ object SearchStream {
   def run(queryStream: DataFrame, indexName: String,
           targetDir: String, checkpointDir: String, k: Int,
           k1: Double = 1.2, b: Double = 0.75): StreamingQuery =
-    queryStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persisted: the batch feeds three consumers (the emptiness
-        // guard, the term explode, and replaceGroups' key source) and
-        // each action on an un-persisted foreachBatch frame re-scans
-        // the micro-batch source
-        val b0 = batch.persist()
-        try {
-          val qids = b0.select(col("query_id")).distinct()
-          if (!qids.isEmpty) {
-            val qterms = b0.select(col("query_id"),
-              explode(array_distinct(col("terms"))).as("token"))
-            val res = Search.probeIndexTerms(b0.sparkSession, indexName,
-              qterms, k, k1, b)
-            SnapshotStore.replaceGroups(res, targetDir, Seq("query_id"),
-              keySource = Some(qids)): Unit
-          }
-        } finally { b0.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(queryStream, checkpointDir) { (batch, _) =>
+      val qterms = batch.select(col("query_id"),
+        explode(array_distinct(col("terms"))).as("token"))
+      val res = Search.probeIndexTerms(batch.sparkSession, indexName,
+        qterms, k, k1, b)
+      SnapshotStore.replaceGroups(res, targetDir, Seq("query_id"),
+        keySource = Some(batch.select(col("query_id")).distinct())): Unit
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.SnapshotStore
 import graft.text.Dsir
@@ -38,23 +38,21 @@ import graft.text.Dsir
   *
   * The caller should `persist()` the model frame before starting
   * (it is re-read every micro-batch; un-persisted it re-executes its
-  * fit subtree each batch — the foreachBatch hazard, measured in
-  * StreamBench for CurationStream's dedup).
+  * fit subtree each batch).
   */
 object SelectStream {
 
   /** Pure per-batch routing logic, factored for spec replay: score
     * `batch` against the frozen model `m(bucket, lr)`, left-join back
     * so NO doc is dropped, and attach `route`. A doc_id delivered
-    * twice within one micro-batch is collapsed to ONE deterministic
-    * max(text) row first — duplicated rows would double the doc's
-    * feature stream (doubling `w_dec` → a wrong weight crossing the
-    * threshold) and commit duplicate doc_id rows through the MERGE
-    * (the [[ClassifyStream.routeBatch]] contract). */
+    * twice within one micro-batch is collapsed to ONE row first
+    * ([[MicroBatchSink.perDoc]]) — duplicated rows would double the
+    * doc's feature stream (doubling `w_dec` → a wrong weight crossing
+    * the threshold). */
   def routeBatch(batch: DataFrame, m: DataFrame, minWeight: Double,
                  buckets: Int = Dsir.DefaultBuckets,
                  ngrams: Int = 1): DataFrame = {
-    val uniq = batch.groupBy("doc_id").agg(max("text").as("text"))
+    val uniq = MicroBatchSink.perDoc(batch)
     uniq
       .join(Dsir.score(uniq, col("doc_id"), col("text"), m, buckets, ngrams),
         Seq("doc_id"), "left")
@@ -70,18 +68,9 @@ object SelectStream {
           targetDir: String, checkpointDir: String, minWeight: Double,
           buckets: Int = Dsir.DefaultBuckets,
           ngrams: Int = 1): StreamingQuery =
-    stream.select(id.as("doc_id"), text.as("text"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch feeds BOTH the scorer and the join-back: persist
-        // once so the micro-batch plan doesn't execute twice
-        val b = batch.persist()
-        try SnapshotStore.mergeInto(
-          routeBatch(b, m, minWeight, buckets, ngrams),
-          targetDir, Seq("doc_id")): Unit
-        finally { b.unpersist(): Unit }
-      }
-      .start()
+    MicroBatchSink.run(stream.select(id.as("doc_id"), text.as("text")),
+        checkpointDir) { (b, _) =>
+      SnapshotStore.mergeInto(routeBatch(b, m, minWeight, buckets, ngrams),
+        targetDir, Seq("doc_id")): Unit
+    }
 }

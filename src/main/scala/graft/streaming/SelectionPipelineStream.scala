@@ -51,10 +51,9 @@ import graft.text.{Dsir, NaiveBayes}
 object SelectionPipelineStream {
 
   /** Pure per-batch routing, factored for spec replay. `batch` carries
-    * (doc_id, text); in-batch doc_id redeliveries collapse to one
-    * deterministic max(text) row first (the [[ClassifyStream]]
-    * contract — a doubled doc would double its DSIR feature stream and
-    * commit duplicate MERGE keys). */
+    * (doc_id, text); in-batch doc_id redeliveries collapse to one row
+    * first ([[MicroBatchSink.perDoc]] — a doubled doc would double its
+    * DSIR feature stream). */
   def routeBatch(batch: DataFrame, corpusIndex: DataFrame,
                  evalCorpus: DataFrame, evalText: Column,
                  nbModel: DataFrame, nbPriors: DataFrame,
@@ -62,7 +61,7 @@ object SelectionPipelineStream {
                  keepLabel: String, minMargin: Double, minWeight: Double,
                  n: Int = 5, buckets: Int = Dsir.DefaultBuckets,
                  ngrams: Int = 1): DataFrame = {
-    val uniq = batch.groupBy("doc_id").agg(max("text").as("text"))
+    val uniq = MicroBatchSink.perDoc(batch)
     val band = CurationStream.nearDupFlagStream(uniq, col("doc_id"),
         col("text"), corpusIndex)
       .groupBy("doc_id").agg(count(lit(1)).as("n_band_hits"))

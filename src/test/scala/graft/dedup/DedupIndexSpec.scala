@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.SnapshotStore
 
 /** The persisted dedup index: the nightly-ingest artifact d8 joins
   * against. The contract under test: (1) probing the index equals
@@ -95,6 +94,8 @@ class DedupIndexSpec extends SparkSpec {
         case _ => p.children.exists(feedsDirectly)
       }
       val plan = probe.queryExecution.executedPlan
+      assert(!plan.toString.contains("documents.parquet"),
+        s"corpus text rescanned — the index should be the only parquet source:\n$plan")
       assert(plan.collect {
         case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f
       }.size >= 2, "expected bands + docs bucketed scans in the plan")
@@ -333,28 +334,5 @@ class DedupIndexSpec extends SparkSpec {
       TextDedup.dropDedupIndexBucketed(spark, "daba")
       TextDedup.dropDedupIndexBucketed(spark, "dabf")
     }
-  }
-
-  test("readBandIndex feeds the streaming probe shape") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-index").toString
-    val corpus = table("documents")
-    TextDedup.writeDedupIndex(corpus, col("doc_id"), col("text"), dir)
-    val idx = TextDedup.readBandIndex(spark, dir)
-    assert(idx.columns.toSeq == Seq("doc_id", "band", "bsig"))
-    // same rows as the in-memory band index
-    val live = TextDedup.bandIndex(corpus, col("doc_id"), col("text"))
-    assert(idx.count() == live.count())
-    assert(idx.except(live).isEmpty && live.except(idx).isEmpty)
-    // and it plugs into the streaming probe's static side
-    val copied = corpus.filter(col("doc_id") === 7L)
-      .select("text").collect()(0).getString(0)
-    val hits = graft.streaming.CurationStream.nearDupFlagStream(
-        Seq((9001L, copied)).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), idx)
-      .select("corpus_doc_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(hits.contains(7L))
-    SnapshotStore.read(spark, dir).foreach(df => assert(df.count() > 0))
   }
 }

@@ -133,6 +133,33 @@ class StreamingSpec extends SparkSpec {
         "for 2 distinct survivors — the stateful subtree ran more than once")
   }
 
+  test("streaming curation: a data-free micro-batch commits no store version") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val corpusIndex = graft.dedup.TextDedup
+      .bandIndex(table("documents"), col("doc_id"), col("text")).cache()
+    val dir = java.nio.file.Files.createTempDirectory("graft-cur3-snap").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cur3-ckpt").toString
+    val good = ("the cat sat on the mat and it is a fine day " * 4).trim
+    val input = MemoryStream[(Long, String, Timestamp)]
+    val q = CurationStream.run(
+      input.toDF().toDF("doc_id", "text", "ts"), col("doc_id"), col("text"),
+      corpusIndex, dir, ckpt, minQuality = 0.5, lang = Some("en"))
+    // three data batches, each moving the event-time watermark: the
+    // engine follows each with a data-free batch that evicts dedup state
+    val tails = Seq("again", "brand new", "once more")
+    try tails.zipWithIndex.foreach { case (w, i) =>
+      input.addData((9101L + i, s"$good $w", ts(10 * i + 1)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.exists(_.numInputRows == 0),
+      "no data-free micro-batch ran — the check below would be vacuous")
+    assert(graft.sources.SnapshotStore.currentVersion(dir).contains(tails.size - 1),
+      s"${tails.size} data batches committed versions 0 to " +
+        s"${graft.sources.SnapshotStore.currentVersion(dir)}")
+    assert(graft.sources.SnapshotStore.read(spark, dir).get.count() == tails.size)
+  }
+
   test("rollup stream: batch-keyed partials fold to the full recompute; replay and compact are safe") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
